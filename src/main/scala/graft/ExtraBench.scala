@@ -169,144 +169,3 @@ object ScalingParquet {
     if (triplesLo != triplesHi) sys.exit(1) // legs must agree on the output
   }
 }
-
-/** Streaming throughput evidence (BENCH.md §streaming): rate source →
-  * synthetic turns → in-stream detect + broadcast-dictionary link +
-  * static canonical map → `StreamingTriples.assembleWithEviction`
-  * (`flatMapGroupsWithState`) → noop sink. The requested rate is set ABOVE
-  * the expected capacity so the measurement is the pipeline's maximum
-  * sustainable turns/s, not the generator's; state growth and batch
-  * durations come from the query progress feed.
-  *
-  * Usage: runMain graft.StreamBench [rowsPerSec] [seconds] [cores]
-  */
-object StreamBench {
-  def main(args: Array[String]): Unit = {
-    val rowsPerSec = if (args.length > 0) args(0).toLong else 500000L
-    val seconds = if (args.length > 1) args(1).toInt else 45
-    val cores = if (args.length > 2) args(2).toInt else 8
-    new java.io.File("/dev/shm/graft-spark").mkdirs()
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_CODEC", "zstd")) // round-6 measured default
-      .config("spark.sql.adaptive.enabled", "false") // streaming plans
-      // recentProgress retains only the newest N updates (default 100);
-      // the throughput sum below must see EVERY batch or long runs silently
-      // under-report — size the buffer far past any plausible batch count
-      .config("spark.sql.streaming.numRecentProgressUpdates", "100000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "localhost")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
-
-    val tagger = Detect.lexiconTagger(spark, Transcripts.aliasRows, Transcripts.tagSet)
-    // exact-link + canonicalization as broadcast maps (the streaming analog
-    // of the batch broadcast joins; the canonical map is the CC output,
-    // static during a stream)
-    val aliasMap = spark.sparkContext.broadcast(
-      Transcripts.aliasRows.map(r =>
-        (r.surface.toLowerCase(java.util.Locale.ROOT), r.label) -> r.entity_id).toMap)
-    val canonMap = spark.sparkContext.broadcast(Transcripts.canonicalOf)
-
-    val rate = spark.readStream.format("rate")
-      .option("rowsPerSecond", rowsPerSec.toString)
-      .option("numPartitions", cores.toString)
-      .load()
-      .select(col("value"), col("timestamp"))
-      .as[(Long, java.sql.Timestamp)]
-
-    // SPARK_GRAFT_STREAM_MODE=nodetect: attribution control — identical
-    // generator, link/canon maps and stateful assembly, but the tagger is
-    // replaced by the generator's own gold spans (P/R = 1.0, so the mention
-    // stream is value-identical). The throughput gap between the two modes
-    // is the detect stage's share of the streaming wall; everything else is
-    // the state operator + micro-batch machinery.
-    val mode = sys.env.getOrElse("SPARK_GRAFT_STREAM_MODE", "detect")
-    val mentions = mode match {
-      case "nodetect" =>
-        rate.mapPartitions { it =>
-          val am = aliasMap.value
-          val cm = canonMap.value
-          it.flatMap { case (id, ts) =>
-            val (_, golds) = Transcripts.makeTurn(id / 20, (id % 20).toInt, 42L)
-            golds.iterator.flatMap { g =>
-              am.get((g.surface.toLowerCase(java.util.Locale.ROOT), g.label))
-                .map { eid =>
-                  graft.streaming.StreamingTriples.TimedCanonMention(
-                    g.conv_id, g.turn_idx, g.start, g.end, g.label,
-                    g.surface, eid, cm.getOrElse(eid, eid), ts)
-                }
-            }
-          }
-        }
-      case _ =>
-        val turns = rate.map { case (id, ts) =>
-          // 20-turn conversations, turn text from the deterministic generator;
-          // event time = rate-source time (live watermark)
-          val (t, _) = Transcripts.makeTurn(id / 20, (id % 20).toInt, 42L)
-          Turn(t.conv_id, t.turn_idx, t.role, t.text, t.tool, ts)
-        }
-        turns.mapPartitions { it =>
-          val tg = tagger.value
-          val am = aliasMap.value
-          val cm = canonMap.value
-          // Detect.spanPartition: the bench measures the SAME detect core as
-          // the batch pipeline (one source of truth for micro-batch packing)
-          Detect.spanPartition(it, tg).flatMap { case (turn, spans) =>
-            spans.iterator.flatMap { sp =>
-              am.get((sp.surface.toLowerCase(java.util.Locale.ROOT), sp.label))
-                .map { eid =>
-                  graft.streaming.StreamingTriples.TimedCanonMention(
-                    turn.conv_id, turn.turn_idx, sp.start, sp.end, sp.label,
-                    sp.surface, eid, cm.getOrElse(eid, eid), turn.ts)
-                }
-            }
-          }
-        }
-    }
-
-    // SPARK_GRAFT_STREAM_STATE=plain: the string-state control leg. Default
-    // is the round-7 packed-state operator (entity ranks in the state store,
-    // packed-long rule evaluation) — the VERDICT r6 item-4 lever on the
-    // stateful-assembly ceiling the nodetect A/B pinned.
-    val stateMode = sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE", "packed")
-    val triples = stateMode match {
-      case "plain" => graft.streaming.StreamingTriples
-        .assembleWithEviction(mentions, watermark = "30 seconds", idleGap = "15 seconds")
-      case _ => graft.streaming.StreamingTriples
-        .assembleWithEvictionEncoded(mentions, graft.stages.Pipeline.transcriptsDict,
-          watermark = "30 seconds", idleGap = "15 seconds")
-    }
-
-    // JIT warmup stream: without it the cold first batch accumulates a huge
-    // rate-source backlog, collapsing the window into 2-3 giant batches and
-    // swinging the reading ±40%; a fresh query afterwards starts hot
-    val warm = triples.writeStream.format("noop").outputMode("append").start()
-    warm.awaitTermination(12000L)
-    warm.stop(); warm.awaitTermination()
-
-    val q = triples.writeStream.format("noop").outputMode("append").start()
-    val t0 = System.nanoTime()
-    q.awaitTermination(seconds * 1000L)
-    q.stop()
-    q.awaitTermination()
-    val elapsed = (System.nanoTime() - t0) / 1e9
-
-    val ps = q.recentProgress.filter(_.numInputRows > 0)
-    val turnsIn = ps.map(_.numInputRows).sum
-    val triplesOut = ps.map(p => Option(p.sink).map(_.numOutputRows).getOrElse(0L))
-      .filter(_ > 0).sum
-    val batchSecs = ps.flatMap(p =>
-      Option(p.durationMs.get("triggerExecution")).map(_.toDouble / 1000))
-    val avgBatch = if (batchSecs.isEmpty) 0.0 else batchSecs.sum / batchSecs.length
-    val maxState = ps.flatMap(_.stateOperators.map(_.numRowsTotal))
-      .foldLeft(0L)(math.max)
-    println(f"""{"metric":"streaming_triples","requested_rows_per_sec":$rowsPerSec,"elapsed_sec":$elapsed%.1f,"turns_in":$turnsIn,"turns_per_sec":${turnsIn / elapsed}%.0f,"triples_out":$triplesOut,"batches":${ps.length},"avg_batch_sec":$avgBatch%.2f,"max_state_rows":$maxState}""")
-    spark.stop()
-  }
-}

@@ -365,10 +365,9 @@ object Detect {
 
   /** Per-partition detect core — the ONE place the micro-batch + length-sort
     * + span-fast-path trick lives (padding-waste packing of
-    * birnncrf.py:20-28): shared by the batch stage below, the streaming
-    * windowed counts (`StreamingDetect`), and `StreamBench`, so the
-    * streaming throughput evidence always measures the same detect core as
-    * the batch pipeline. Emission order within a chunk is the SORTED order —
+    * birnncrf.py:20-28): shared by the batch stage below and the streaming
+    * windowed counts (`StreamingDetect`), so streaming runs the same detect
+    * core as the batch pipeline. Emission order within a chunk is the SORTED order —
     * callers must not assume input order (rows carry their own keys).
     */
   private val lengthDesc: java.util.Comparator[Turn] =

@@ -24,6 +24,19 @@ final class TripleDict private (val labels: Array[String],
   @transient private lazy val labelRankMap: Map[String, Int] =
     labels.zipWithIndex.toMap
   def rankOfLabel(l: String): Int = labelRankMap.getOrElse(l, -1)
+
+  // transient: a broadcast copy builds its own lookup once per executor on
+  // first use, so shipping the dictionary ships only the two arrays
+  @transient private lazy val entityRankMap: java.util.HashMap[String, Integer] = {
+    val m = new java.util.HashMap[String, Integer](entities.length * 2)
+    entities.indices.foreach(i => m.put(entities(i), i))
+    m
+  }
+  /** The entity's rank, or -1 when the dictionary does not hold it. */
+  def rankOfEntity(e: String): Int = {
+    val r = entityRankMap.get(e)
+    if (r == null) -1 else r.intValue
+  }
 }
 
 object TripleDict {

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.core._
-import graft.stages.Triples
+import graft.stages.{TripleDict, Triples}
 
 /** Incremental triple assembly over a mention stream with
   * `flatMapGroupsWithState` — per-conversation custom state (the
@@ -17,25 +17,32 @@ import graft.stages.Triples
   *
   * State eviction: `assemble` uses `NoTimeout` (bounded demos; a
   * processing-time timeout makes the micro-batch engine schedule empty
-  * batches just to evaluate timers). The production path at 10^12 turns is
-  * `assembleWithEviction`: event-time timeout keyed to the transcript
-  * watermark — a conversation idle past the watermark has its per-conv
-  * state dropped, and turns arriving later than the watermark are filtered
-  * before they reach the handler, so state is bounded by the number of
-  * LIVE conversations, not all conversations ever seen.
+  * batches just to evaluate timers). The production paths at 10^12 turns
+  * are `assembleWithEviction` and `assembleWithEvictionEncoded`: event-time
+  * timeout keyed to the transcript watermark — a conversation idle past the
+  * watermark has its per-conv state dropped, so state is bounded by the
+  * number of LIVE conversations, not all conversations ever seen.
+  *
+  * Late turns: Spark filters rows behind the PREVIOUS micro-batch's
+  * watermark before the handler runs, so rows between that and the current
+  * watermark still reach it. The handler drops every row with
+  * `ts ≤ getCurrentWatermarkMs()` before it emits anything or buffers it,
+  * so a late turn emits nothing (within-turn triples included) and no
+  * timer is ever armed below the watermark.
   *
   * Ordering contract: `assemble` (the in-order demo path) requires turns of
-  * one conversation to arrive in turn order across micro-batches.
-  * `assembleWithEviction` does NOT: it buffers per-conversation turn PER
-  * sets keyed by turn index, so a turn arriving in any order within the
+  * one conversation to arrive in turn order across micro-batches. The
+  * eviction paths do NOT: a turn arriving in any order within the
   * watermark window still links — a `follows_up` pair emits exactly once,
   * when the later-ARRIVING side of the adjacent-turn pair lands. The only
   * per-turn atomicity assumption kept is that one turn's mentions share a
   * micro-batch (true for the upstream detect stage, which emits whole
   * turns). A turn stays linkable while `ts + idleGap` is above the
   * watermark — the same horizon as conversation-idleness eviction, now per
-  * turn — so state is bounded by live turns in the horizon, not by
-  * conversation length.
+  * turn. `assembleWithEviction` buffers every turn inside that horizon;
+  * `assembleWithEvictionEncoded` keeps only the link frontier (the turns
+  * with a neighbour still to come, see [[StreamingTriples.LinkFrontier]]),
+  * so an in-order conversation holds one buffered turn.
   */
 object StreamingTriples {
 
@@ -93,14 +100,18 @@ object StreamingTriples {
   }
 
   /** Production variant: event-time state eviction + out-of-order turn
-    * arrival (see class doc). Late mentions (ts below the watermark) are
-    * dropped by the watermark operator before the handler sees them;
-    * within-watermark turns may arrive in ANY order — within-turn triples
-    * emit on arrival, and each adjacent-turn `follows_up` pair emits when
-    * its later-arriving side lands. Buffered turns are pruned (inline and
-    * by the timeout callback) once the watermark passes `ts + idleGap`; a
-    * cross-turn link whose earlier side idled past that horizon is dropped,
-    * exactly like the conversation-idle eviction it generalizes.
+    * arrival (see class doc). Rows at or behind the current watermark are
+    * dropped in the handler before they emit or are buffered; turns above
+    * it may arrive in ANY order — within-turn triples emit on arrival, and
+    * each adjacent-turn `follows_up` pair emits when its later-arriving
+    * side lands. Buffered turns are pruned (inline and by the timeout
+    * callback) once the watermark passes `ts + idleGap`; a cross-turn link
+    * whose earlier side idled past that horizon is dropped, exactly like
+    * the conversation-idle eviction it generalizes.
+    *
+    * This string-state path buffers every turn inside the horizon; it is
+    * the reference the packed frontier of [[assembleWithEvictionEncoded]]
+    * is tested against, and the path for corpora without a TripleDict.
     *
     * @param idleGap how long past its event time a turn stays linkable /
     *        a conversation may stay silent before its state is evicted.
@@ -129,12 +140,13 @@ object StreamingTriples {
             state.remove()
             Iterator.empty
           } else {
-            var buf = prune(state.getOption.map(_.turns).getOrElse(Map.empty),
-              state.getCurrentWatermarkMs())
+            val wm = state.getCurrentWatermarkMs()
+            var buf = prune(state.getOption.map(_.turns).getOrElse(Map.empty), wm)
             val out = Vector.newBuilder[Triple]
             // ascending turn order within the batch: an in-batch adjacent
             // pair links via the prev lookup of its later turn
-            val byTurn = rows.toSeq.groupBy(_.turn_idx).toSeq.sortBy(_._1)
+            val byTurn = rows.filter(_.ts.getTime > wm).toSeq
+              .groupBy(_.turn_idx).toSeq.sortBy(_._1)
             byTurn.foreach { case (turnIdx, ms0) =>
               val ts = ms0.iterator.map(_.ts.getTime).max
               val ms = ms0.map(m => (m.start, m.label, m.canonical_id))
@@ -152,135 +164,220 @@ object StreamingTriples {
               }
               buf += turnIdx -> TurnPers(ts, pers)
             }
-            state.update(BufState(buf))
-            rearm(buf)
+            if (buf.isEmpty) state.remove() // every row was late
+            else {
+              state.update(BufState(buf))
+              rearm(buf)
+            }
             out.result().iterator
           }
       }
   }
 
-  /** A buffered turn in the PACKED state layout: event time + the turn's
-    * PER canonical ids as entity RANKS into the TripleDict (4-byte ints on
-    * the state-store wire instead of id strings).
-    */
-  final case class PackedTurnPers(ts: Long, pers: Seq[Int])
-
-  /** Packed per-conversation state — see [[assembleWithEvictionEncoded]]. */
-  final case class PackedBufState(turns: Map[Int, PackedTurnPers])
-
-  /** Dictionary-encoded variant of [[assembleWithEviction]] (VERDICT r6
-    * item 4): same handler logic, out-of-order semantics, pruning and
-    * timers, but the per-conversation state stores entity RANKS (ints)
-    * instead of canonical-id strings, and the per-turn rule evaluation runs
-    * on the batch path's packed mention longs (`Triples.emitTurnRules`) —
-    * label compares become int compares and subj/obj strings are shared
-    * references into the broadcast entity array. The round-6 `nodetect`
-    * A/B pinned the streaming ceiling on this stateful operator, so the
-    * bytes serialized into the state store per batch are the lever: a
-    * buffered turn's state row shrinks from one string per PER mention
-    * (~16–24 B each in UnsafeRow layout) to one int (4 B).
+  /** Per-conversation state of [[assembleWithEvictionEncoded]]: the link
+    * frontier, i.e. the buffered turns that can still emit a `follows_up`.
+    * A turn stays while one of its neighbours (t−1 for t > 0, or t+1) has
+    * not arrived and `ts + idleGap` is above the watermark; a turn without
+    * PER mentions keeps only that arrival marker.
     *
-    * Output is identical to [[assembleWithEviction]] (equivalence-tested in
-    * StreamingSpec). Requires the same dictionary premise as the batch
-    * encoded paths: every label and canonical id packable via `dict`
-    * (loud failure otherwise — never a silent drop), mention starts inside
-    * the packed layout's 23-bit bound. Use [[assembleWithEviction]] for
-    * corpora without a TripleDict.
+    * Layout, ascending by turn index: `meta` holds two longs per turn,
+    * `turn << 32 | flags << 30 | nPers` and then the event time in ms,
+    * where flag bit 0 means t−1 has arrived and bit 1 that t+1 has; `pers`
+    * concatenates each turn's `nPers` PER entity ranks (TripleDict ranks)
+    * in mention order.
+    */
+  final case class LinkFrontier(meta: Array[Long], pers: Array[Int]) {
+    def turns: Int = meta.length / 2
+    def maxTs: Long = {
+      var m = Long.MinValue
+      var i = 1
+      while (i < meta.length) { m = math.max(m, meta(i)); i += 2 }
+      m
+    }
+  }
+
+  object LinkFrontier {
+    val Empty: LinkFrontier = LinkFrontier(Array.emptyLongArray, Array.emptyIntArray)
+
+    private final val PrevIn = 1
+    private final val NextIn = 2
+    private final val Linked = PrevIn | NextIn
+
+    /** One arriving turn: its index, event time in ms, and its mentions
+      * packed as `start << 40 | labelRank << 32 | entityRank` (the batch
+      * encoded layout), sorted ascending.
+      */
+    final case class Arrival(turn: Int, ts: Long, ms: Array[Long])
+
+    private final class Buffered(val ts: Long, val pers: Array[Int], var flags: Int)
+
+    /** One handler call for one conversation: prune `st` to the turns with
+      * `ts + idleGapMs` above `wmMs`, then take `arrivals` (ascending,
+      * distinct turns, all above the watermark) in order — emit each turn's
+      * within-turn triples, link it to a buffered neighbour that is still
+      * waiting for it, and drop every turn whose two neighbours have now
+      * arrived. Returns the new frontier and the triples.
+      *
+      * On any input without a repeated turn, the triples are exactly those
+      * of the full buffer of [[assembleWithEviction]]. A turn delivered
+      * again in a later call re-emits its within-turn triples, replaces its
+      * buffered PER set and links only to neighbours still waiting for it,
+      * so redelivering one turn never repeats a `follows_up`.
+      */
+    def step(dict: TripleDict, idleGapMs: Long, convId: String,
+             st: LinkFrontier, arrivals: Seq[Arrival],
+             wmMs: Long): (LinkFrontier, scala.collection.Seq[Triple]) = {
+      val ents = scala.collection.immutable.ArraySeq.unsafeWrapArray(dict.entities)
+      val perB = dict.rankOfLabel("PER")
+      val orgB = dict.rankOfLabel("ORG")
+      val locB = dict.rankOfLabel("LOC")
+      val buf = new java.util.TreeMap[Integer, Buffered]()
+      var i = 0
+      var off = 0
+      while (i < st.meta.length) {
+        val h = st.meta(i)
+        val n = (h & 0x3fffffffL).toInt
+        if (st.meta(i + 1) + idleGapMs > wmMs)
+          buf.put((h >>> 32).toInt, new Buffered(st.meta(i + 1),
+            java.util.Arrays.copyOfRange(st.pers, off, off + n), ((h >>> 30) & 3L).toInt))
+        off += n
+        i += 2
+      }
+      val out = new scala.collection.mutable.ArrayBuffer[Triple]()
+      val dedup = new Triples.PairDedup
+      // `Triples.followUps(...).distinct` on ranks: p outer / q inner in
+      // mention order, deduped on the batch walker's (predId=3, subj, obj) key
+      def link(turnIdx: Int, cur: Array[Int], prev: Array[Int]): Unit = {
+        dedup.clear()
+        cur.foreach { p =>
+          prev.foreach { q =>
+            if (p != q && dedup.add((3L << 62) | (p.toLong << 31) | q.toLong))
+              out += Triple(ents(p), "follows_up", ents(q), convId, turnIdx)
+          }
+        }
+      }
+      def arrived(turn: Int, b: Buffered, bit: Int): Unit = {
+        b.flags |= bit
+        if (b.flags == Linked) buf.remove(turn)
+      }
+      arrivals.foreach { a =>
+        if (a.turn < 0) throw new IllegalStateException(
+          s"StreamingTriples encoded: negative turn_idx ${a.turn} in $convId")
+        // within-turn rules via the ONE batch rule body (prev empty —
+        // cross-turn links go through the frontier lookups below)
+        Triples.emitTurnRules(a.ms, a.ms.length, Triples.EmptyLongs, 0,
+          convId, a.turn, ents, perB, orgB, locB, dedup, out)
+        val pers = a.ms.collect {
+          case v if ((v >>> 32) & 0xff).toInt == perB => (v & 0xffffffffL).toInt
+        }
+        var flags = if (a.turn == 0) PrevIn else 0
+        val prev = if (a.turn > 0) buf.get(a.turn - 1) else null
+        if (prev != null && (prev.flags & NextIn) == 0) {
+          link(a.turn, pers, prev.pers)
+          arrived(a.turn - 1, prev, NextIn)
+          flags |= PrevIn
+        }
+        val next = buf.get(a.turn + 1)
+        if (next != null && (next.flags & PrevIn) == 0) {
+          link(a.turn + 1, next.pers, pers)
+          arrived(a.turn + 1, next, PrevIn)
+          flags |= NextIn
+        }
+        val again = buf.get(a.turn)
+        if (again != null) flags |= again.flags
+        if (flags == Linked) buf.remove(a.turn)
+        else buf.put(a.turn, new Buffered(a.ts, pers, flags))
+      }
+      if (buf.isEmpty) return (Empty, out)
+      val meta = new Array[Long](buf.size * 2)
+      var nPers = 0
+      buf.values.forEach(b => nPers += b.pers.length)
+      val pers = new Array[Int](nPers)
+      i = 0
+      off = 0
+      buf.forEach { (turn, b) =>
+        meta(i) = (turn.toLong << 32) | (b.flags.toLong << 30) | b.pers.length
+        meta(i + 1) = b.ts
+        System.arraycopy(b.pers, 0, pers, off, b.pers.length)
+        off += b.pers.length
+        i += 2
+      }
+      (LinkFrontier(meta, pers), out)
+    }
+  }
+
+  /** Dictionary-encoded variant of [[assembleWithEviction]]: same output,
+    * late-row drop, out-of-order semantics and horizon, but the
+    * per-conversation state is the packed [[LinkFrontier]] — two primitive
+    * arrays holding only the turns that can still link, with PER canonical
+    * ids as TripleDict entity ranks — and the per-turn rules run on the
+    * batch path's packed mention longs (`Triples.emitTurnRules`), so subj /
+    * obj strings are shared references into the dictionary's entity array.
+    * The frontier's timer is armed at max(kept ts) + idleGap, and the state
+    * row is removed as soon as the frontier is empty. The per-conversation
+    * step is the pure [[LinkFrontier.step]].
+    *
+    * Output is identical to [[assembleWithEviction]] on any input without
+    * a repeated `(conv_id, turn_idx)` across micro-batches
+    * (equivalence-tested in StreamingTriplesSpec; the redelivery contract
+    * is on `LinkFrontier.step`). Requires the same dictionary premise as
+    * the batch encoded paths: every label and canonical id packable via
+    * `dict`, mention starts inside the packed layout's 23-bit bound and
+    * non-negative turn indices — each violation fails the query loudly,
+    * never a silent drop. Only `dict` is broadcast; its rank lookups are
+    * built once per executor. Use [[assembleWithEviction]] for corpora
+    * without a TripleDict.
     */
   def assembleWithEvictionEncoded(mentions: Dataset[TimedCanonMention],
-                                  dict: graft.stages.TripleDict,
+                                  dict: TripleDict,
                                   watermark: String = "1 hour",
                                   idleGap: String = "30 minutes"): Dataset[Triple] = {
     val spark = mentions.sparkSession
     import spark.implicits._
     val idleGapMs = parseDelayMs(idleGap)
-    val sc = spark.sparkContext
-    val bcEnts = sc.broadcast(dict.entities)
-    val bcEidRank = sc.broadcast(dict.entities.zipWithIndex.toMap)
-    val bcLbRank = sc.broadcast(dict.labels.zipWithIndex.toMap)
-    val perB = dict.rankOfLabel("PER")
-    val orgB = dict.rankOfLabel("ORG")
-    val locB = dict.rankOfLabel("LOC")
+    val bcDict = spark.sparkContext.broadcast(dict)
 
     mentions.withWatermark("ts", watermark)
       .groupByKey(_.conv_id)
       .flatMapGroupsWithState(OutputMode.Append(),
         GroupStateTimeout.EventTimeTimeout()) {
-        (convId: String, rows: Iterator[TimedCanonMention], state: GroupState[PackedBufState]) =>
-          def prune(turns: Map[Int, PackedTurnPers], wm: Long): Map[Int, PackedTurnPers] =
-            if (wm <= 0) turns else turns.filter(_._2.ts + idleGapMs > wm)
-          def rearm(turns: Map[Int, PackedTurnPers]): Unit =
-            if (turns.nonEmpty)
-              state.setTimeoutTimestamp(turns.valuesIterator.map(_.ts).max, idleGap)
+        (convId: String, rows: Iterator[TimedCanonMention], state: GroupState[LinkFrontier]) =>
           if (state.hasTimedOut) {
+            // armed at max(kept ts) + idleGap: every kept turn is past its
+            // horizon when it fires
             state.remove()
             Iterator.empty
           } else {
-            val ents: IndexedSeq[String] =
-              scala.collection.immutable.ArraySeq.unsafeWrapArray(bcEnts.value)
-            val eidRank = bcEidRank.value
-            val lbRank = bcLbRank.value
-            val dedup = new Triples.PairDedup
-            // packed follows_up — `Triples.followUps(...).distinct` on ranks:
-            // p outer / q inner in mention order, per-call dedup on the same
-            // (predId=3, subj, obj) key the batch walker uses
-            def followUpsPacked(out: scala.collection.mutable.ArrayBuffer[Triple],
-                                turnIdx: Int, cur: Seq[Int], prev: Seq[Int]): Unit = {
-              dedup.clear()
-              cur.foreach { p =>
-                prev.foreach { q =>
-                  if (p != q && dedup.add((3L << 62) | (p.toLong << 31) | q.toLong))
-                    out += Triple(ents(p), "follows_up", ents(q), convId, turnIdx)
-                }
+            val d = bcDict.value
+            val wm = state.getCurrentWatermarkMs()
+            val arrivals = rows.filter(_.ts.getTime > wm).toSeq
+              .groupBy(_.turn_idx).toSeq.sortBy(_._1).map { case (turnIdx, ms0) =>
+                val ms = ms0.iterator.map { m =>
+                  // same loud-failure contract as the batch encoded paths: an
+                  // unpackable mention aborts, never silently drops
+                  val lb = d.rankOfLabel(m.label)
+                  if (lb < 0) throw new IllegalStateException(
+                    s"StreamingTriples encoded: label not in dict: ${m.label}")
+                  val eid = d.rankOfEntity(m.canonical_id)
+                  if (eid < 0) throw new IllegalStateException(
+                    s"StreamingTriples encoded: canonical_id not in dict: ${m.canonical_id}")
+                  if (m.start < 0 || m.start >= Triples.MaxPackedStart)
+                    throw new IllegalStateException(
+                      s"StreamingTriples encoded: start outside [0, ${Triples.MaxPackedStart}) in $convId")
+                  (m.start.toLong << 40) | (lb.toLong << 32) | eid.toLong
+                }.toArray
+                // ascending packed sort == the batch sort_array order (rank
+                // packing preserves UTF-8 order; bit 63 always 0)
+                java.util.Arrays.sort(ms)
+                LinkFrontier.Arrival(turnIdx, ms0.iterator.map(_.ts.getTime).max, ms)
               }
+            val (next, out) = LinkFrontier.step(d, idleGapMs, convId,
+              state.getOption.getOrElse(LinkFrontier.Empty), arrivals, wm)
+            if (next.turns == 0) state.remove()
+            else {
+              state.update(next)
+              state.setTimeoutTimestamp(next.maxTs + idleGapMs)
             }
-            var buf = prune(state.getOption.map(_.turns).getOrElse(Map.empty),
-              state.getCurrentWatermarkMs())
-            val out = new scala.collection.mutable.ArrayBuffer[Triple]()
-            val byTurn = rows.toSeq.groupBy(_.turn_idx).toSeq.sortBy(_._1)
-            byTurn.foreach { case (turnIdx, ms0) =>
-              val ts = ms0.iterator.map(_.ts.getTime).max
-              val ms = new Array[Long](ms0.length)
-              var i = 0
-              ms0.foreach { m =>
-                // same loud-failure contract as the batch encoded paths: an
-                // unpackable mention aborts, never silently drops
-                val lb = lbRank.getOrElse(m.label, -1)
-                if (lb < 0) throw new IllegalStateException(
-                  s"StreamingTriples encoded: label not in dict: ${m.label}")
-                val eid = eidRank.getOrElse(m.canonical_id, -1)
-                if (eid < 0) throw new IllegalStateException(
-                  s"StreamingTriples encoded: canonical_id not in dict: ${m.canonical_id}")
-                if (m.start < 0 || m.start >= Triples.MaxPackedStart)
-                  throw new IllegalStateException(
-                    s"StreamingTriples encoded: start outside [0, ${Triples.MaxPackedStart}) in $convId")
-                ms(i) = (m.start.toLong << 40) | (lb.toLong << 32) | eid.toLong
-                i += 1
-              }
-              // ascending packed sort == the batch sort_array order (rank
-              // packing preserves UTF-8 order; bit 63 always 0)
-              java.util.Arrays.sort(ms)
-              // within-turn rules via the ONE batch rule body (prev empty —
-              // cross-turn links go through the buffered-state lookups below)
-              Triples.emitTurnRules(ms, ms.length, Triples.EmptyLongs, 0,
-                convId, turnIdx, ents, perB, orgB, locB, dedup, out)
-              val pers: Seq[Int] = {
-                val b = Seq.newBuilder[Int]
-                ms.foreach { v =>
-                  if (((v >>> 32) & 0xff).toInt == perB) b += (v & 0xffffffffL).toInt
-                }
-                b.result()
-              }
-              buf.get(turnIdx - 1).foreach { prev =>
-                followUpsPacked(out, turnIdx, pers, prev.pers)
-              }
-              buf.get(turnIdx + 1).foreach { nxt =>
-                followUpsPacked(out, turnIdx + 1, nxt.pers, pers)
-              }
-              buf += turnIdx -> PackedTurnPers(ts, pers)
-            }
-            state.update(PackedBufState(buf))
-            rearm(buf)
             out.iterator
           }
       }

@@ -317,6 +317,225 @@ class StreamingTriplesSpec extends SparkSpecBase {
       s"restarted stream diverged from batch:\n  stream=$streamed\n  batch=$batch")
     graft.io.SnapshotIO.deleteRecursively(base)
   }
+
+  test("turns behind the advanced watermark are dropped in the handler; the query finishes") {
+    import java.sql.Timestamp
+    import graft.streaming.StreamingTriples.TimedCanonMention
+    implicit val sqlCtx = spark.sqlContext
+    def tcm(conv: String, turn: Int, start: Int, label: String, canon: String,
+            minute: Int) =
+      TimedCanonMention(conv, turn, start, start + 3, label, "xxx", canon, canon,
+        Timestamp.valueOf(f"2024-01-01 ${10 + minute / 60}%02d:${minute % 60}%02d:00"))
+    // on time at 12:00; the watermark then advances to 11:50, but Spark
+    // filters the next micro-batch against the PREVIOUS watermark, so the
+    // 10:0x turns of C reach the handler — they must emit nothing and arm
+    // no timer below the watermark
+    val onTime1 = Seq(tcm("A", 0, 0, "PER", "PER00", 120), tcm("A", 0, 10, "ORG", "ORG00a", 120),
+      tcm("A", 1, 0, "PER", "PER01", 121))
+    val late = Seq(tcm("C", 0, 0, "PER", "PER02", 0), tcm("C", 0, 10, "ORG", "ORG00a", 0),
+      tcm("C", 1, 0, "PER", "PER03", 1), tcm("A", 2, 0, "PER", "PER04", 2))
+    val onTime2 = Seq(tcm("A", 2, 0, "PER", "PER05", 122), tcm("A", 2, 10, "LOC", "LOC01", 122))
+    def run(encoded: Boolean, name: String) = {
+      val src = MemoryStream[TimedCanonMention]
+      val ds =
+        if (encoded) StreamingTriples.assembleWithEvictionEncoded(src.toDS(),
+          graft.stages.Pipeline.transcriptsDict, watermark = "10 minutes", idleGap = "5 minutes")
+        else StreamingTriples.assembleWithEviction(src.toDS(),
+          watermark = "10 minutes", idleGap = "5 minutes")
+      // no no-data micro-batches, as when every next batch has data (a file
+      // replay): one between the data batches would run the late-row filter
+      // at the advanced watermark and hide the late turns from the handler
+      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+      val q = try ds.writeStream.format("memory").queryName(name).outputMode("append").start()
+        finally spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
+      try Seq(onTime1, late, onTime2).foreach { b => src.addData(b); q.processAllAvailable() }
+      finally q.stop()
+      spark.sql(s"SELECT subj, pred, obj, conv_id, turn_idx FROM $name")
+        .collect().map(r => (r.getString(0), r.getString(1), r.getString(2),
+          r.getString(3), r.getInt(4))).sorted.toSeq
+    }
+    val batch = graft.stages.Triples.run((onTime1 ++ onTime2).map(t => CanonMention(
+        t.conv_id, t.turn_idx, t.start, t.end, t.label, t.surface, t.entity_id,
+        t.canonical_id)).toDS()).toDF()
+      .select("subj", "pred", "obj", "conv_id", "turn_idx").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3), r.getInt(4)))
+      .sorted.toSeq
+    assert(batch.exists(_._2 == "follows_up") && batch.exists(_._2 == "affiliated_with"))
+    assert(run(encoded = false, "late_plain") == batch)
+    assert(run(encoded = true, "late_packed") == batch)
+  }
+
+  test("packed-state path fails LOUDLY on a negative turn_idx") {
+    import java.sql.Timestamp
+    import graft.streaming.StreamingTriples.TimedCanonMention
+    implicit val sqlCtx = spark.sqlContext
+    val src = MemoryStream[TimedCanonMention]
+    src.addData(TimedCanonMention("A", -1, 0, 3, "PER", "xxx", "PER00", "PER00",
+      Timestamp.valueOf("2024-01-01 10:00:00")))
+    val q = StreamingTriples.assembleWithEvictionEncoded(
+        src.toDS(), graft.stages.Pipeline.transcriptsDict)
+      .writeStream.format("memory").queryName("pk_neg").outputMode("append").start()
+    val e = intercept[Exception] { try q.processAllAvailable() finally q.stop() }
+    def msgs(t: Throwable): Seq[String] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .map(x => Option(x.getMessage).getOrElse("")).toSeq
+    assert(msgs(e).exists(_.contains("StreamingTriples encoded: negative turn_idx -1 in A")),
+      s"got: ${msgs(e)}")
+  }
+}
+
+/** The packed link frontier's per-conversation step, checked without Spark
+  * against a full-buffer model of `StreamingTriples.assembleWithEviction`.
+  */
+class LinkFrontierSpec extends org.scalatest.funsuite.AnyFunSuite {
+  import org.scalacheck.{Gen, Prop, Test}
+  import graft.stages.{TripleDict, Triples}
+  import graft.streaming.StreamingTriples.LinkFrontier
+  import graft.streaming.StreamingTriples.LinkFrontier.Arrival
+
+  private val dict = TripleDict(Seq("PER", "ORG", "LOC"), (0 until 6).map(i => s"e$i"))
+  private val IdleGapMs = 60000L
+
+  private def pack(start: Int, label: String, e: Int): Long =
+    (start.toLong << 40) | (dict.rankOfLabel(label).toLong << 32) | e.toLong
+
+  private def arrival(turn: Int, ts: Long, ms: Long*): Arrival =
+    Arrival(turn, ts, ms.toArray.sorted)
+
+  private def sorted(ts: Iterable[Triple]) =
+    ts.toSeq.sortBy(t => (t.turn_idx, t.pred, t.subj, t.obj))
+
+  /** The full buffer of `assembleWithEviction` on the string rule bodies:
+    * every turn inside the horizon stays, keyed by turn index.
+    */
+  private def referenceStep(buf0: Map[Int, (Long, Seq[String])], arrivals: Seq[Arrival],
+                            wm: Long): (Map[Int, (Long, Seq[String])], Seq[Triple]) = {
+    var buf = if (wm <= 0) buf0 else buf0.filter(_._2._1 + IdleGapMs > wm)
+    val out = Seq.newBuilder[Triple]
+    arrivals.foreach { a =>
+      val ms = a.ms.toSeq.map(v => ((v >>> 40).toInt,
+        dict.labels(((v >>> 32) & 0xff).toInt), dict.entities((v & 0xffffffffL).toInt)))
+      val pers = ms.filter(_._2 == "PER").map(_._3)
+      out ++= Triples.withinTurnTriples("c", a.turn, ms).distinct
+      buf.get(a.turn - 1).foreach(p => out ++= Triples.followUps("c", a.turn, pers, p._2).distinct)
+      buf.get(a.turn + 1).foreach(n => out ++= Triples.followUps("c", a.turn + 1, n._2, pers).distinct)
+      buf += a.turn -> ((a.ts, pers))
+    }
+    (buf, out.result())
+  }
+
+  /** One micro-batch for this conversation: the turns it delivers (possibly
+    * none, when only the watermark moves) and the watermark it runs under.
+    */
+  private final case class Batch(turns: Seq[Arrival], wm: Long)
+
+  private val mention: Gen[Long] = for {
+    start <- Gen.choose(0, 40)
+    label <- Gen.oneOf("PER", "PER", "ORG", "LOC")
+    e <- Gen.choose(0, 5)
+  } yield pack(start, label, e)
+
+  /** A conversation of up to 12 turns, about one in five missing, delivered
+    * in a random order over random micro-batches, with watermark-only
+    * batches in between; the watermark starts unset (0), just below the
+    * first turn or at it, and advances by steps up to 2.5 idle gaps.
+    */
+  private val scenario: Gen[Seq[Batch]] = for {
+    n <- Gen.choose(1, 12)
+    present <- Gen.listOfN(n, Gen.frequency(4 -> true, 1 -> false))
+    turns <- Gen.sequence[List[Arrival], Arrival]((0 until n).filter(present).map { t =>
+      Gen.choose(0, 4).flatMap(k => Gen.listOfN(k, mention))
+        .map(ms => arrival(t, 1000000L + t * 30000L, ms: _*))
+    })
+    shuffleSeed <- Gen.long
+    cuts <- Gen.listOfN(turns.size, Gen.frequency(2 -> false, 1 -> true))
+    ticks <- Gen.listOfN(turns.size, Gen.frequency(3 -> false, 1 -> true))
+    wm0 <- Gen.oneOf(0L, 950000L, 1000000L)
+    steps <- Gen.listOfN(2 * turns.size, Gen.oneOf(0L, 0L, 20000L, 60000L, 150000L))
+  } yield {
+    val order = new scala.util.Random(shuffleSeed).shuffle(turns)
+    val groups = order.indices.foldLeft(Vector.empty[Vector[Arrival]]) { (acc, i) =>
+      if (acc.isEmpty || cuts(i)) acc :+ Vector(order(i)) else acc.init :+ (acc.last :+ order(i))
+    }
+    val withTicks = groups.zipWithIndex.flatMap { case (g, i) =>
+      if (ticks(i)) Seq(Vector.empty[Arrival], g) else Seq(g)
+    }
+    withTicks.zip(steps.scanLeft(wm0)(_ + _)).map { case (g, wm) => Batch(g.sortBy(_.turn), wm) }
+  }
+
+  /** Runs both models over the batches the way Spark drives a key: late
+    * turns are dropped first, a watermark-only batch fires the timer once
+    * the watermark has passed it, and a batch with data calls the step.
+    */
+  private def replay(batches: Seq[Batch]): (Seq[Triple], Seq[Triple]) = {
+    var ref = Map.empty[Int, (Long, Seq[String])]
+    var fr = LinkFrontier.Empty
+    val refOut, frOut = Seq.newBuilder[Triple]
+    batches.foreach { b =>
+      val live = b.turns.filter(_.ts > b.wm)
+      if (live.isEmpty) {
+        if (ref.nonEmpty && b.wm > ref.valuesIterator.map(_._1).max + IdleGapMs) ref = Map.empty
+        if (fr.turns > 0 && b.wm > fr.maxTs + IdleGapMs) fr = LinkFrontier.Empty
+      } else {
+        val (r, ro) = referenceStep(ref, live, b.wm)
+        ref = r; refOut ++= ro
+        val (f, fo) = LinkFrontier.step(dict, IdleGapMs, "c", fr, live, b.wm)
+        fr = f; frOut ++= fo
+      }
+    }
+    (sorted(refOut.result()), sorted(frOut.result()))
+  }
+
+  test("property: frontier step ≡ full-buffer reference over arrival orders, gaps and eviction") {
+    var linked = 0
+    val prop = Prop.forAll(scenario) { batches =>
+      val (ref, fr) = replay(batches)
+      if (ref.exists(_.pred == "follows_up")) linked += 1
+      ref == fr
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(2000)
+      .withInitialSeed(org.scalacheck.rng.Seed(20241019L)), prop)
+    assert(res.passed, s"frontier diverged from the full buffer: ${res.status}")
+    assert(linked > 200, s"too few scenarios emitted a follows_up: $linked")
+  }
+
+  test("an in-order conversation with no missing turn holds exactly one buffered turn") {
+    val rnd = new scala.util.Random(7)
+    var fr = LinkFrontier.Empty
+    var t = 0
+    while (t < 200) {
+      val k = 1 + rnd.nextInt(4)
+      val batch = (t until t + k).map(i => arrival(i, 1000000L + i * 30000L,
+        pack(0, "PER", rnd.nextInt(6)), pack(5, "ORG", rnd.nextInt(6))))
+      fr = LinkFrontier.step(dict, IdleGapMs, "c", fr, batch, 1000000L + t * 30000L - 1)._1
+      assert(fr.turns == 1 && (fr.meta(0) >>> 32) == t + k - 1, s"after turn ${t + k - 1}")
+      assert(fr.pers.length == 1)
+      t += k
+    }
+  }
+
+  test("redelivered turn: within-turn triples again, new PER set kept, no repeated follows_up") {
+    def step(fr: LinkFrontier, a: Arrival) = LinkFrontier.step(dict, IdleGapMs, "c", fr, Seq(a), 0L)
+    val (f0, o0) = step(LinkFrontier.Empty, arrival(0, 1000L, pack(0, "PER", 0)))
+    val (f1, o1) = step(f0, arrival(1, 2000L, pack(0, "PER", 1)))
+    // turn 1 again, now with another PER set and an ORG
+    val (f2, o2) = step(f1, arrival(1, 2500L, pack(0, "PER", 2), pack(4, "ORG", 3)))
+    val (f3, o3) = step(f2, arrival(2, 3000L, pack(0, "PER", 4)))
+    assert(o0.isEmpty)
+    assert(o1 == Seq(Triple("e1", "follows_up", "e0", "c", 1)))
+    // turn 0 left the frontier when turn 1 first arrived: no second link
+    assert(o2 == Seq(Triple("e2", "affiliated_with", "e3", "c", 1)))
+    assert(o3 == Seq(Triple("e4", "follows_up", "e2", "c", 2)))
+    assert(f2.turns == 1 && f3.turns == 1 && (f3.meta(0) >>> 32) == 2)
+  }
+
+  test("frontier step fails loudly on a negative turn index") {
+    val e = intercept[IllegalStateException] {
+      LinkFrontier.step(dict, IdleGapMs, "conv_x", LinkFrontier.Empty,
+        Seq(arrival(-3, 1000L, pack(0, "PER", 0))), 0L)
+    }
+    assert(e.getMessage == "StreamingTriples encoded: negative turn_idx -3 in conv_x")
+  }
 }
 
 class MetricsSpec extends SparkSpecBase {
