@@ -30,17 +30,15 @@ object Pipeline {
     * a 9+-digit id WITH a leading zero would encode to a different
     * conversation's key, so it must fail, not round-trip wrong. The guard
     * also keeps the ANSI cast from throwing its own error — malformed ids
-    * flow to runEncoded's loud raise_error instead.
+    * flow to the encode's loud raise_error instead. The synthetic corpus
+    * is keyed by a dense sequence id, so every bench scale fits the codec
+    * layout's 32-bit key; a key ≥ 2^32 aborts LOUDLY (verified per row in
+    * Triples), never aliases.
     */
   private[graft] val transcriptsConvCodec: Triples.ConvCodec = Triples.ConvCodec(
     encode = c => when(c.rlike("^conv_(\\d{8}|[1-9]\\d{8,17})$"),
       substring(c, 6, 18).cast("long")),
-    decode = v => f"conv_$v%08d",
-    // the synthetic corpus is keyed by a dense sequence id — every bench
-    // scale fits 32 bits, so the sorted exchange packs (key, chunk, turn)
-    // into one long (2-column rows). A ≥ 2^32 key aborts LOUDLY (verified
-    // per row in Triples), never aliases.
-    fits32 = true)
+    decode = v => f"conv_$v%08d")
 
   /** JVM-side mirror of `transcriptsConvCodec.encode` for the fused
     * detect→packed path (`Triples.runFusedDetect` runs inside a typed
@@ -62,7 +60,7 @@ object Pipeline {
       allDigits && (s.length == 13 || s.charAt(5) != '0')
     }
     if (!ok) throw new IllegalStateException(
-      s"Triples.runEncoded: convCodec failed on: $s")
+      s"Triples: convCodec failed on: $s")
     java.lang.Long.parseLong(s.substring(5))
   }
 
@@ -240,7 +238,7 @@ object Pipeline {
     val triples = SnapshotIO.resumeOrCompute(spark, workDir, "triples", inputKey,
         protocol = protocol) {
       Triples.runEncodedSorted(canon.as[CanonMention], transcriptsDict,
-        convCodec = Some(transcriptsConvCodec)).toDF()
+        transcriptsConvCodec).toDF()
     }
 
     // per-stage lineage metrics (rows per stage) — appended, not recomputed,

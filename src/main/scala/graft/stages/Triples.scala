@@ -1,12 +1,13 @@
 package graft.stages
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core._
 
-/** Dictionary for the encoded triple-assembly path (`Triples.runEncoded`):
-  * label and entity-id vocabularies sorted in unsigned UTF-8 byte order —
+/** Dictionary for the packed triple-assembly paths (`Triples.runEncodedSorted`,
+  * `runEncodedSortedHashed`, `runFusedDetect`): label and entity-id
+  * vocabularies sorted in unsigned UTF-8 byte order —
   * Spark's binary string collation — so the packed 64-bit mention sort
   * (start, labelRank, entityRank) is EXACTLY the generic path's struct sort
   * (start, label, canonical_id). Entity ranks therefore preserve the
@@ -54,15 +55,15 @@ object TripleDict {
 
   /** Driver-memory envelope of the entity rank dictionary — the encoded
     * paths' ONLY unbounded driver-side structure (VERDICT r6 item 2). The
-    * whole canonical-entity vocabulary is collected, sorted and broadcast
-    * as an `Array[String]`: at ~60–100 B per JVM entry (header + char data
-    * + broadcast serialization), 50M entities is ~3–5 GB of driver heap and
+    * whole canonical-entity vocabulary is sorted and broadcast as an
+    * `Array[String]`: at ~60–100 B per JVM entry (header + char data +
+    * broadcast serialization), 50M entities is ~3–5 GB of driver heap and
     * per-executor broadcast — the practical ceiling for a healthy driver.
-    * Past it the encode must NOT silently OOM mid-collect: `apply` fails
-    * loudly here, naming `Triples.run` (the generic string path, which
-    * never collects the entity vocabulary) as the fallback. Mirrors the
-    * `ConvCodec.fits32` contract: declared bounds are enforced, never
-    * trusted.
+    * The gate bounds the sort and the broadcast, not the collect: the
+    * caller hands `apply` an already-collected vocabulary, and `apply`
+    * checks its distinct size BEFORE the O(n log n) sort, failing loudly
+    * with `Triples.run` (the generic string path, which never collects the
+    * entity vocabulary) named as the fallback.
     */
   val MaxEntities: Int = 50000000
 
@@ -76,13 +77,13 @@ object TripleDict {
                            maxEntities: Int): TripleDict = {
     val ls = labels.toArray.distinct.sorted(utf8Order)
     require(ls.length <= 256, s"TripleDict supports ≤256 labels, got ${ls.length}")
-    val es = entities.toArray.distinct.sorted(utf8Order)
-    require(es.length <= maxEntities,
-      s"TripleDict entity vocabulary (${es.length}) exceeds MaxEntities " +
+    val distinctEs = entities.toArray.distinct
+    require(distinctEs.length <= maxEntities,
+      s"TripleDict entity vocabulary (${distinctEs.length}) exceeds MaxEntities " +
         s"($maxEntities) — the rank dictionary would not fit a sane driver " +
         "heap as a collected+broadcast Array[String]; use Triples.run (the " +
         "generic string-keyed path) for corpora beyond this bound")
-    new TripleDict(ls, es)
+    new TripleDict(ls, distinctEs.sorted(utf8Order))
   }
 }
 
@@ -141,15 +142,14 @@ object Triples {
       sort_array(collect_list(col("_m")))))(canon.sparkSession)
   }
 
-  /** The chunked-window turn-context attachment (class-doc shape), shared
-    * by `run` and `runEncoded` so the boundary-stitching rules have ONE
-    * implementation, generalized to rule depth `k` (SURVEY §7.4 contract:
-    * chunk size m ≫ overlap k). Input columns: `_cid` (conversation key —
-    * string or codec long), `turn_idx`, `_m` (per-turn-or-mention payload —
-    * struct, packed long, or pre-packed long array). Output:
+  /** The chunked-window turn-context attachment (class-doc shape) behind
+    * `run`, generalized to rule depth `k` (SURVEY §7.4 contract: chunk
+    * size m ≫ overlap k; the k=2 boundary stitching is tested in
+    * PipelineSpec). Input columns: `_cid` (conversation id), `turn_idx`,
+    * `_m` (per-mention payload, aggregated by `msAgg`). Output:
     * (_cid, turn_idx, ms, prev_idx_1, prev_ms_1, …, prev_idx_k, prev_ms_k)
     * with context rows consumed. For k = 1 the trailing pair is aliased
-    * (prev_idx, prev_ms) — the shape `emit`/`emitPacked` read.
+    * (prev_idx, prev_ms) — the shape `emit` reads.
     *
     * One pass over the mention table: every row keeps its own chunk; the
     * last k turns of a chunk are ALSO emitted into the next chunk as
@@ -208,34 +208,30 @@ object Triples {
     */
   val MaxPackedStart: Int = 1 << 23
 
-  /** Opt-in conv_id codec for `runEncoded`: when the table's conv ids are
+  /** conv_id codec for `runEncodedSorted`: when the table's conv ids are
     * numeric-derivable (common for transcript tables keyed by a sequence /
-    * snowflake id — the synthetic corpus' `conv_%08d` is), the exchange can
-    * carry an 8-byte long instead of the id string, which after the mention
-    * packing is the DOMINANT exchanged byte. `encode` must be a Catalyst
-    * expression (stays inside whole-stage codegen before the shuffle);
-    * `decode` runs in the emit flatMap and must invert `encode` on every
-    * conv_id in the table (equivalence property-tested for the synthetic
-    * format). An encode that nulls (unparsable id) fails LOUDLY.
-    *
-    * @param fits32 declare that `encode` yields values in [0, 2^32) on this
-    *        corpus (< 4.3 B conversations). The sorted exchange then packs
-    *        (convKey, chunk, turn) into ONE long — a 3-column → 2-column row
-    *        cut (8 B/row off the UnsafeRow through the dominant exchange).
-    *        The declaration is VERIFIED per row (raise_error on an encode
-    *        ≥ 2^32): a corpus that outgrows 32-bit keys aborts loudly so the
-    *        operator flips this back to the 64-bit layout — it can never
-    *        silently alias two conversations. A true 10^12-turn corpus
-    *        (~10^10–10^11 conversations) still fits; leave false only past
-    *        ~4 B conversations.
+    * snowflake id — the synthetic corpus' `conv_%08d` is), the exchange
+    * packs (convKey, chunk, turn) into ONE long instead of shipping the id
+    * string, which after the mention packing is the DOMINANT exchanged
+    * byte. `encode` must be a Catalyst expression (stays inside whole-stage
+    * codegen before the shuffle) yielding values in [0, 2^32) — fewer than
+    * 4.3 B conversations, which a 10^12-turn corpus (~10^10–10^11
+    * conversations) still satisfies. `decode` runs in the walker and must
+    * invert `encode` on every conv_id in the table (equivalence
+    * property-tested for the synthetic format). Both bounds are VERIFIED
+    * per row, never trusted: an encode that nulls (unparsable id) or
+    * yields a key outside [0, 2^32) fails LOUDLY, so two conversations can
+    * never silently alias. Opaque ids go to `runEncodedSortedHashed`.
     */
-  final case class ConvCodec(encode: Column => Column, decode: Long => String,
-                             fits32: Boolean = false)
+  final case class ConvCodec(encode: Column => Column, decode: Long => String)
     extends Serializable
 
-  /** The dictionary-encoded mention relation both encoded paths exchange:
-    * (_cid conv key [string or codec long], turn_idx int, _m packed long).
-    * All encode guards fail LOUDLY (raise_error) — see `runEncoded` doc.
+  /** The dictionary-encoded mention relation both sorted exchanges read:
+    * (_cid conv key [codec long, or the id string for the hashed path],
+    * turn_idx int, _m packed long). Every guard fails LOUDLY (raise_error):
+    * a mention the dictionary cannot encode, an unparsable conv id, a start
+    * outside the 23-bit field or a negative turn aborts the job, because a
+    * silent drop or a mis-packed long would corrupt the KG.
     */
   private def packedMentions(canon: Dataset[CanonMention], dict: TripleDict,
                              convCodec: Option[ConvCodec]): DataFrame = {
@@ -243,7 +239,7 @@ object Triples {
     import spark.implicits._
     val convKey: Column = convCodec match {
       case Some(cc) => coalesce(cc.encode(col("conv_id")).cast("long"),
-        raise_error(concat(lit("Triples.runEncoded: convCodec failed on: "),
+        raise_error(concat(lit("Triples: convCodec failed on: "),
           col("conv_id"))).cast("long"))
       case None => col("conv_id")
     }
@@ -259,7 +255,7 @@ object Triples {
     // hit the same loud raise_error as an oversized one (ADVICE r4)
     val startChecked = when(col("start").between(0, MaxPackedStart - 1), col("start"))
       .otherwise(raise_error(concat(
-        lit(s"Triples.runEncoded: start outside [0, $MaxPackedStart) in "),
+        lit(s"Triples: start outside [0, $MaxPackedStart) in "),
         col("conv_id"))).cast("int"))
     // same loud-failure rule for turn_idx: the sorted-exchange variant packs
     // (chunk, turn) into one long whose order is only (chunk asc, turn asc)
@@ -267,13 +263,13 @@ object Triples {
     // silently mis-sort
     val turnChecked = when(col("turn_idx") >= 0, col("turn_idx"))
       .otherwise(raise_error(concat(
-        lit("Triples.runEncoded: negative turn_idx in "),
+        lit("Triples: negative turn_idx in "),
         col("conv_id"))).cast("int"))
     val lbChecked = coalesce(try_element_at(labelMap, col("label")),
-      raise_error(concat(lit("Triples.runEncoded: label not in dict: "),
+      raise_error(concat(lit("Triples: label not in dict: "),
         col("label"))).cast("int"))
     val eidChecked = coalesce(col("_eid"),
-      raise_error(concat(lit("Triples.runEncoded: canonical_id not in dict: "),
+      raise_error(concat(lit("Triples: canonical_id not in dict: "),
         col("canonical_id"))).cast("int"))
     canon
       .filter(col("canonical_id").isNotNull)
@@ -282,74 +278,6 @@ object Triples {
         (shiftleft(startChecked.cast("long"), 40) +
           shiftleft(lbChecked.cast("long"), 32) +
           eidChecked.cast("long")).as("_m"))
-  }
-
-  /** Dictionary-encoded variant of `run` — the pipeline's hot path. The
-    * triple exchange is the measured shuffle-byte ceiling of the whole flow
-    * (BENCH.md stage breakdown: ~75% of pipeline wall at 18.2M turns), and
-    * what it ships per mention in the generic path is a struct of STRINGS
-    * (label + canonical_id, ~40 B in UnsafeRow layout). Here each mention is
-    * packed into ONE 64-bit long BEFORE the exchange:
-    *
-    *   [ start : 23 bits | labelRank : 8 bits | entityRank : 32 bits ]
-    *
-    * with ranks assigned in UTF-8 byte order (see `TripleDict`), so the
-    * natural ascending long sort == the generic struct sort — outputs are
-    * bit-identical (equivalence-tested in PipelineSpec). The entity encode
-    * is a broadcast hash join against the rank dictionary (no shuffle of
-    * the unbounded mention side); the label encode is a ≤256-entry map
-    * literal; decode happens inside the emit flatMap via broadcast reverse
-    * arrays — no decode joins, and emitted subj/obj strings are SHARED
-    * references into the broadcast array (zero per-triple string
-    * allocation, the at-scale fix for the emit hot loop).
-    *
-    * Same chunked-window skew-proofing as `run` (single shuffle exchange,
-    * plan-asserted in PlansSpec).
-    */
-  def runEncoded(canon: Dataset[CanonMention], dict: TripleDict,
-                 chunkTurns: Int = DefaultChunkTurns,
-                 convCodec: Option[ConvCodec] = None,
-                 prePack: Boolean = false): Dataset[Triple] = {
-    require(chunkTurns >= 2, s"chunkTurns must be ≥ 2, got $chunkTurns")
-    val spark = canon.sparkSession
-    import spark.implicits._
-    val packed = packedMentions(canon, dict, convCodec)
-
-    // prePack=true groups locally-contiguous (key, turn) mention runs into
-    // one Array[Long] row BEFORE the exchange (detect emits a turn's
-    // mentions consecutively, so runs ≈ turns); the post-shuffle groupBy
-    // merges the rare split-turn fragments with a flatten. Measured A/B at
-    // 18.2M turns / 32c (graft.ExchangeAB, BENCH.md §Exchange): −55%
-    // shuffle records (36.4M → 16.4M), −22% shuffle bytes (454 → 356 MB),
-    // but +11% WALL on this single-host tmpfs-shuffle VM — the typed
-    // mapPartitions boundary (codegen break + per-run Array[Long]
-    // allocation) costs more than local shuffle I/O saves. Hence default
-    // OFF here; on a NIC-bound multi-node cluster, where the exchange
-    // crosses the network, the byte/record cut is the relevant currency —
-    // enable it there. Both shapes reach emitPacked as array<long>,
-    // unsorted (emitPacked's Arrays.sort restores the generic struct sort);
-    // output is identical (equivalence-tested in PipelineSpec), and
-    // correctness never depends on the clustering: a shuffled upstream
-    // degrades to one-mention runs — the prePack=false exchange exactly.
-    val grouped =
-      if (!prePack) packed
-      else convCodec match {
-        case Some(_) => prePackRuns(packed.as[(Long, Int, Long)])
-          .toDF("_cid", "turn_idx", "_m")
-        case None => prePackRuns(packed.as[(String, Int, Long)])
-          .toDF("_cid", "turn_idx", "_m")
-      }
-    val msAgg =
-      if (prePack) flatten(collect_list(col("_m")))
-      else collect_list(col("_m"))
-    val withPrev = chunkedWithContext(grouped, chunkTurns, 1, msAgg)
-    val getConv: org.apache.spark.sql.Row => String = convCodec match {
-      case Some(cc) =>
-        val dec = cc.decode
-        r => dec(r.getLong(0))
-      case None => _.getString(0)
-    }
-    emitPacked(withPrev, dict, getConv)(spark)
   }
 
   // bit layout of the single-long (chunk, turn-in-chunk) positions used by
@@ -364,33 +292,25 @@ object Triples {
   private val TicMask = (1L << TicBits) - 1
   private val ChunkMask = (1L << ChunkBits) - 1
 
-  /** Sorted-exchange variant of `runEncoded`: the same ONE hash exchange on
-    * (conv key, chunk), but the per-turn grouping, the turn ordering AND the
-    * depth-k cross-turn context all come from a single `sortWithinPartitions`
-    * pass consumed by a streaming per-partition walker — no collect_list
-    * buffers, no window lag columns, no `_ctx` byte on the wire, and no
-    * per-turn `Arrays.sort` (the partition sort already delivers mentions
-    * in packed order; bit 63 is always 0, so the signed long sort is the
-    * unsigned / UTF-8-rank one). Context-ness is DERIVED in the walker
-    * instead of shipped. Output is identical to `runEncoded`/`run`
-    * (equivalence-tested in PipelineSpec); per-task memory is O(one turn)
-    * plus a depth-k lag ring, strictly less than the collect_list path's
-    * per-group buffers, and the post-shuffle sort is Spark's spill-safe
-    * external sorter — arbitrarily large (key, chunk) groups degrade to
-    * disk, never OOM. Measured fastest of the three exchange shapes at
-    * 18.2M turns / 32c (min 8.54 s vs 11.54 s collect_list/window and
-    * 12.02 s pre-pack, two A/B sessions — graft.ExchangeAB, BENCH.md
-    * §Exchange), so this is the `Pipeline` default since round 5.
+  /** Packed sorted exchange for corpora whose conv ids a `ConvCodec` can
+    * derive: ONE hash exchange on (conv key, chunk), with the per-turn
+    * grouping, the turn ordering AND the depth-k cross-turn context all
+    * coming from a single `sortWithinPartitions` pass consumed by a
+    * streaming per-partition walker — no collect_list buffers, no window
+    * lag columns, no `_ctx` byte on the wire, and no per-turn
+    * `Arrays.sort` (the partition sort already delivers mentions in packed
+    * order; bit 63 is always 0, so the signed long sort is the unsigned /
+    * UTF-8-rank one). Context-ness is DERIVED in the walker instead of
+    * shipped. Output is identical to `run` (equivalence-tested in
+    * PipelineSpec); per-task memory is O(one turn) plus a depth-k lag ring,
+    * and the post-shuffle sort is Spark's spill-safe external sorter —
+    * arbitrarily large (key, chunk) groups degrade to disk, never OOM.
     *
-    * Wire layouts by conv-key mode (UnsafeRow fixed bytes per mention row,
-    * excluding the 8 B null bitmap word):
-    *   - `ConvCodec(fits32 = true)`: (convKey32|chunk|tic packed long,
-    *     mention long) — 2 columns, 16 B (round 6);
-    *   - `ConvCodec` 64-bit: (key long, chunk<<32|turn long, mention long) —
-    *     3 columns, 24 B;
-    *   - no codec: (conv_id string, chunk<<32|turn, mention) — the exact
-    *     string path; see `runEncodedSortedHashed` for the dictionary-free
-    *     compressed-key alternative on UUID-keyed corpora.
+    * Wire layout (Packed32): (convKey32|chunk|tic packed long, mention
+    * long) — 2 columns, 16 B of UnsafeRow fixed bytes per mention row
+    * excluding the null bitmap word. The codec key must lie in [0, 2^32);
+    * a key outside it aborts the job loudly, naming
+    * `runEncodedSortedHashed` — the layout for ids with no codec.
     *
     * Cross-turn rule depth is the rule set's `depth` (the default rule set
     * is k=1, the deepest rule in the fixed pattern set); deeper rule sets
@@ -398,8 +318,8 @@ object Triples {
     * ring (VERDICT r5 item 5).
     */
   def runEncodedSorted(canon: Dataset[CanonMention], dict: TripleDict,
-                       chunkTurns: Int = DefaultChunkTurns,
-                       convCodec: Option[ConvCodec] = None): Dataset[Triple] =
+                       convCodec: ConvCodec,
+                       chunkTurns: Int = DefaultChunkTurns): Dataset[Triple] =
     runEncodedSortedRules(canon, dict, chunkTurns, convCodec, defaultRules(dict))
 
   /** Dictionary-free sorted exchange for corpora whose conv ids are NOT
@@ -420,7 +340,7 @@ object Triples {
     * conversations (expected ≈ 6e-6 such pairs at 10^12 conversations), and
     * even that case is caught LOUDLY — every carrier is validated against
     * the group's id and a mismatch aborts the job with a clear message
-    * (rerun with the exact string path). Equivalence to `run` on UUID
+    * (rerun with `run`, the exact string path). Equivalence to `run` on UUID
     * corpora, including a pre-shuffled adversarial layout, is tested in
     * PipelineSpec.
     */
@@ -434,90 +354,57 @@ object Triples {
       dict.rankOfLabel("LOC"))
 
   private[graft] def runEncodedSortedRules(canon: Dataset[CanonMention],
-      dict: TripleDict, chunkTurns: Int, convCodec: Option[ConvCodec],
+      dict: TripleDict, chunkTurns: Int, convCodec: ConvCodec,
       rules: PackedRules): Dataset[Triple] = {
     val k = rules.depth
     require(k >= 1 && chunkTurns > k,
       s"chunk size must exceed rule depth: chunkTurns=$chunkTurns depth=$k")
+    require(chunkTurns.toLong + k <= (1L << TicBits),
+      s"chunkTurns + depth must fit $TicBits tic bits: $chunkTurns + $k")
     val spark = canon.sparkSession
     import spark.implicits._
     val bcEnts = spark.sparkContext.broadcast(dict.entities)
-
-    convCodec match {
-      case Some(cc) if cc.fits32 =>
-        require(chunkTurns.toLong + k <= (1L << TicBits),
-          s"chunkTurns + depth must fit $TicBits tic bits: $chunkTurns + $k")
-        val pm = packedMentions(canon, dict, convCodec)
-        // fits32 is VERIFIED, not trusted: a key ≥ 2^32 would alias another
-        // conversation's packed position — abort instead
-        val cid32 = when(col("_cid").between(0L, (1L << 32) - 1), col("_cid"))
-          .otherwise(raise_error(concat(
-            lit("Triples: ConvCodec.fits32 violated (conv key ≥ 2^32): "),
-            col("_cid").cast("string"))).cast("long"))
-        // chunk must fit its 15 bits INCLUDING the overlap copy's chunk+1:
-        // a context copy of the last chunk's final k turns would otherwise
-        // compute chunk 2^15, whose shifted bits carry into the conv-key
-        // field and leak the row into the NEXT key's chunk 0 as a phantom
-        // negative turn. Bound: turn < chunkTurns·2^15 − k (all Int
-        // turn_idx but the topmost k at the default chunking; loud on tiny
-        // test chunk sizes)
-        val turnOk = when(
-            col("turn_idx") < lit((chunkTurns.toLong << ChunkBits) - k),
-            col("turn_idx"))
-          .otherwise(raise_error(concat(
-            lit(s"Triples: turn_idx ≥ chunkTurns·2^$ChunkBits−$k in conv key "),
-            col("_cid").cast("string"))).cast("int"))
-        val chunk = floor(turnOk / chunkTurns).cast("long")
-        val p = shiftleft(cid32, 32) + shiftleft(chunk, TicBits) +
-          (turnOk - chunk * chunkTurns + k)
-        val pNext = shiftleft(cid32, 32) + shiftleft(chunk + 1, TicBits) +
-          (turnOk - (chunk + 1) * chunkTurns + k)
-        val inOverlap = pmod(turnOk, lit(chunkTurns)) >= chunkTurns - k
-        val dup = pm
-          .withColumn("_p", explode(when(inOverlap, array(p, pNext))
-            .otherwise(array(p))))
-          .select(col("_p"), col("_m"))
-          .toDF("_1", "_2")
-        dup.as[(Long, Long)]
-          .repartition(shiftrightunsigned(col("_1"), TicBits))
-          .sortWithinPartitions("_1", "_2")
-          .mapPartitions(walk(new Packed32Layout(cc.decode, chunkTurns, k),
-            rules, bcEnts))
-
-      case Some(cc) =>
-        val dup = ctDup(packedMentions(canon, dict, convCodec), chunkTurns, k)
-        dup.as[(Long, Long, Long)]
-          .repartition(col("_1"), shiftright(col("_2"), 32))
-          .sortWithinPartitions("_1", "_2", "_3")
-          .mapPartitions(walk(new Codec64Layout(cc.decode, chunkTurns),
-            rules, bcEnts))
-
-      case None =>
-        val dup = ctDup(packedMentions(canon, dict, None), chunkTurns, k)
-        dup.as[(String, Long, Long)]
-          .repartition(col("_1"), shiftright(col("_2"), 32))
-          .sortWithinPartitions("_1", "_2", "_3")
-          .mapPartitions(walk(new StringKeyLayout(chunkTurns), rules, bcEnts))
-    }
+    val pm = packedMentions(canon, dict, Some(convCodec))
+    // the 32-bit key bound is VERIFIED, not trusted: a key outside
+    // [0, 2^32) would alias another conversation's packed position — abort
+    val cid32 = when(col("_cid").between(0L, (1L << 32) - 1), col("_cid"))
+      .otherwise(raise_error(concat(lit(ConvKeyOverflow), col("_cid").cast("string")))
+        .cast("long"))
+    // chunk must fit its 15 bits INCLUDING the overlap copy's chunk+1:
+    // a context copy of the last chunk's final k turns would otherwise
+    // compute chunk 2^15, whose shifted bits carry into the conv-key
+    // field and leak the row into the NEXT key's chunk 0 as a phantom
+    // negative turn. Bound: turn < chunkTurns·2^15 − k (all Int
+    // turn_idx but the topmost k at the default chunking; loud on tiny
+    // test chunk sizes)
+    val turnOk = when(
+        col("turn_idx") < lit((chunkTurns.toLong << ChunkBits) - k),
+        col("turn_idx"))
+      .otherwise(raise_error(concat(
+        lit(s"Triples: turn_idx ≥ chunkTurns·2^$ChunkBits−$k in conv key "),
+        col("_cid").cast("string"))).cast("int"))
+    val chunk = floor(turnOk / chunkTurns).cast("long")
+    val p = shiftleft(cid32, 32) + shiftleft(chunk, TicBits) +
+      (turnOk - chunk * chunkTurns + k)
+    val pNext = shiftleft(cid32, 32) + shiftleft(chunk + 1, TicBits) +
+      (turnOk - (chunk + 1) * chunkTurns + k)
+    val inOverlap = pmod(turnOk, lit(chunkTurns)) >= chunkTurns - k
+    val dup = pm
+      .withColumn("_p", explode(when(inOverlap, array(p, pNext))
+        .otherwise(array(p))))
+      .select(col("_p"), col("_m"))
+      .toDF("_1", "_2")
+    dup.as[(Long, Long)]
+      .repartition(shiftrightunsigned(col("_1"), TicBits))
+      .sortWithinPartitions("_1", "_2")
+      .mapPartitions(walk(new Packed32Layout(convCodec.decode, chunkTurns, k),
+        rules, bcEnts))
   }
 
-  /** (chunk<<32 | turn) packing + depth-k overlap duplication shared by the
-    * Codec64 and string-key sorted paths: both halves non-negative (turn_idx
-    * guarded loudly in packedMentions), so ascending `_ct` order is exactly
-    * (chunk asc, turn asc) — one fewer sort column and 8 fewer bytes per
-    * UnsafeRow than separate columns. The last k turns of each chunk are
-    * also emitted into the next chunk as context copies.
-    */
-  private def ctDup(pm: DataFrame, chunkTurns: Int, k: Int): DataFrame = {
-    val chunk = floor(col("turn_idx") / chunkTurns).cast("long")
-    val ct = shiftleft(chunk, 32) + col("turn_idx")
-    val ctNext = shiftleft(chunk + 1, 32) + col("turn_idx") // overlap copy
-    val inOverlap = pmod(col("turn_idx"), lit(chunkTurns)) >= chunkTurns - k
-    pm.withColumn("_ct", explode(when(inOverlap, array(ct, ctNext))
-        .otherwise(array(ct))))
-      .select(col("_cid"), col("_ct"), col("_m"))
-      .toDF("_1", "_2", "_3")
-  }
+  /** Message prefix of the loud abort on a codec key outside [0, 2^32). */
+  private val ConvKeyOverflow = "Triples: conv key outside [0, 2^32) — the codec " +
+    "layout packs it into 32 bits; use Triples.runEncodedSortedHashed for " +
+    "this corpus: "
 
   private[graft] def runEncodedSortedHashedRules(canon: Dataset[CanonMention],
       dict: TripleDict, chunkTurns: Int, rules: PackedRules): Dataset[Triple] = {
@@ -568,7 +455,7 @@ object Triples {
     * tagger's span loop: the Mention/LinkedMention/CanonMention string rows
     * never exist, and the pre-exchange stage serializes two longs per
     * mention. Downstream (exchange, partition sort, streaming walker) is
-    * byte-identical to `runEncodedSorted`'s fits32 branch.
+    * byte-identical to `runEncodedSorted`'s.
     *
     * Semantics are EXACTLY the canonical chain's (equivalence-tested in
     * PipelineSpec against detect→link(exact)→canon→runEncodedSorted):
@@ -579,7 +466,7 @@ object Triples {
     *     union-find election as `Canon.run` (`Canon.localCanonicalMap`);
     *   - NIL mentions emit nothing (the `canonical_id IS NOT NULL` filter);
     *   - every loud guard of the encoded path is kept per emitted mention:
-    *     convEncode failure, fits32 violation, negative turn, chunk+1
+    *     convEncode failure, conv key outside [0, 2^32), negative turn, chunk+1
     *     overflow at the 15-bit boundary, start outside [0, 2^23).
     *
     * The fusion premise — alias dictionary and same-as component map are
@@ -626,7 +513,7 @@ object Triples {
           if (v != null) { // dictionary miss → NIL → no triple source
             if (s.start < 0 || s.start >= MaxPackedStart)
               throw new IllegalStateException(
-                s"Triples.runEncoded: start outside [0, $MaxPackedStart) in ${turn.conv_id}")
+                s"Triples: start outside [0, $MaxPackedStart) in ${turn.conv_id}")
             if (ms == null) ms = new Array[Long](4)
             else if (n == ms.length) ms = java.util.Arrays.copyOf(ms, n * 2)
             ms(n) = (s.start.toLong << 40) | v.longValue()
@@ -637,11 +524,11 @@ object Triples {
         if (n == 0) Iterator.empty
         else {
           val cid = convEncode(turn.conv_id) // loud on unparsable ids
-          if (cid < 0L || cid > 0xffffffffL) throw new IllegalStateException(
-            s"Triples: ConvCodec.fits32 violated (conv key ≥ 2^32): $cid")
+          if (cid < 0L || cid > 0xffffffffL)
+            throw new IllegalStateException(ConvKeyOverflow + cid)
           val t = turn.turn_idx
           if (t < 0) throw new IllegalStateException(
-            s"Triples.runEncoded: negative turn_idx in ${turn.conv_id}")
+            s"Triples: negative turn_idx in ${turn.conv_id}")
           if (t >= maxTurn) throw new IllegalStateException(
             s"Triples: turn_idx ≥ chunkTurns·2^$ChunkBits−$k in conv key $cid")
           val chunk = (t / m).toLong
@@ -669,22 +556,24 @@ object Triples {
   /** Driver-side composition of link ∘ canon ∘ rank-encode for the fused
     * path: `Link.aliasLut`'s (label + NUL + lower(surface)) → min-entity
     * election, canonicalized through `Canon.localCanonicalMap`'s union-find,
-    * encoded to boxed (labelRank<<32 | entityRank). Builds loudly: a
-    * canonical id or label outside `dict` fails HERE (construction) — the
-    * same condition the encoded path's raise_error guards catch at runtime,
-    * caught earlier.
+    * encoded to boxed (labelRank<<32 | entityRank). Builds loudly and is
+    * STRICTER than the staged chain: construction fails for ANY alias entry
+    * whose label or canonical id is missing from `dict`, even when no
+    * mention ever hits that entry, whereas `packedMentions`' raise_error
+    * guards fire only for mentions actually emitted. Such entries are not
+    * skipped: a skipped entry would turn every later hit on it into a
+    * silent NIL drop.
     */
   private def fusedLut(alias: Seq[AliasRow], sameAsPairs: Seq[(String, String)],
                        dict: TripleDict): java.util.HashMap[String, java.lang.Long] = {
     val canonMap = Canon.localCanonicalMap(sameAsPairs)
-    val entityRank: Map[String, Int] = dict.entities.zipWithIndex.toMap
     val lut = new java.util.HashMap[String, java.lang.Long](alias.size * 2)
     Link.aliasLut(alias).forEach { (key, entity) =>
       val canonical = canonMap.getOrElse(entity, entity)
       val label = key.substring(0, key.indexOf('\u0000'))
       val lb = dict.rankOfLabel(label)
       require(lb >= 0, s"Triples.runFusedDetect: label not in dict: $label")
-      val eid = entityRank.getOrElse(canonical, -1)
+      val eid = dict.rankOfEntity(canonical)
       require(eid >= 0,
         s"Triples.runFusedDetect: canonical_id not in dict: $canonical")
       lut.put(key, java.lang.Long.valueOf((lb.toLong << 32) | eid.toLong))
@@ -757,37 +646,6 @@ object Triples {
       * detection) and buffers pre-carrier turns.
       */
     def carriersSparse: Boolean
-  }
-
-  private final class Codec64Layout(decode: Long => String, chunkTurns: Int)
-      extends WalkerLayout[(Long, Long, Long)] {
-    def sameGroup(a: (Long, Long, Long), b: (Long, Long, Long)): Boolean =
-      a._1 == b._1 && (a._2 >>> 32) == (b._2 >>> 32)
-    def sameConv(a: (Long, Long, Long), b: (Long, Long, Long)): Boolean = a._1 == b._1
-    def sameTurn(a: (Long, Long, Long), b: (Long, Long, Long)): Boolean =
-      a._1 == b._1 && a._2 == b._2
-    def turnIdx(r: (Long, Long, Long)): Int = r._2.toInt
-    def isContext(r: (Long, Long, Long)): Boolean =
-      r._2.toInt / chunkTurns != (r._2 >>> 32).toInt
-    def mention(r: (Long, Long, Long)): Long = r._3
-    def convId(r: (Long, Long, Long)): String = decode(r._1)
-    val carriersSparse = false
-  }
-
-  private final class StringKeyLayout(chunkTurns: Int)
-      extends WalkerLayout[(String, Long, Long)] {
-    def sameGroup(a: (String, Long, Long), b: (String, Long, Long)): Boolean =
-      (a._2 >>> 32) == (b._2 >>> 32) && a._1 == b._1
-    def sameConv(a: (String, Long, Long), b: (String, Long, Long)): Boolean =
-      a._1 == b._1
-    def sameTurn(a: (String, Long, Long), b: (String, Long, Long)): Boolean =
-      a._2 == b._2 && a._1 == b._1
-    def turnIdx(r: (String, Long, Long)): Int = r._2.toInt
-    def isContext(r: (String, Long, Long)): Boolean =
-      r._2.toInt / chunkTurns != (r._2 >>> 32).toInt
-    def mention(r: (String, Long, Long)): Long = r._3
-    def convId(r: (String, Long, Long)): String = r._1
-    val carriersSparse = false
   }
 
   private final class Packed32Layout(decode: Long => String, chunkTurns: Int,
@@ -876,7 +734,7 @@ object Triples {
           val s = ly.convId(r)
           if (s != null && s != convId) throw new IllegalStateException(
             s"Triples.runEncodedSortedHashed: conv-id hash collision in one exchange " +
-              s"group ('$convId' vs '$s') — rerun with the exact string-keyed path")
+              s"group ('$convId' vs '$s') — rerun with Triples.run, the exact string path")
         }
       }
       private def flushTurn(): Unit = {
@@ -996,40 +854,6 @@ object Triples {
         convId, turnIdx, ents, perB, orgB, locB, dedup, out)
   }
 
-  /** Run-length grouping of consecutive (key, turn) mention rows into one
-    * (key, turn, Array[Long]) row — the map-side pre-pack of the encoded
-    * exchange. Pure narrow streaming pass: one element of lookahead, no
-    * per-partition buffering beyond the current turn's (text-length-bounded)
-    * mention array, so it composes with arbitrarily large partitions.
-    */
-  private def prePackRuns[K](ds: Dataset[(K, Int, Long)])(
-      implicit enc: org.apache.spark.sql.Encoder[(K, Int, Array[Long])])
-      : Dataset[(K, Int, Array[Long])] =
-    ds.mapPartitions { it =>
-      new Iterator[(K, Int, Array[Long])] {
-        private var pending: (K, Int, Long) = _
-        private var hasPending = false
-        def hasNext: Boolean = hasPending || it.hasNext
-        def next(): (K, Int, Array[Long]) = {
-          var cur = if (hasPending) { hasPending = false; pending } else it.next()
-          val cid = cur._1
-          val turn = cur._2
-          var arr = new Array[Long](4)
-          arr(0) = cur._3
-          var n = 1
-          var open = true
-          while (open && it.hasNext) {
-            cur = it.next()
-            if (cur._1 == cid && cur._2 == turn) {
-              if (n == arr.length) arr = java.util.Arrays.copyOf(arr, n * 2)
-              arr(n) = cur._3; n += 1
-            } else { pending = cur; hasPending = true; open = false }
-          }
-          (cid, turn, if (n == arr.length) arr else java.util.Arrays.copyOf(arr, n))
-        }
-      }
-    }
-
   /** Growable long array with linear-scan dedup — per-turn triple counts are
     * tiny, so a scan beats any hash set and allocates nothing per element
     * (no boxing). Reset per row via `clear()`.
@@ -1049,88 +873,13 @@ object Triples {
 
   private[graft] val EmptyLongs = Array.empty[Long]
 
-  /** Zero-copy unwrap of a Row's long-array column. PINNED ASSUMPTION: the
-    * caller (`emitPacked`) sorts the returned array IN PLACE, which is safe
-    * only because Spark's row deserializer materializes a FRESH primitive
-    * array per `getSeq` call per row (GenericRowWithSchema over a copied
-    * UnsafeArrayData) — nothing else aliases it. If a future Spark version
-    * ever serves a shared/reused buffer here (e.g. a columnar row path),
-    * switch the `emitPacked` call sites to `longArrayCopy` (ADVICE r5 low).
-    * The equivalence suite (PipelineSpec: runEncoded ≡ run) would catch the
-    * resulting corruption — sibling reads of a mutated row mis-sort turns.
-    */
-  private def longArray(s: Seq[Long]): Array[Long] = (s: Any) match {
-    case a: scala.collection.immutable.ArraySeq.ofLong => a.unsafeArray
-    case a: scala.collection.mutable.ArraySeq.ofLong => a.array
-    case other: Seq[_] =>
-      longArrayCopy(other.asInstanceOf[Seq[Long]])
-  }
-
-  private def longArrayCopy(other: Seq[Long]): Array[Long] = {
-      val n = other.length
-      val out = new Array[Long](n)
-      var i = 0
-      val it = other.iterator
-      while (it.hasNext) { out(i) = it.next(); i += 1 }
-      out
-  }
-
-  /** Packed-path emit: identical rule bodies to `emit`/`withinTurnTriples`/
-    * `followUps` but evaluated on the packed longs — label compare is an int
-    * compare, pair dedup is a packed (pred, subj, obj) long key, and subj/obj
-    * decode is an index into the broadcast entity array (shared string refs,
-    * no per-triple allocation beyond the output `Triple` itself).
-    * The per-turn arrays arrive as UNSORTED flatten-concats of the map-side
-    * pre-pack runs; `Arrays.sort` here restores exactly the generic path's
-    * struct sort (rank packing preserves UTF-8 order, and bit 63 is always 0
-    * — start < 2^23 — so the signed long sort is the unsigned one).
-    * Equivalence to the generic path is property-tested (PipelineSpec).
-    */
-  private def emitPacked(withPrev: DataFrame, dict: TripleDict,
-                         getConv: org.apache.spark.sql.Row => String)
-                        (spark: SparkSession): Dataset[Triple] = {
-    import spark.implicits._
-    val bcEnts = spark.sparkContext.broadcast(dict.entities)
-    // rule-label ranks resolved once on the driver; -1 (absent from this
-    // corpus' label vocabulary) simply never matches
-    val perB = dict.rankOfLabel("PER")
-    val orgB = dict.rankOfLabel("ORG")
-    val locB = dict.rankOfLabel("LOC")
-    withPrev.mapPartitions { rows =>
-      // unsafeWrapArray ONCE per partition: the bare Array would otherwise
-      // hit the implicit copying Array→IndexedSeq conversion on EVERY
-      // emitTurnRules call — a full copy of the entity dictionary per turn
-      val ents: IndexedSeq[String] =
-        scala.collection.immutable.ArraySeq.unsafeWrapArray(bcEnts.value)
-      val dedup = new PairDedup
-      val out = new scala.collection.mutable.ArrayBuffer[Triple]()
-      rows.flatMap { row =>
-        val convId = getConv(row)
-        val turnIdx = row.getInt(1)
-        val ms = longArray(row.getSeq[Long](2))
-        java.util.Arrays.sort(ms)
-        val prevAdjacent = !row.isNullAt(3) && row.getInt(3) == turnIdx - 1
-        val prev =
-          if (prevAdjacent && !row.isNullAt(4)) longArray(row.getSeq[Long](4))
-          else EmptyLongs
-        java.util.Arrays.sort(prev)
-
-        out.clear()
-        emitTurnRules(ms, ms.length, prev, prev.length, convId, turnIdx,
-          ents, perB, orgB, locB, dedup, out)
-        // out is reused across rows: copy the emitted slice (List avoids
-        // retaining the buffer's backing array)
-        out.toList
-      }
-    }
-  }
-
   /** The four pattern-rule loops over one turn's SORTED packed mentions
     * (`ms(0 until msLen)`) with the adjacent previous turn's sorted packed
     * mentions (`prev(0 until prevLen)`, length 0 when none) — the ONE
-    * implementation behind `emitPacked` (collect_list arrays) and the
-    * sorted-exchange walker (growable scratch arrays; hence explicit
-    * lengths). Appends to `out`; per-turn dedup via `dedup` (cleared here).
+    * implementation behind the sorted-exchange walker and the streaming
+    * packed path (`StreamingTriples`); the walker's growable scratch arrays
+    * are why lengths are explicit. Appends to `out`; per-turn dedup via
+    * `dedup` (cleared here).
     * Rule order mirrors withinTurnTriples ++ followUps exactly.
     */
   private[graft] def emitTurnRules(ms: Array[Long], msLen: Int,

@@ -70,47 +70,20 @@ class PipelineSpec extends SparkSpecBase {
     // boundary context stitching must reproduce every cross-turn triple
     assert(sorted(Triples.run(canon, chunkTurns = 3)) == viaWindow)
     assert(sorted(Triples.run(canon, chunkTurns = 2)) == viaWindow)
-    // dictionary-encoded hot path (the Pipeline default since round 4)
-    assert(sorted(Triples.runEncoded(canon, Pipeline.transcriptsDict)) == viaWindow)
-    assert(sorted(Triples.runEncoded(canon, Pipeline.transcriptsDict, chunkTurns = 3)) == viaWindow)
-    // + numeric conv codec (exchange carries a long conv key, decode inverts)
-    assert(sorted(Triples.runEncoded(canon, Pipeline.transcriptsDict,
-      convCodec = Some(Pipeline.transcriptsConvCodec))) == viaWindow)
-    assert(sorted(Triples.runEncoded(canon, Pipeline.transcriptsDict, chunkTurns = 3,
-      convCodec = Some(Pipeline.transcriptsConvCodec))) == viaWindow)
-    // prePack=false (the A/B control: round-4 one-row-per-mention exchange)
-    assert(sorted(Triples.runEncoded(canon, Pipeline.transcriptsDict,
-      prePack = false)) == viaWindow)
-    assert(sorted(Triples.runEncoded(canon, Pipeline.transcriptsDict, chunkTurns = 3,
-      convCodec = Some(Pipeline.transcriptsConvCodec), prePack = false)) == viaWindow)
-    // sorted-exchange walker (no collect_list/window; lag from the partition
-    // sort) — small chunks force cross-chunk context through the walker's
-    // derived-ctx path
-    assert(sorted(Triples.runEncodedSorted(canon, Pipeline.transcriptsDict)) == viaWindow)
-    assert(sorted(Triples.runEncodedSorted(canon, Pipeline.transcriptsDict,
-      chunkTurns = 3)) == viaWindow)
-    assert(sorted(Triples.runEncodedSorted(canon, Pipeline.transcriptsDict,
-      chunkTurns = 2)) == viaWindow)
-    assert(sorted(Triples.runEncodedSorted(canon, Pipeline.transcriptsDict,
-      convCodec = Some(Pipeline.transcriptsConvCodec))) == viaWindow)
-    assert(sorted(Triples.runEncodedSorted(canon, Pipeline.transcriptsDict,
-      chunkTurns = 3, convCodec = Some(Pipeline.transcriptsConvCodec))) == viaWindow)
   }
 
-  test("sorted exchange: 64-bit codec, 32-bit packed and hashed-key layouts are equivalent") {
+  test("sorted exchange: 32-bit packed and hashed-key layouts are equivalent") {
     import spark.implicits._
     val canon = result.canon.as[graft.core.CanonMention]
     def sorted(t: org.apache.spark.sql.Dataset[Triple]) =
       t.orderBy("conv_id", "turn_idx", "subj", "pred", "obj").collect().toSeq
     val viaWindow = sorted(Triples.runWindow(canon))
-    // fits32=false forces the 3-column 64-bit key layout (the Pipeline codec
-    // is fits32=true, so the default-path tests above cover Packed32; this
-    // keeps the 64-bit walker covered too)
-    val codec64 = Pipeline.transcriptsConvCodec.copy(fits32 = false)
+    // small chunks force cross-chunk context through the walker's
+    // derived-ctx path
     for (chunk <- Seq(Triples.DefaultChunkTurns, 3, 2)) {
       assert(sorted(Triples.runEncodedSorted(canon, Pipeline.transcriptsDict,
-        chunkTurns = chunk, convCodec = Some(codec64))) == viaWindow,
-        s"codec64 chunkTurns=$chunk diverged")
+        Pipeline.transcriptsConvCodec, chunkTurns = chunk)) == viaWindow,
+        s"packed32 chunkTurns=$chunk diverged")
       // the hashed path treats ANY string id as opaque — numeric ones too
       assert(sorted(Triples.runEncodedSortedHashed(canon, Pipeline.transcriptsDict,
         chunkTurns = chunk)) == viaWindow, s"hashed chunkTurns=$chunk diverged")
@@ -148,7 +121,7 @@ class PipelineSpec extends SparkSpecBase {
       t.orderBy("conv_id", "turn_idx", "subj", "pred", "obj").collect().toSeq
     val canon = result.canon.as[graft.core.CanonMention]
     val viaChain = sorted(Triples.runEncodedSorted(canon, Pipeline.transcriptsDict,
-      convCodec = Some(Pipeline.transcriptsConvCodec)))
+      Pipeline.transcriptsConvCodec))
     assert(viaChain.nonEmpty)
     val tagger = Detect.lexiconTagger(spark, Transcripts.aliasRows, Transcripts.tagSet)
     // small chunk sizes force cross-chunk context through the fused path's
@@ -203,7 +176,7 @@ class PipelineSpec extends SparkSpecBase {
     assert(colEnc == jvmEnc, s"col=$colEnc jvm=$jvmEnc")
   }
 
-  test("fused path keeps the loud guards: bad conv id, fits32, chunk overflow") {
+  test("fused path keeps the loud guards: bad conv id, 32-bit conv key, chunk overflow") {
     import spark.implicits._
     val tagger = Detect.lexiconTagger(spark, Transcripts.aliasRows, Transcripts.tagSet)
     def fused(turns: org.apache.spark.sql.Dataset[Turn], chunk: Int = Triples.DefaultChunkTurns) =
@@ -219,7 +192,8 @@ class PipelineSpec extends SparkSpecBase {
     val big = Seq(Turn("conv_4294967296", 0, "user", text, null,
       new java.sql.Timestamp(0L))).toDS()
     val e2 = intercept[Exception] { fused(big).collect() }
-    assert(msgs(e2).exists(_.contains("fits32 violated")), s"got: ${msgs(e2)}")
+    assert(msgs(e2).exists(_.contains("use Triples.runEncodedSortedHashed")),
+      s"got: ${msgs(e2)}")
     val deep = Seq(Turn(f"conv_${7}%08d", 3 * 32768 - 1, "user", text, null,
       new java.sql.Timestamp(0L))).toDS()
     val e3 = intercept[Exception] { fused(deep, chunk = 3).collect() }
@@ -229,6 +203,29 @@ class PipelineSpec extends SparkSpecBase {
     val nilOnly = Seq(Turn("not_numeric", 0, "user",
       "no entities here, just chatter", null, new java.sql.Timestamp(0L))).toDS()
     assert(fused(nilOnly).collect().isEmpty)
+  }
+
+  test("fusedLut is strict: an alias entry outside the TripleDict fails at construction, hit or not") {
+    import spark.implicits._
+    val tagger = Detect.lexiconTagger(spark, Transcripts.aliasRows, Transcripts.tagSet)
+    // no turn mentions either extra entry, so the staged chain's per-mention
+    // raise_error guards would never fire; the fused LUT build still fails
+    val turns = Seq(Turn(f"conv_${1}%08d", 0, "user",
+      "no entities here, just chatter", null, new java.sql.Timestamp(0L))).toDS()
+    def fused(alias: Seq[AliasRow]) =
+      Triples.runFusedDetect(turns, tagger, alias, Transcripts.sameAs,
+        Pipeline.transcriptsDict, Pipeline.transcriptsConvEncodeJvm,
+        Pipeline.transcriptsConvCodec.decode)
+    val e1 = intercept[IllegalArgumentException] {
+      fused(Transcripts.aliasRows :+ AliasRow("Zed Nobody", "ZZZ99", "PER"))
+    }
+    assert(e1.getMessage.contains("canonical_id not in dict: ZZZ99"), e1.getMessage)
+    val e2 = intercept[IllegalArgumentException] {
+      fused(Transcripts.aliasRows :+ AliasRow("Zed Nobody", "PER00", "NOPE"))
+    }
+    assert(e2.getMessage.contains("label not in dict: NOPE"), e2.getMessage)
+    // the dictionary's own alias rows build, and the turn runs
+    assert(fused(Transcripts.aliasRows).collect().isEmpty)
   }
 
   test("TripleDict entity gate fails LOUDLY past MaxEntities (driver-memory bound)") {
@@ -305,15 +302,9 @@ class PipelineSpec extends SparkSpecBase {
       .sortBy(t => (t.conv_id, t.turn_idx, t.subj, t.pred, t.obj))
     def got(t: org.apache.spark.sql.Dataset[Triple]) =
       t.collect().toSeq.sortBy(t => (t.conv_id, t.turn_idx, t.subj, t.pred, t.obj))
-    val codec32 = Pipeline.transcriptsConvCodec
-    val codec64 = codec32.copy(fits32 = false)
     for (chunk <- Seq(Triples.DefaultChunkTurns, 7, 4, 3)) {
       assert(got(Triples.runEncodedSortedRules(canon, dict, chunk,
-        Some(codec32), rules2)) == expect, s"packed32 k=2 chunkTurns=$chunk")
-      assert(got(Triples.runEncodedSortedRules(canon, dict, chunk,
-        Some(codec64), rules2)) == expect, s"codec64 k=2 chunkTurns=$chunk")
-      assert(got(Triples.runEncodedSortedRules(canon, dict, chunk,
-        None, rules2)) == expect, s"string-key k=2 chunkTurns=$chunk")
+        Pipeline.transcriptsConvCodec, rules2)) == expect, s"packed32 k=2 chunkTurns=$chunk")
       assert(got(Triples.runEncodedSortedHashedRules(canon, dict, chunk,
         rules2)) == expect, s"hashed k=2 chunkTurns=$chunk")
     }
@@ -323,18 +314,34 @@ class PipelineSpec extends SparkSpecBase {
   private def msgs(t: Throwable): Seq[String] =
     if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
 
+  /** The two packed sorted exchanges; both encode through `packedMentions`,
+    * so each of its loud guards must fire on either path.
+    */
+  private def packedPaths(dict: TripleDict, chunk: Int = Triples.DefaultChunkTurns)
+      : Seq[(String, org.apache.spark.sql.Dataset[CanonMention] => org.apache.spark.sql.Dataset[Triple])] =
+    Seq("packed32" -> (c => Triples.runEncodedSorted(c, dict, Pipeline.transcriptsConvCodec, chunk)),
+      "hashed" -> (c => Triples.runEncodedSortedHashed(c, dict, chunk)))
+
+  /** Runs `canon` through both packed paths; each must abort naming `msg`. */
+  private def assertBothAbort(canon: org.apache.spark.sql.Dataset[CanonMention],
+      dict: TripleDict, msg: String, chunk: Int = Triples.DefaultChunkTurns): Unit =
+    for ((name, path) <- packedPaths(dict, chunk)) {
+      val e = intercept[Exception] { path(canon).collect() }
+      assert(msgs(e).exists(_.contains(msg)), s"$name got: ${msgs(e)}")
+    }
+
   test("conv codec fails LOUDLY on an id its encoder cannot parse") {
     import spark.implicits._
     val canon = Seq(
       CanonMention("not_numeric", 0, 0, 3, "PER", "x", "PER00", "PER00")).toDS()
     val e = intercept[Exception] {
-      Triples.runEncoded(canon, Pipeline.transcriptsDict,
-        convCodec = Some(Pipeline.transcriptsConvCodec)).collect()
+      Triples.runEncodedSorted(canon, Pipeline.transcriptsDict,
+        Pipeline.transcriptsConvCodec).collect()
     }
     assert(msgs(e).exists(_.contains("convCodec failed")), s"got: ${msgs(e)}")
   }
 
-  test("fits32 codec fails LOUDLY on a conv key ≥ 2^32 (would alias another conversation)") {
+  test("conv codec fails LOUDLY on a conv key ≥ 2^32 (would alias another conversation)") {
     import spark.implicits._
     // conv_4294967296 parses (10 digits, no leading zero) but exceeds 32
     // bits — the Packed32 layout must abort, never truncate into a
@@ -343,12 +350,12 @@ class PipelineSpec extends SparkSpecBase {
       CanonMention("conv_4294967296", 0, 0, 3, "PER", "x", "PER00", "PER00")).toDS()
     val e = intercept[Exception] {
       Triples.runEncodedSorted(canon, Pipeline.transcriptsDict,
-        convCodec = Some(Pipeline.transcriptsConvCodec)).collect()
+        Pipeline.transcriptsConvCodec).collect()
     }
-    assert(msgs(e).exists(_.contains("fits32 violated")), s"got: ${msgs(e)}")
-    // the SAME corpus is served fine by the 64-bit layout
-    val ok = Triples.runEncodedSorted(canon, Pipeline.transcriptsDict,
-      convCodec = Some(Pipeline.transcriptsConvCodec.copy(fits32 = false))).collect()
+    assert(msgs(e).exists(_.contains("use Triples.runEncodedSortedHashed")),
+      s"got: ${msgs(e)}")
+    // the SAME corpus is served fine by the hashed layout the message names
+    val ok = Triples.runEncodedSortedHashed(canon, Pipeline.transcriptsDict).collect()
     assert(ok.isEmpty) // one lone PER mention emits no triples — but it ran
   }
 
@@ -358,16 +365,7 @@ class PipelineSpec extends SparkSpecBase {
     // chunk size, a turn index past chunkTurns·2^15 must abort, not wrap
     val canon = Seq(
       CanonMention(f"conv_${7}%08d", 3 * 32768, 0, 3, "PER", "x", "PER00", "PER00")).toDS()
-    val e1 = intercept[Exception] {
-      Triples.runEncodedSorted(canon, Pipeline.transcriptsDict, chunkTurns = 3,
-        convCodec = Some(Pipeline.transcriptsConvCodec)).collect()
-    }
-    assert(msgs(e1).exists(_.contains("turn_idx ≥ chunkTurns")), s"got: ${msgs(e1)}")
-    val e2 = intercept[Exception] {
-      Triples.runEncodedSortedHashed(canon, Pipeline.transcriptsDict,
-        chunkTurns = 3).collect()
-    }
-    assert(msgs(e2).exists(_.contains("turn_idx ≥ chunkTurns")), s"got: ${msgs(e2)}")
+    assertBothAbort(canon, Pipeline.transcriptsDict, "turn_idx ≥ chunkTurns", chunk = 3)
     // regression: the OVERLAP COPY's chunk+1 must also fit 15 bits — turn
     // chunkTurns·2^15 − k sits in the last chunk's overlap window, whose
     // copy would compute chunk 2^15 and carry into the conv-key bits,
@@ -376,34 +374,15 @@ class PipelineSpec extends SparkSpecBase {
     val boundary = Seq(
       CanonMention(f"conv_${7}%08d", 3 * 32768 - 1, 0, 3, "PER", "x",
         "PER00", "PER00")).toDS()
-    val e3 = intercept[Exception] {
-      Triples.runEncodedSorted(boundary, Pipeline.transcriptsDict, chunkTurns = 3,
-        convCodec = Some(Pipeline.transcriptsConvCodec)).collect()
-    }
-    assert(msgs(e3).exists(_.contains("turn_idx ≥ chunkTurns")), s"got: ${msgs(e3)}")
-    val e4 = intercept[Exception] {
-      Triples.runEncodedSortedHashed(boundary, Pipeline.transcriptsDict,
-        chunkTurns = 3).collect()
-    }
-    assert(msgs(e4).exists(_.contains("turn_idx ≥ chunkTurns")), s"got: ${msgs(e4)}")
-    // the 64-bit and string layouts carry the same turn fine (32-bit chunk)
-    assert(Triples.runEncodedSorted(canon, Pipeline.transcriptsDict, chunkTurns = 3,
-      convCodec = Some(Pipeline.transcriptsConvCodec.copy(fits32 = false)))
-      .collect().isEmpty)
-    assert(Triples.runEncodedSorted(canon, Pipeline.transcriptsDict, chunkTurns = 3,
-      convCodec = None).collect().isEmpty)
+    assertBothAbort(boundary, Pipeline.transcriptsDict, "turn_idx ≥ chunkTurns", chunk = 3)
   }
 
   test("encoded path fails LOUDLY on a canonical_id missing from the dict") {
     import spark.implicits._
     val canon = Seq(
-      CanonMention("c1", 0, 0, 3, "PER", "x", "PER00", "PER00"),
-      CanonMention("c1", 0, 5, 8, "PER", "x", "ZZZ99", "ZZZ99")).toDS()
-    val dict = TripleDict(Seq("PER"), Seq("PER00"))
-    val e = intercept[Exception] {
-      Triples.runEncoded(canon, dict).collect()
-    }
-    assert(msgs(e).exists(_.contains("canonical_id not in dict")), s"got: ${msgs(e)}")
+      CanonMention(f"conv_${1}%08d", 0, 0, 3, "PER", "x", "PER00", "PER00"),
+      CanonMention(f"conv_${1}%08d", 0, 5, 8, "PER", "x", "ZZZ99", "ZZZ99")).toDS()
+    assertBothAbort(canon, TripleDict(Seq("PER"), Seq("PER00")), "canonical_id not in dict")
   }
 
   test("encoded path fails LOUDLY on a negative mention start (corrupt upstream row)") {
@@ -411,10 +390,8 @@ class PipelineSpec extends SparkSpecBase {
     // a negative start would otherwise pack into the long's high bits and
     // silently corrupt sort order + dedup — must hit the raise_error guard
     val canon = Seq(
-      CanonMention("c1", 0, -1, 3, "PER", "x", "PER00", "PER00")).toDS()
-    val dict = TripleDict(Seq("PER"), Seq("PER00"))
-    val e = intercept[Exception] { Triples.runEncoded(canon, dict).collect() }
-    assert(msgs(e).exists(_.contains("start outside")), s"got: ${msgs(e)}")
+      CanonMention(f"conv_${1}%08d", 0, -1, 3, "PER", "x", "PER00", "PER00")).toDS()
+    assertBothAbort(canon, TripleDict(Seq("PER"), Seq("PER00")), "start outside")
   }
 
   test("encoded path fails LOUDLY on a negative turn_idx (corrupt upstream row)") {
@@ -423,12 +400,8 @@ class PipelineSpec extends SparkSpecBase {
     // (chunk asc, turn asc) only for non-negative turns — a corrupt negative
     // index must abort, not silently mis-sort the conversation
     val canon = Seq(
-      CanonMention("c1", -3, 0, 3, "PER", "x", "PER00", "PER00")).toDS()
-    val dict = TripleDict(Seq("PER"), Seq("PER00"))
-    val e = intercept[Exception] {
-      Triples.runEncodedSorted(canon, dict).collect()
-    }
-    assert(msgs(e).exists(_.contains("negative turn_idx")), s"got: ${msgs(e)}")
+      CanonMention(f"conv_${1}%08d", -3, 0, 3, "PER", "x", "PER00", "PER00")).toDS()
+    assertBothAbort(canon, TripleDict(Seq("PER"), Seq("PER00")), "negative turn_idx")
   }
 
   test("property: chunked ≡ window ≡ join on random sparse corpora × random chunk sizes") {
@@ -456,23 +429,13 @@ class PipelineSpec extends SparkSpecBase {
       assert(sorted(Triples.run(canon, chunkTurns = chunk)) == viaWindow,
         s"trial $trial chunkTurns=$chunk diverged")
       assert(sorted(Triples.runJoinBased(canon)) == viaWindow, s"trial $trial join diverged")
-      // encoded path: dict covers every id the random generator can emit
+      // sorted walker: both wire layouts (packed32, hashed) see every random
+      // corpus; the dict covers every id the random generator can emit
       val dict = TripleDict(labels.toSeq,
         for (l <- labels.toSeq; i <- 0 until 5) yield s"$l$i")
-      assert(sorted(Triples.runEncoded(canon, dict, chunkTurns = chunk)) == viaWindow,
-        s"trial $trial encoded chunkTurns=$chunk diverged")
-      // sorted walker: roll a random wire layout each trial (string /
-      // packed32 / codec64 / hashed) so every layout sees random corpora
-      val sortedGot = rnd.nextInt(4) match {
-        case 0 => Triples.runEncodedSorted(canon, dict, chunkTurns = chunk)
-        case 1 => Triples.runEncodedSorted(canon, dict, chunkTurns = chunk,
-          convCodec = Some(Pipeline.transcriptsConvCodec)) // fits32 → Packed32
-        case 2 => Triples.runEncodedSorted(canon, dict, chunkTurns = chunk,
-          convCodec = Some(Pipeline.transcriptsConvCodec.copy(fits32 = false)))
-        case 3 => Triples.runEncodedSortedHashed(canon, dict, chunkTurns = chunk)
-      }
-      assert(sorted(sortedGot) == viaWindow,
-        s"trial $trial sorted-exchange chunkTurns=$chunk diverged")
+      for ((name, path) <- packedPaths(dict, chunk))
+        assert(sorted(path(canon)) == viaWindow,
+          s"trial $trial $name chunkTurns=$chunk diverged")
     }
   }
 
@@ -549,8 +512,7 @@ class PipelineSpec extends SparkSpecBase {
     assert(chunked.exists(_.conv_id == "huge") && chunked.exists(_.conv_id == "c0"))
     val dict = TripleDict(Seq("PER"),
       (0 until 7).map(i => s"P$i") ++ (0 until 60).map(i => s"Q$i"))
-    assert(sorted(Triples.runEncoded(canon, dict, chunkTurns = 50)) == chunked)
-    assert(sorted(Triples.runEncodedSorted(canon, dict, chunkTurns = 50)) == chunked)
+    assert(sorted(Triples.runEncodedSortedHashed(canon, dict, chunkTurns = 50)) == chunked)
   }
 
   test("canonicalization resolves sibling org ids to component min") {

@@ -66,38 +66,37 @@ class PlansSpec extends SparkSpecBase {
     assert(nEx == 1, s"expected exactly 1 exchange, got $nEx:\n$p")
   }
 
-  test("encoded triple assembly: ONE shuffle exchange of packed longs, dict joins broadcast") {
-    val canon = (0 until 40).map(i =>
-      CanonMention(s"c${i % 4}", i / 4, 0, 5, "PER", "x", s"PER$i", s"PER$i")).toDS()
-    val dict = TripleDict(Seq("PER"), (0 until 40).map(i => s"PER$i"))
-    val p = plan(Triples.runEncoded(canon, dict, chunkTurns = 2).toDF())
-    // the entity-rank encode must be a broadcast hash join (the mention side
-    // never shuffles for it), and the assembly itself must keep the single
-    // hash(conv_id, chunk) exchange — now carrying 8-byte longs per mention
-    // instead of ~40-byte string structs
-    assert(p.contains("BroadcastHashJoin"), s"dict encode must broadcast:\n$p")
-    assert(!p.contains("SortMergeJoin"), s"no shuffle join allowed:\n$p")
-    val nShuffle = "Exchange hashpartitioning".r.findAllIn(p).length
-    assert(nShuffle == 1, s"expected exactly 1 shuffle exchange, got $nShuffle:\n$p")
-    // the exchanged mention column is the packed long, not the raw strings
-    assert(p.contains("_m"), s"packed column missing from plan:\n$p")
-  }
-
   test("sorted-exchange triple assembly: ONE shuffle, no window, partition-local sort") {
     val canon = (0 until 40).map(i =>
-      CanonMention(s"c${i % 4}", i / 4, 0, 5, "PER", "x", s"PER$i", s"PER$i")).toDS()
+      CanonMention(f"conv_${i % 4}%08d", i / 4, 0, 5, "PER", "x", s"PER$i", s"PER$i")).toDS()
     val dict = TripleDict(Seq("PER"), (0 until 40).map(i => s"PER$i"))
-    val p = plan(Triples.runEncodedSorted(canon, dict, chunkTurns = 2).toDF())
-    // same single hash(conv key, chunk) exchange as runEncoded, but the
-    // grouping/ordering/lag machinery is gone: no window, no aggregation —
-    // just a partition-local sort feeding the walker. The sort must NOT be
-    // global (that would add a range exchange).
-    assert(p.contains("BroadcastHashJoin"), s"dict encode must broadcast:\n$p")
-    assert(!p.contains("SortMergeJoin"), s"no shuffle join allowed:\n$p")
-    assert(!p.contains("Window"), s"sorted path must not window:\n$p")
-    assert(!p.contains("rangepartitioning"), s"sort must be partition-local:\n$p")
-    val nShuffle = "Exchange hashpartitioning".r.findAllIn(p).length
-    assert(nShuffle == 1, s"expected exactly 1 shuffle exchange, got $nShuffle:\n$p")
+    val turns = (0 until 8).map(i => Turn(f"conv_${i % 4}%08d", i / 4, "user",
+      "Alice Varga just joined Acme Corp", null, new java.sql.Timestamp(0L))).toDS()
+    val tagger = Detect.lexiconTagger(spark, Transcripts.aliasRows, Transcripts.tagSet)
+    val fused = plan(Triples.runFusedDetect(turns, tagger, Transcripts.aliasRows,
+      Transcripts.sameAs, Pipeline.transcriptsDict, Pipeline.transcriptsConvEncodeJvm,
+      Pipeline.transcriptsConvCodec.decode, chunkTurns = 2).toDF())
+    val packed32 = plan(Triples.runEncodedSorted(canon, dict,
+      Pipeline.transcriptsConvCodec, chunkTurns = 2).toDF())
+    val hashed = plan(Triples.runEncodedSortedHashed(canon, dict, chunkTurns = 2).toDF())
+    // every production layout: ONE hash(conv key, chunk) exchange, and the
+    // grouping/ordering/lag machinery is a partition-local sort feeding the
+    // walker — no window, no aggregation, no shuffle join. The sort must
+    // NOT be global (that would add a range exchange).
+    for ((name, p) <- Seq("fused" -> fused, "packed32" -> packed32, "hashed" -> hashed)) {
+      assert(!p.contains("SortMergeJoin"), s"$name: no shuffle join allowed:\n$p")
+      assert(!p.contains("Window"), s"$name: sorted path must not window:\n$p")
+      assert(!p.contains("rangepartitioning"), s"$name: sort must be partition-local:\n$p")
+      val nShuffle = "Exchange hashpartitioning".r.findAllIn(p).length
+      assert(nShuffle == 1, s"$name: expected exactly 1 shuffle exchange, got $nShuffle:\n$p")
+    }
+    // the two paths that encode canon rows: the entity-rank encode is a
+    // broadcast hash join (the mention side never shuffles for it), and the
+    // exchanged mention column is the packed long, not the raw strings
+    for ((name, p) <- Seq("packed32" -> packed32, "hashed" -> hashed)) {
+      assert(p.contains("BroadcastHashJoin"), s"$name: dict encode must broadcast:\n$p")
+      assert(p.contains("_m"), s"$name: packed column missing from plan:\n$p")
+    }
   }
 
   test("brute-force top-k broadcasts the query side, not the corpus") {
