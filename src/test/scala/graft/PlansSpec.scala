@@ -66,36 +66,50 @@ class PlansSpec extends SparkSpecBase {
     assert(nEx == 1, s"expected exactly 1 exchange, got $nEx:\n$p")
   }
 
-  test("sorted-exchange triple assembly: ONE shuffle, no window, partition-local sort") {
+  /** Plans of the two layouts that encode canon rows: Packed32 (with the
+    * transcripts conv codec) and hashed conv keys. */
+  private def encodedPlans(): Seq[(String, String)] = {
     val canon = (0 until 40).map(i =>
       CanonMention(f"conv_${i % 4}%08d", i / 4, 0, 5, "PER", "x", s"PER$i", s"PER$i")).toDS()
     val dict = TripleDict(Seq("PER"), (0 until 40).map(i => s"PER$i"))
+    Seq(
+      "packed32" -> plan(Triples.runEncodedSorted(canon, dict,
+        Pipeline.transcriptsConvCodec, chunkTurns = 2).toDF()),
+      "hashed" -> plan(Triples.runEncodedSortedHashed(canon, dict, chunkTurns = 2).toDF()))
+  }
+
+  test("encoded triple assembly: ONE shuffle exchange of packed longs, dict joins broadcast") {
+    // the entity-rank encode must be a broadcast hash join (the mention side
+    // never shuffles for it), and the assembly itself must keep the single
+    // hash(conv key, chunk) exchange — carrying 8-byte longs per mention
+    // instead of ~40-byte string structs
+    for ((name, p) <- encodedPlans()) {
+      assert(p.contains("BroadcastHashJoin"), s"$name: dict encode must broadcast:\n$p")
+      assert(!p.contains("SortMergeJoin"), s"$name: no shuffle join allowed:\n$p")
+      val nShuffle = "Exchange hashpartitioning".r.findAllIn(p).length
+      assert(nShuffle == 1, s"$name: expected exactly 1 shuffle exchange, got $nShuffle:\n$p")
+      // the exchanged mention column is the packed long, not the raw strings
+      assert(p.contains("_m"), s"$name: packed column missing from plan:\n$p")
+    }
+  }
+
+  test("sorted-exchange triple assembly: ONE shuffle, no window, partition-local sort") {
     val turns = (0 until 8).map(i => Turn(f"conv_${i % 4}%08d", i / 4, "user",
       "Alice Varga just joined Acme Corp", null, new java.sql.Timestamp(0L))).toDS()
     val tagger = Detect.lexiconTagger(spark, Transcripts.aliasRows, Transcripts.tagSet)
     val fused = plan(Triples.runFusedDetect(turns, tagger, Transcripts.aliasRows,
       Transcripts.sameAs, Pipeline.transcriptsDict, Pipeline.transcriptsConvEncodeJvm,
       Pipeline.transcriptsConvCodec.decode, chunkTurns = 2).toDF())
-    val packed32 = plan(Triples.runEncodedSorted(canon, dict,
-      Pipeline.transcriptsConvCodec, chunkTurns = 2).toDF())
-    val hashed = plan(Triples.runEncodedSortedHashed(canon, dict, chunkTurns = 2).toDF())
     // every production layout: ONE hash(conv key, chunk) exchange, and the
     // grouping/ordering/lag machinery is a partition-local sort feeding the
     // walker — no window, no aggregation, no shuffle join. The sort must
     // NOT be global (that would add a range exchange).
-    for ((name, p) <- Seq("fused" -> fused, "packed32" -> packed32, "hashed" -> hashed)) {
+    for ((name, p) <- ("fused" -> fused) +: encodedPlans()) {
       assert(!p.contains("SortMergeJoin"), s"$name: no shuffle join allowed:\n$p")
       assert(!p.contains("Window"), s"$name: sorted path must not window:\n$p")
       assert(!p.contains("rangepartitioning"), s"$name: sort must be partition-local:\n$p")
       val nShuffle = "Exchange hashpartitioning".r.findAllIn(p).length
       assert(nShuffle == 1, s"$name: expected exactly 1 shuffle exchange, got $nShuffle:\n$p")
-    }
-    // the two paths that encode canon rows: the entity-rank encode is a
-    // broadcast hash join (the mention side never shuffles for it), and the
-    // exchanged mention column is the packed long, not the raw strings
-    for ((name, p) <- Seq("packed32" -> packed32, "hashed" -> hashed)) {
-      assert(p.contains("BroadcastHashJoin"), s"$name: dict encode must broadcast:\n$p")
-      assert(p.contains("_m"), s"$name: packed column missing from plan:\n$p")
     }
   }
 
