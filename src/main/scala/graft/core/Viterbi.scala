@@ -184,10 +184,19 @@ object Viterbi {
 
   /** [[decodeScratch]] specialized to a [[SparseBmes]] matrix — identical
     * output (see the equivalence precondition on [[SparseBmes]]; callers
-    * enforce the emission-mass bound). `s.C` must equal the matrix's C.
+    * enforce the emission-mass bound, `seed` included). `s.C` must equal the
+    * matrix's C.
+    *
+    * @param seed score added to the START column: 0f decodes a whole
+    *             sequence; a window of a longer decode passes that decode's
+    *             running score at the position before the window, so float
+    *             rounding, and with it every exact tie, matches the whole
+    *             decode (`LexiconCrfTagger.decodeInto` has the proof)
+    * @return the STOP max, the best path's score
     */
-  def decodeScratchSparse(s: Scratch, L: Int, sp: SparseBmes): Unit = {
-    if (L == 0) return
+  def decodeScratchSparse(s: Scratch, L: Int, sp: SparseBmes,
+                          seed: Float = 0f): Float = {
+    if (L == 0) return seed
     val C = s.C
     val em = s.emissions
     val bps = s.bps
@@ -200,7 +209,7 @@ object Viterbi {
     var next = s.next
     var c = 0
     while (c < C) { // t = 0: dense START init, same values as decodeScratch
-      maxScore(c) = sp.startScore(c) + em(c)
+      maxScore(c) = seed + sp.startScore(c) + em(c)
       c += 1
     }
     // back-pointers at stride R, not C: every tag in a predecessor row
@@ -254,6 +263,7 @@ object Viterbi {
       t -= 1
     }
     s.path(0) = cur
+    best
   }
 
   /** Score of a given path under (emissions, transitions) incl. START/STOP —

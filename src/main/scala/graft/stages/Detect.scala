@@ -1,8 +1,11 @@
 package graft.stages
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.{StringType, TimestampType}
 import org.apache.spark.util.LongAccumulator
+import scala.collection.mutable.ListBuffer
 import graft.core._
 
 /** Mention tagger seam — the pipeline's equivalent of the reference predict
@@ -50,6 +53,11 @@ final class LexiconCrfTagger(trie: Trie, dict: Map[String, String],
     */
   @transient private lazy val sparseTrans: Viterbi.SparseBmes =
     Viterbi.SparseBmes.build(transitions).orNull
+  /** Overlap windows may be decoded alone (proof in `decodeInto`) only
+    * over a sparse matrix whose START column is 0/`Impossible` too.
+    */
+  @transient private lazy val windowed: Boolean = sparseTrans != null &&
+    sparseTrans.startScore.forall(v => v == 0f || v == Viterbi.Impossible)
   private val oIdx = tagSet.indexOf("O")
   // per-label precomputed BMES tag-index rows: bIdx(label), i/mIdx, eIdx,
   // sIdx. Middle tags may be named I- (this corpus) or M- (the reference's
@@ -88,15 +96,21 @@ final class LexiconCrfTagger(trie: Trie, dict: Map[String, String],
   private val typeArr: Array[String] = tagSet.map(Tags.typeOf).toArray
   @transient private lazy val scratch =
     ThreadLocal.withInitial[DetectScratch](() => new DetectScratch(256, C))
-  /** Test hook: force the Viterbi path even for conflict-free turns, so
-    * equivalence tests can compare the direct span emit against the decode
-    * it claims to equal. Never set in production.
+  /** Test hook: force the full-turn Viterbi decode for every voted turn,
+    * so equivalence tests can compare the direct and window paths against
+    * the decode they claim to equal. Never set in production.
     */
   @transient private[graft] var disableDirect = false
-  /** Turns served by the conflict-free direct path (live telemetry +
-    * positive control for tests — proves the fast path actually fires).
+  /** Turns served by the conflict-free direct path, with no decode at all
+    * (live telemetry + positive control for tests — proves the fast path
+    * actually fires).
     */
   @transient private[graft] lazy val directTurns = new java.util.concurrent.atomic.LongAdder
+  /** Positions Viterbi-decoded: the overlap windows, or whole turns where
+    * the full decode runs (live telemetry + positive control for the
+    * window path).
+    */
+  @transient private[graft] lazy val decodedPositions = new java.util.concurrent.atomic.LongAdder
 
   def tagBatch(texts: Seq[String]): Seq[Array[String]] = texts.map(tagOne)
 
@@ -117,7 +131,8 @@ final class LexiconCrfTagger(trie: Trie, dict: Map[String, String],
     val s = scratch.get() // one ThreadLocal probe per turn, shared with decode
     val n = decodeInto(text, s)
     if (n <= 0) return Nil // empty text, or the zero-vote all-O fast path
-    if (s.direct) {
+    if (s.full) return pathSpans(text, s.vit.path, 0, n, ListBuffer.empty).toList
+    if (s.nWin == 0) {
       // conflict-free turns: the spans ARE the collected words (proof in
       // decodeInto). Surfaces reuse the dictionary-owned word string — by
       // trie-match construction it equals text.substring(start, end).
@@ -126,15 +141,40 @@ final class LexiconCrfTagger(trie: Trie, dict: Map[String, String],
       // the old ListBuffer append — without the buffer or the toList copy.
       var out: List[Span] = Nil
       var w = s.nWords - 1
-      while (w >= 0) {
-        val st = s.starts(w); val word = s.words(w)
-        out = Span(st, st + word.length, typeArr(s.rows(w)(0)), word) :: out
-        w -= 1
-      }
+      while (w >= 0) { out = directSpan(s, w) :: out; w -= 1 }
       return out
     }
-    val path = s.vit.path
-    val out = scala.collection.mutable.ListBuffer.empty[Span]
+    // windowed turns: words outside the windows are direct spans, each
+    // window's spans come from its decoded tags, in ascending start order
+    val out = ListBuffer.empty[Span]
+    var w = 0
+    var k = 0
+    while (w < s.nWords) {
+      if (k < s.nWin && s.starts(w) >= s.winStart(k)) {
+        val end = s.winEnd(k)
+        pathSpans(text, s.path, s.winStart(k), end, out)
+        while (w < s.nWords && s.starts(w) < end) w += 1
+        k += 1
+      } else {
+        out += directSpan(s, w)
+        w += 1
+      }
+    }
+    out.toList
+  }
+
+  private def directSpan(s: DetectScratch, w: Int): Span = {
+    val st = s.starts(w); val word = s.words(w)
+    Span(st, st + word.length, typeArr(s.rows(w)(0)), word)
+  }
+
+  /** label.py's span machine over decoded tags `path[from, to)`, appending
+    * to `out`; `to` acts as the virtual trailing "B-" sentinel. Exact for a
+    * window as for a whole turn: a window is bounded by O tags (or the text
+    * ends), which close and clear the machine just as the sentinel does.
+    */
+  private def pathSpans(text: String, path: Array[Int], from: Int, to: Int,
+                        out: ListBuffer[Span]): ListBuffer[Span] = {
     // The reference machine's word buffer is ALWAYS a contiguous text
     // slice: it clears at every B/O/S and appends every other char, so its
     // content is text[wordStart, close) where wordStart is the first
@@ -144,14 +184,14 @@ final class LexiconCrfTagger(trie: Trie, dict: Map[String, String],
     var curLabel: String = null
     var start = -1
     var wordStart = -1
-    var i = 0
-    while (i <= n) { // i == n is the virtual trailing "B-" sentinel
-      val head = if (i < n) headOf(path(i)) else 'B'
+    var i = from
+    while (i <= to) { // i == to is the virtual trailing "B-" sentinel
+      val head = if (i < to) headOf(path(i)) else 'B'
       if (head == 'B' || head == 'O' || head == 'S') {
         if (curLabel != null) out += Span(start, i, curLabel, text.substring(wordStart, i))
         wordStart = -1; curLabel = null; start = -1 // the unconditional word.clear()
       }
-      if (i < n) {
+      if (i < to) {
         if (head == 'B' || head == 'S' ||
             ((head == 'M' || head == 'I') && curLabel == null)) {
           curLabel = typeArr(path(i)); start = i
@@ -161,7 +201,7 @@ final class LexiconCrfTagger(trie: Trie, dict: Map[String, String],
       }
       i += 1
     }
-    out.toList
+    out
   }
 
   def tagOne(text: String): Array[String] = {
@@ -174,24 +214,32 @@ final class LexiconCrfTagger(trie: Trie, dict: Map[String, String],
       return out
     }
     val out = new Array[String](n)
-    if (s.direct) { // O everywhere except the collected words' BMES tags
-      java.util.Arrays.fill(out.asInstanceOf[Array[AnyRef]], tagSet(oIdx))
-      var w = 0
-      while (w < s.nWords) {
-        val st = s.starts(w); val len = s.words(w).length; val r = s.rows(w)
-        if (len == 1) out(st) = tagSet(r(3))
-        else {
-          out(st) = tagSet(r(0))
-          var k = 1
-          while (k < len - 1) { out(st + k) = tagSet(r(1)); k += 1 }
-          out(st + len - 1) = tagSet(r(2))
-        }
-        w += 1
-      }
+    if (s.full) {
+      var i = 0
+      while (i < n) { out(i) = tagSet(s.vit.path(i)); i += 1 }
       return out
     }
-    var i = 0
-    while (i < n) { out(i) = tagSet(s.vit.path(i)); i += 1 }
+    // O everywhere, the collected words' BMES tags, then each window's
+    // decoded tags over the words it holds
+    java.util.Arrays.fill(out.asInstanceOf[Array[AnyRef]], tagSet(oIdx))
+    var w = 0
+    while (w < s.nWords) {
+      val st = s.starts(w); val len = s.words(w).length; val r = s.rows(w)
+      if (len == 1) out(st) = tagSet(r(3))
+      else {
+        out(st) = tagSet(r(0))
+        var k = 1
+        while (k < len - 1) { out(st + k) = tagSet(r(1)); k += 1 }
+        out(st + len - 1) = tagSet(r(2))
+      }
+      w += 1
+    }
+    var k = 0
+    while (k < s.nWin) {
+      var i = s.winStart(k)
+      while (i < s.winEnd(k)) { out(i) = tagSet(s.path(i)); i += 1 }
+      k += 1
+    }
     out
   }
 
@@ -204,7 +252,7 @@ final class LexiconCrfTagger(trie: Trie, dict: Map[String, String],
     *      allowed transitions scoring 0 (`Viterbi.bmesTransitions`), the
     *      all-O path is the UNIQUE argmax (any non-O position strictly
     *      loses that position's 0.1).
-    *   2. **Voted words pairwise NON-overlapping** (`s.direct`) → the
+    *   2. **Voted words pairwise NON-overlapping** (`nWin == 0`) → the
     *      emission fill AND the Viterbi decode AND the span walk are all
     *      skipped; consumers emit straight from the collected word list.
     *      Proof the decode could not differ: each covered position has
@@ -217,12 +265,51 @@ final class LexiconCrfTagger(trie: Trie, dict: Map[String, String],
     *      assignment drops ≥ 0.9 at some position or pays a finite
     *      `Impossible` it cannot recover (emissions sum to the argmax
     *      score, < 1e4 apart). No tie-break dependence — DP backtracking
-    *      must return exactly this path. Equivalence is ALSO
-    *      property-tested against the forced-Viterbi path (`disableDirect`)
-    *      including engineered overlaps and demotion cases.
-    *   3. **Overlapping votes** → deferred O(n·C) emission fill, buffered
-    *      votes, sparse-or-dense Viterbi as before (path in
-    *      `scratch.vit.path`).
+    *      must return exactly this path.
+    *   3. **Overlapping votes** → only the overlap windows are decoded
+    *      (`nWin > 0`, tags in `scratch.path`). A window is the extent of
+    *      a maximal run of overlapping or touching words that holds an
+    *      overlap, so an uncovered position (or a text end) borders it on
+    *      each side. Words of runs without overlap emit directly as in 2.
+    *      Each window is sparse-decoded alone, seeded with the whole
+    *      decode's running score R at the position u before it: R starts
+    *      at 0f and changes position by position, +0.1f per uncovered
+    *      position, +1f per directly emitted covered position (case 2's
+    *      argument: the voted cell is the strict max), and it becomes the
+    *      STOP max of each decoded window. Proof that the whole decode's
+    *      path equals the direct tags, O elsewhere and each window's tags:
+    *        a. O is the strict max at an uncovered u. O(u) = R(u−1) + 0.1.
+    *           B/S at u score R(u−1). At u−1 only E/S cells can hold a vote
+    *           (a word covering u−1 ends there), so every B/I/M/E cell at
+    *           u−1 is ≤ an E/S/O cell there ≤ R(u−1), and I/M/E at u,
+    *           which take a max over those, are ≤ R(u−1) too.
+    *        b. So every B/S/O tag at the window start u+1 has the same
+    *           predecessor max, O(u) = R(u), with argmax O. Its cells hold
+    *           R + em exactly, as the seeded START column computes them.
+    *        c. The I/M/E entries at u+1 are dominated by ≈ 0.1: they are
+    *           ≤ R(u−1) + 0 (no word covering u+1 starts before it, so
+    *           they hold no vote) while B-X ≥ R there. Whole decode (a
+    *           finite value) and window (seed + `Impossible`) differ only
+    *           in those cells, which win no max from u+2 on; every later
+    *           cell and back-pointer is bit-identical.
+    *        d. The tie-break at the window edge equals the STOP tie-break:
+    *           the uncovered position after the window (or STOP) takes
+    *           its max over the same E/S/O cells in the same ascending
+    *           order with strict `>`, so the backtrack enters the window
+    *           at the window's own STOP argmax and, by a–c, leaves it
+    *           through O at u.
+    *      Float rounding follows the same operands in the same order, so
+    *      exact score ties break alike; with a 0f START instead of R they
+    *      do not (the tie property in EncodeSpec catches that). Mass bound:
+    *      seed + window mass ≤ the turn-wide bound below, so the sparse
+    *      decode stays exact ([[Viterbi.SparseBmes]]).
+    *   4. **Full decode** (`full`, path in `scratch.vit.path`) → only under
+    *      `disableDirect` (the test reference) or when the turn-wide
+    *      emission-mass guard sends the turn to the dense decode.
+    *
+    * All four are property-tested against the forced full decode
+    * (`disableDirect`), engineered overlaps, demotion and small-alphabet
+    * exact ties included.
     *
     * Walk semantics unchanged (single-char demotion per
     * lexicon_tree.py:94-95: a length-1 match votes only when it is the sole
@@ -233,17 +320,13 @@ final class LexiconCrfTagger(trie: Trie, dict: Map[String, String],
     val n = text.length
     if (n == 0) return 0
     s.vit.ensure(n)
-    s.nWords = 0
-    s.direct = false
+    s.reset()
     // hoisted per turn: the root view (bitset-gated probe — the dominant
     // per-char op) and the trie bounds, so the position loop re-enters no
     // lazy-val accessor and loads no trie field per char
     val rv = trie.rootView
     val minLen = trie.minLen
     val maxDepth = trie.maxDepth
-    var conflictFree = true
-    var maxEnd = 0 // exclusive end of the rightmost voted word so far —
-    // words arrive in ascending start order, so `start < maxEnd` ⇔ overlap
     var i = 0
     while (i < n) {
       var ptr = rv.child(text.charAt(i))
@@ -256,12 +339,7 @@ final class LexiconCrfTagger(trie: Trie, dict: Map[String, String],
           if (k == 0) soloSingle = ptr.word // defer: demoted unless solo
           else {
             val rows = voteRows.get(ptr.word)
-            if (rows != null) { // dict miss casts no vote (as before)
-              if (i < maxEnd) conflictFree = false
-              val end = i + k + 1
-              if (end > maxEnd) maxEnd = end
-              s.addWord(i, ptr.word, rows)
-            }
+            if (rows != null) s.addWord(i, ptr.word, rows) // dict miss: no vote
           }
         }
         k += 1
@@ -272,60 +350,92 @@ final class LexiconCrfTagger(trie: Trie, dict: Map[String, String],
       }
       if (soloSingle != null && nMatches == 1) {
         val rows = voteRows.get(soloSingle)
-        if (rows != null) {
-          if (i < maxEnd) conflictFree = false
-          if (i + 1 > maxEnd) maxEnd = i + 1
-          s.addWord(i, soloSingle, rows)
-        }
+        if (rows != null) s.addWord(i, soloSingle, rows)
       }
       i += 1
     }
     if (s.nWords == 0) return -n
-    if (conflictFree && !disableDirect) {
-      s.direct = true
-      directTurns.increment()
-      return n
+    s.closeRun()
+    // Sparse decode ≡ dense iff total emission mass stays far below
+    // |Impossible| (Viterbi.SparseBmes doc): mass ≤ 0.1·n + voteMass. The
+    // dense fallback only triggers on ~50k-char turns saturated with votes.
+    val sparseOk = sparseTrans != null && 0.1f * n + s.voteMass < 5000f
+    if (!disableDirect) {
+      if (s.nWin == 0) {
+        directTurns.increment()
+        return n
+      }
+      if (windowed && sparseOk) {
+        decodeWindows(s, n)
+        return n
+      }
     }
-    // conflict path: fill emissions, cast the buffered votes, decode
+    // full decode: fill emissions, cast every buffered vote, decode
+    s.full = true
     val em = s.vit.emissions
     java.util.Arrays.fill(em, 0, n * C, 0f)
     var p = 0
     while (p < n) { em(p * C + oIdx) = 0.1f; p += 1 }
-    var voteMass = 0L // total +1f emission increments — bounds Σ_t max_c em
-    // (Long: an Int could wrap on a ~7M-char match-saturated turn and
-    // silently satisfy the sparse guard with its precondition violated)
     var w = 0
-    while (w < s.nWords) {
-      voteMass += vote(em, s.starts(w), s.words(w), s.rows(w))
-      w += 1
-    }
-    // Sparse decode ≡ dense iff total emission mass stays far below
-    // |Impossible| (Viterbi.SparseBmes doc): mass ≤ 0.1·n + voteMass. The
-    // dense fallback only triggers on ~50k-char turns saturated with votes.
-    if (sparseTrans != null && 0.1f * n + voteMass < 5000f)
-      Viterbi.decodeScratchSparse(s.vit, n, sparseTrans)
-    else
-      Viterbi.decodeScratch(s.vit, n, transitions)
+    while (w < s.nWords) { vote(em, s.starts(w), s.words(w), s.rows(w)); w += 1 }
+    if (sparseOk) Viterbi.decodeScratchSparse(s.vit, n, sparseTrans)
+    else Viterbi.decodeScratch(s.vit, n, transitions)
+    decodedPositions.add(n)
     n
   }
 
-  /** Cast one buffered word's BMES votes; @return the +1f increments cast. */
+  /** Case 3 of `decodeInto`: decode each overlap window alone, seeded with
+    * the whole decode's running score, tags into `s.path` at their turn
+    * offsets.
+    */
+  private def decodeWindows(s: DetectScratch, n: Int): Unit = {
+    s.ensurePath(n)
+    val em = s.vit.emissions
+    var running = 0f
+    var pos = 0 // positions [0, pos) are folded into `running`
+    var w = 0
+    var k = 0
+    while (k < s.nWin) {
+      val ws = s.winStart(k); val we = s.winEnd(k)
+      while (w < s.nWords && s.starts(w) < ws) { // a direct word before ws
+        val st = s.starts(w); val end = st + s.words(w).length
+        while (pos < st) { running += 0.1f; pos += 1 }
+        while (pos < end) { running += 1f; pos += 1 }
+        w += 1
+      }
+      while (pos < ws) { running += 0.1f; pos += 1 }
+      val len = we - ws
+      java.util.Arrays.fill(em, 0, len * C, 0f)
+      var p = 0
+      while (p < len) { em(p * C + oIdx) = 0.1f; p += 1 }
+      while (w < s.nWords && s.starts(w) < we) {
+        vote(em, s.starts(w) - ws, s.words(w), s.rows(w))
+        w += 1
+      }
+      running = Viterbi.decodeScratchSparse(s.vit, len, sparseTrans, running)
+      System.arraycopy(s.vit.path, 0, s.path, ws, len)
+      decodedPositions.add(len)
+      pos = we
+      k += 1
+    }
+  }
+
+  /** Cast one buffered word's BMES votes at `start` into `em`. */
   private def vote(em: Array[Float], start: Int, word: String,
-                   rows: Array[Int]): Int = {
+                   rows: Array[Int]): Unit = {
     val len = word.length
-    if (len == 1) { em(start * C + rows(3)) += 1f; return 1 }
+    if (len == 1) { em(start * C + rows(3)) += 1f; return }
     em(start * C + rows(0)) += 1f
     var k = 1
     while (k < len - 1) { em((start + k) * C + rows(1)) += 1f; k += 1 }
     em((start + len - 1) * C + rows(2)) += 1f
-    len
   }
 }
 
-/** Per-thread detect scratch: the Viterbi buffers plus the walk's collected
-  * dict-hit words (start, dictionary-owned word string, BMES tag rows) and
-  * the direct-path flag. Word buffers grow on demand and are reset per turn
-  * via `nWords = 0`.
+/** Per-thread detect scratch: the Viterbi buffers, the walk's collected
+  * dict-hit words (start, dictionary-owned word string, BMES tag rows), the
+  * overlap windows those words form and the windows' decoded tags (`path`,
+  * at turn offsets). Buffers grow on demand and are reset per turn.
   */
 private[stages] final class DetectScratch(cap0: Int, C: Int) {
   val vit = new Viterbi.Scratch(cap0, C)
@@ -333,16 +443,57 @@ private[stages] final class DetectScratch(cap0: Int, C: Int) {
   var words: Array[String] = new Array(16)
   var rows: Array[Array[Int]] = new Array(16)
   var nWords = 0
-  var direct = false
+  var voteMass = 0L // Σ word lengths: the +1f emission increments. Long:
+  // an Int could wrap on a ~7M-char match-saturated turn and silently
+  // satisfy the sparse guard with its precondition violated
+  var winStart: Array[Int] = new Array(4)
+  var winEnd: Array[Int] = new Array(4)
+  var nWin = 0
+  var path: Array[Int] = new Array(cap0)
+  var full = false // the whole turn was decoded into vit.path
+  // the open run of overlapping or touching words: first start, exclusive
+  // end of its rightmost word, whether two of its words overlap
+  private var runStart = 0
+  private var runEnd = 0
+  private var runOverlaps = false
+
+  def reset(): Unit = {
+    nWords = 0; voteMass = 0L; nWin = 0; full = false; runOverlaps = false
+  }
+
+  /** Buffer a word; words arrive in ascending start order. */
   def addWord(start: Int, word: String, r: Array[Int]): Unit = {
     if (nWords == starts.length) {
       starts = java.util.Arrays.copyOf(starts, nWords * 2)
       words = java.util.Arrays.copyOf(words, nWords * 2)
       rows = java.util.Arrays.copyOf(rows, nWords * 2)
     }
+    val end = start + word.length
+    if (nWords == 0 || start > runEnd) { // a gap: the open run is complete
+      closeRun()
+      runStart = start; runEnd = end; runOverlaps = false
+    } else {
+      if (start < runEnd) runOverlaps = true
+      if (end > runEnd) runEnd = end
+    }
     starts(nWords) = start; words(nWords) = word; rows(nWords) = r
     nWords += 1
+    voteMass += word.length
   }
+
+  /** Record the open run as a window if two of its words overlap. */
+  def closeRun(): Unit = if (runOverlaps) {
+    if (nWin == winStart.length) {
+      winStart = java.util.Arrays.copyOf(winStart, nWin * 2)
+      winEnd = java.util.Arrays.copyOf(winEnd, nWin * 2)
+    }
+    winStart(nWin) = runStart; winEnd(nWin) = runEnd
+    nWin += 1
+    runOverlaps = false
+  }
+
+  def ensurePath(n: Int): Unit =
+    if (n > path.length) path = new Array(math.max(n, path.length * 2))
 }
 
 /** Mention-detection stage: `Dataset[Turn] → Dataset[Mention]`.
@@ -411,11 +562,10 @@ object Detect {
           mentionsOut: Option[LongAccumulator] = None): Dataset[Mention] = {
     val spark = turns.sparkSession
     import spark.implicits._
-    turns.mapPartitions { it =>
-      val tg = tagger.value
+    mapSpans(turns, tagger) { () =>
       val tIn = turnsIn.orNull
       val mOut = mentionsOut.orNull
-      spanPartition(it, tg).flatMap { case (turn, spans) =>
+      (turn: Turn, spans: List[Span]) => {
         if (tIn != null) tIn.add(1)
         if (mOut != null) mOut.add(spans.size)
         // iterator, not map: don't build a second List per turn just to flatten it
@@ -424,6 +574,26 @@ object Detect {
       }
     }
   }
+
+  /** The Dataset entry of the tagger path, shared by `run`,
+    * `Link.runFusedDetect` and `Triples.runFusedDetect`: reads only
+    * `conv_id`, `turn_idx` and `text` (`role`, `tool` and `ts` become
+    * typed nulls, so a columnar scan skips them), and maps every
+    * (turn, spans) pair through the function `perTask` builds once per
+    * task — where a task's memo lives (`Link.Memo`).
+    */
+  private[graft] def mapSpans[U: Encoder](turns: Dataset[Turn],
+      tagger: Broadcast[MentionTagger])(
+      perTask: () => (Turn, List[Span]) => Iterator[U]): Dataset[U] =
+    turns.select(col("conv_id"), col("turn_idx"),
+        lit(null).cast(StringType).as("role"), col("text"),
+        lit(null).cast(StringType).as("tool"),
+        lit(null).cast(TimestampType).as("ts"))
+      .as(Encoders.product[Turn])
+      .mapPartitions { it =>
+        val emit = perTask()
+        spanPartition(it, tagger.value).flatMap { case (turn, spans) => emit(turn, spans) }
+      }
 
   /** Convenience: build the broadcastable sandbox tagger from alias rows. */
   def lexiconTagger(spark: SparkSession, alias: Seq[AliasRow],

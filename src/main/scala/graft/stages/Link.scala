@@ -30,8 +30,58 @@ object Link {
     * String.toLowerCase — the fused paths' LUT keys must match
     * `lower(col("surface"))` byte-for-byte.
     */
-  private[graft] def lowerUtf8(s: String): String =
-    org.apache.spark.unsafe.types.UTF8String.fromString(s).toLowerCase.toString
+  private[graft] def lowerUtf8(s: String): String = {
+    // all-ASCII input (the common case) lowercases A–Z only, which is what
+    // the engine does to ASCII bytes; anything else takes the engine path
+    var upper = false
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c >= 0x80)
+        return org.apache.spark.unsafe.types.UTF8String.fromString(s).toLowerCase.toString
+      if (c >= 'A' && c <= 'Z') upper = true
+      i += 1
+    }
+    if (!upper) return s
+    val cs = s.toCharArray
+    i = 0
+    while (i < cs.length) {
+      if (cs(i) >= 'A' && cs(i) <= 'Z') cs(i) = (cs(i) + ('a' - 'A')).toChar
+      i += 1
+    }
+    new String(cs)
+  }
+
+  /** Entries one task's [[Memo]] holds at most; later misses go to the LUT. */
+  private val MemoEntries = 1 << 14
+
+  /** Per-task memo of an [[aliasLut]]-keyed LUT by (label, surface): a hit
+    * or NIL is resolved once per task, not once per span. A probe costs two
+    * hash probes and no allocation; a direct-path surface is the
+    * dictionary's own `String`, so its hash is cached and equals is an
+    * identity check. A miss builds the (label + NUL + lower(surface)) key.
+    */
+  private[graft] final class Memo[V <: AnyRef](lut: java.util.HashMap[String, V]) {
+    private val byLabel = new java.util.HashMap[String, java.util.HashMap[String, AnyRef]]()
+    private var size = 0
+    /** @return the LUT value, or null for NIL */
+    def apply(label: String, surface: String): V = {
+      var bySurface = byLabel.get(label)
+      if (bySurface == null) {
+        bySurface = new java.util.HashMap[String, AnyRef]()
+        byLabel.put(label, bySurface)
+      }
+      val known = bySurface.get(surface)
+      if (known != null) return (if (known eq Memo.Unlinked) null else known).asInstanceOf[V]
+      val v = lut.get(label + "\u0000" + lowerUtf8(surface))
+      if (size < MemoEntries) {
+        bySurface.put(surface, if (v == null) Memo.Unlinked else v)
+        size += 1
+      }
+      v
+    }
+  }
+  private object Memo { val Unlinked = new Object }
 
   /** Driver-side mirror of `aliasNorm` (the exact-link election below):
     * (label + NUL + lower(surface)) → min(entity_id) under Spark's binary
@@ -67,15 +117,12 @@ object Link {
     val spark = turns.sparkSession
     import spark.implicits._
     val bcLut = spark.sparkContext.broadcast(aliasLut(alias))
-    turns.mapPartitions { it =>
-      val tg = tagger.value
-      val lut = bcLut.value
-      Detect.spanPartition(it, tg).flatMap { case (turn, spans) =>
-        spans.iterator.map { sp =>
-          val eid = lut.get(sp.label + "\u0000" + lowerUtf8(sp.surface))
-          LinkedMention(turn.conv_id, turn.turn_idx, sp.start, sp.end,
-            sp.label, sp.surface, eid, if (eid != null) "exact" else null)
-        }
+    Detect.mapSpans(turns, tagger) { () =>
+      val link = new Memo(bcLut.value)
+      (turn: Turn, spans: List[Span]) => spans.iterator.map { sp =>
+        val eid = link(sp.label, sp.surface)
+        LinkedMention(turn.conv_id, turn.turn_idx, sp.start, sp.end,
+          sp.label, sp.surface, eid, if (eid != null) "exact" else null)
       }
     }
   }

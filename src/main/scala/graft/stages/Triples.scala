@@ -455,7 +455,9 @@ object Triples {
     * tagger's span loop: the Mention/LinkedMention/CanonMention string rows
     * never exist, and the pre-exchange stage serializes two longs per
     * mention. Downstream (exchange, partition sort, streaming walker) is
-    * byte-identical to `runEncodedSorted`'s.
+    * byte-identical to `runEncodedSorted`'s. The stage reads only
+    * `conv_id`, `turn_idx` and `text` (`Detect.mapSpans`), and each task
+    * probes the lookup once per distinct (label, surface) (`Link.Memo`).
     *
     * Semantics are EXACTLY the canonical chain's (equivalence-tested in
     * PipelineSpec against detect→link(exact)→canon→runEncodedSorted):
@@ -497,10 +499,9 @@ object Triples {
     val bcLut = spark.sparkContext.broadcast(fusedLut(alias, sameAsPairs, dict))
     val m = chunkTurns
     val maxTurn = (m.toLong << ChunkBits) - k
-    turns.mapPartitions { it =>
-      val tg = tagger.value
-      val lut = bcLut.value
-      Detect.spanPartition(it, tg).flatMap { case (turn, spans) =>
+    Detect.mapSpans(turns, tagger) { () =>
+      val link = new Link.Memo(bcLut.value)
+      (turn: Turn, spans: List[Span]) => {
         // probe spans first: guards fire per EMITTED mention, exactly like
         // packedMentions' post-filter raise_errors (an all-NIL turn guards
         // nothing there either)
@@ -509,7 +510,7 @@ object Triples {
         var sp = spans
         while (sp.nonEmpty) {
           val s = sp.head
-          val v = lut.get(s.label + "\u0000" + Link.lowerUtf8(s.surface))
+          val v = link(s.label, s.surface)
           if (v != null) { // dictionary miss → NIL → no triple source
             if (s.start < 0 || s.start >= MaxPackedStart)
               throw new IllegalStateException(

@@ -259,6 +259,51 @@ class DetectFastPathSpec extends SparkSpecBase {
     assert(slow.directTurns.sum() == 0, "disableDirect must force Viterbi always")
   }
 
+  test("property: direct and window paths ≡ forced Viterbi on tie-prone small-alphabet lexicons") {
+    // Random lexicons over 1–5 letters make words overlap and touch almost
+    // everywhere, and equal-mass alternative paths (exact score ties) are
+    // common — the case where a window decoded from a 0f START instead of
+    // the whole decode's running score breaks ties differently.
+    val labels = Vector("PER", "ORG", "LOC")
+    val rnd = new scala.util.Random(20261019L)
+    var windowed = 0L
+    (1 to 4000).foreach { lex =>
+      val alphabet = 1 + rnd.nextInt(5)
+      def str(len: Int) = (0 until len).map(_ => ('a' + rnd.nextInt(alphabet)).toChar).mkString
+      val dict = (0 until 1 + rnd.nextInt(8))
+        .map(_ => str(1 + rnd.nextInt(7)) -> labels(rnd.nextInt(labels.length))).toMap
+      val trie = Trie(dict.keys.toSeq)
+      val fast = new LexiconCrfTagger(trie, dict, Transcripts.tagSet)
+      val slow = new LexiconCrfTagger(trie, dict, Transcripts.tagSet)
+      slow.disableDirect = true
+      (1 to 5).foreach { _ =>
+        val t = str(rnd.nextInt(91))
+        assert(fast.spanOne(t) == slow.spanOne(t), s"spans diverged on '$t' with $dict")
+        assert(fast.tagOne(t).sameElements(slow.tagOne(t)), s"tags diverged on '$t' with $dict")
+      }
+      windowed += fast.decodedPositions.sum()
+    }
+    assert(windowed > 0, "the window path must be exercised")
+  }
+
+  test("window path decodes only the overlap: 'Acme Corp' ⊂ 'Acme Corporation' in a long turn") {
+    val aliases = Transcripts.aliasRows
+    val trie = Trie(aliases.map(_.surface))
+    val dict = aliases.map(r => r.surface -> r.label).toMap
+    val fast = new LexiconCrfTagger(trie, dict, Transcripts.tagSet)
+    val slow = new LexiconCrfTagger(trie, dict, Transcripts.tagSet)
+    slow.disableDirect = true
+    val t = "Alice Varga said the board of Acme Corporation met in Berlin on a long rainy day"
+    val spans = fast.spanOne(t)
+    assert(spans == slow.spanOne(t))
+    assert(spans.exists(_.surface == "Acme Corporation"), s"got $spans")
+    val decoded = fast.decodedPositions.sum()
+    assert(decoded >= 2 && decoded <= 16,
+      s"window path decoded $decoded positions of a ${t.length}-char turn")
+    assert(fast.directTurns.sum() == 0, "an overlap turn is not a direct turn")
+    assert(slow.decodedPositions.sum() == t.length, "the reference decodes the whole turn")
+  }
+
   test("property: spanOne ≡ getEntities(tagOne) on random alias/noise mixtures") {
     val aliases = Transcripts.aliasRows
     val tagger = new LexiconCrfTagger(Trie(aliases.map(_.surface)),

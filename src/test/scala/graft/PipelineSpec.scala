@@ -826,6 +826,23 @@ class CanonSpec extends SparkSpecBase {
 }
 
 class LinkSpec extends SparkSpecBase {
+  test("property: Link.lowerUtf8 ≡ the engine's UTF8String.toLowerCase") {
+    import org.apache.spark.unsafe.types.UTF8String
+    // ASCII (the fast path) and every class the engine path must keep:
+    // Latin-1, dotted capital I, capital sigma, surrogate pairs (one with
+    // a lowercase mapping outside the BMP) and a lone surrogate
+    val ascii = (0 until 0x80).map(_.toChar.toString)
+    val other = (0x80 to 0xff).map(_.toChar.toString) ++
+      Seq("\u0130", "\u03a3", "\ud83d\ude00", "\ud801\udc00", "\ud801")
+    val rnd = new scala.util.Random(1019)
+    (1 to 5000).foreach { trial =>
+      val pool = if (trial % 2 == 0) ascii else ascii ++ other
+      val s = (0 until rnd.nextInt(12)).map(_ => pool(rnd.nextInt(pool.length))).mkString
+      assert(Link.lowerUtf8(s) == UTF8String.fromString(s).toLowerCase.toString,
+        s"diverged on '${s.map(c => f"\\u${c.toInt}%04x").mkString}'")
+    }
+  }
+
   test("fuzzy LSH linking catches near-miss surfaces") {
     import spark.implicits._
     val mentions = Seq(

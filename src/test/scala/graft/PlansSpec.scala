@@ -113,6 +113,29 @@ class PlansSpec extends SparkSpecBase {
     }
   }
 
+  test("the tagger entry points read only conv_id, turn_idx and text from parquet") {
+    val d = java.nio.file.Files.createTempDirectory("graft_plan_turns")
+    (0 until 4).map(i => Turn(f"conv_$i%08d", i, "user", "Alice Varga just joined Acme Corp",
+        "search", new java.sql.Timestamp(0L))).toDS()
+      .write.parquet(s"$d/turns")
+    val turns = spark.read.parquet(s"$d/turns").as[Turn]
+    val tagger = Detect.lexiconTagger(spark, Transcripts.aliasRows, Transcripts.tagSet)
+    val plans = Seq(
+      "Triples.runFusedDetect" -> Triples.runFusedDetect(turns, tagger, Transcripts.aliasRows,
+        Transcripts.sameAs, Pipeline.transcriptsDict, Pipeline.transcriptsConvEncodeJvm,
+        Pipeline.transcriptsConvCodec.decode).toDF(),
+      "Link.runFusedDetect" -> Link.runFusedDetect(turns, tagger, Transcripts.aliasRows).toDF(),
+      "Detect.run" -> Detect.run(turns, tagger).toDF())
+    for ((name, df) <- plans) {
+      val schemas = "ReadSchema: struct<[^>]*>".r.findAllIn(plan(df)).toSet
+      assert(schemas == Set("ReadSchema: struct<conv_id:string,turn_idx:int,text:string>"),
+        s"$name reads more than the tagger uses:\n${plan(df)}")
+    }
+    // the projection is exact: the staged chain still sees every mention
+    assert(Detect.run(turns, tagger).count() == 8)
+    graft.io.SnapshotIO.deleteRecursively(d)
+  }
+
   test("brute-force top-k broadcasts the query side, not the corpus") {
     val emb = (0 until 10).map(i => (i.toLong, Array.fill(4)(i.toFloat))).toDF("vec_id", "embedding")
     val p = plan(graft.ops.Similarity.bruteForceTopK(emb.filter($"vec_id" < 2), emb, 3))
