@@ -50,20 +50,6 @@ object Canon {
     */
   def connectedComponentsWithStats(edges0: DataFrame, maxIter: Int = 40,
       maxLocalEdges: Long = DefaultMaxLocalEdges): (DataFrame, Int, Boolean) = {
-    val (comp, rounds, converged, _) =
-      componentsWithKnownSize(edges0, maxIter, maxLocalEdges)
-    (comp, rounds, converged)
-  }
-
-  /** As `connectedComponentsWithStats` plus, when the driver fast path ran,
-    * the EXACT vertex count of the component map (known driver-side at zero
-    * cost). `Canon.run` uses it to skip its broadcast-gate probe job — one
-    * fewer fixed job per pipeline action on dictionary-sized graphs
-    * (VERDICT r6 item 3); `None` on the distributed path, where the probe
-    * remains the cheap gate over checkpointed data.
-    */
-  private def componentsWithKnownSize(edges0: DataFrame, maxIter: Int,
-      maxLocalEdges: Long): (DataFrame, Int, Boolean, Option[Long]) = {
     val spark = edges0.sparkSession
 
     // canonical direction + dedup; drop self loops
@@ -120,8 +106,8 @@ object Canon {
       // distributed path's min() aggregate uses (equivalence-tested)
       val pairs = edges.collect().map(r => (r.getString(0), r.getString(1)))
       edges.unpersist(false)
-      val (df, nVertices) = localComponents(spark, pairs)
-      return (df, 0, true, Some(nVertices))
+      import spark.implicits._
+      return (localCanonicalMap(pairs.toSeq).toSeq.toDF("id", "canonical_id"), 0, true)
     }
     while (!converged && it < maxIter) {
       // lazy local checkpoint: materialized by the checksum action below, so
@@ -149,26 +135,16 @@ object Canon {
     val roots = edges.select(col("src").as("id"), col("src").as("canonical_id"))
     val comp = asChild.unionAll(roots)
       .groupBy("id").agg(min("canonical_id").as("canonical_id"))
-    (comp, it, converged, None)
-  }
-
-  /** Driver union-find with path halving; canonical id = UTF-8-binary
-    * minimum over the component (same election as the distributed path).
-    */
-  private def localComponents(spark: org.apache.spark.sql.SparkSession,
-                              pairs: Array[(String, String)]): (DataFrame, Long) = {
-    import spark.implicits._
-    val m = localCanonicalMap(pairs.toSeq)
-    (m.toSeq.toDF("id", "canonical_id"), m.size.toLong)
+    (comp, it, converged)
   }
 
   /** Driver union-find with path halving over a dictionary-sized same-as
     * pair list; canonical id = UTF-8-binary minimum over the component (the
     * same election as the distributed path's min() aggregate — equivalence-
-    * tested). Backs the CC fast path above AND the fused detect→packed
-    * pipeline, whose premise is exactly that the dictionary tier (alias
-    * dict + component map) is broadcast-sized. Returns vertex → canonical
-    * for every vertex incident to a pair.
+    * tested). Backs the CC fast path above, `runFusedLinked` and the fused
+    * detect→packed pipeline, whose premise is exactly that the dictionary
+    * tier (alias dict + component map) is broadcast-sized. Returns
+    * vertex → canonical for every vertex incident to a pair.
     */
   private[graft] def localCanonicalMap(pairs: Seq[(String, String)]): Map[String, String] = {
     val parent = scala.collection.mutable.HashMap.empty[String, String]
@@ -224,15 +200,12 @@ object Canon {
     EdgeChecksum(r.getLong(0), r.getDecimal(1), r.getDecimal(2))
   }
 
-  /** Fused canonicalization (round 7) for a DRIVER-SIZED same-as pair list:
-    * one typed map over the linked relation probing the union-find's
-    * canonical map — no CC jobs, no join, no probe. EXACTLY
-    * `run(linked, sameAs.toDF)` for any broadcast-sized graph
-    * (equivalence-tested in PipelineSpec): same union-find + UTF-8-min
-    * election (`localCanonicalMap` backs the CC fast path too), vertices
-    * outside the graph canonicalize to themselves, NIL stays null. `run`
-    * remains the API when the same-as relation is a DataFrame of unknown
-    * size (it routes through the gated distributed/star loop).
+  /** Resolve linked mentions to canonical ids: one typed map over the
+    * linked relation probing the union-find's canonical map
+    * (`localCanonicalMap`, which backs the CC fast path too) — no CC jobs,
+    * no join. Vertices outside the same-as graph canonicalize to
+    * themselves; NIL mentions stay null. The same-as pair list must fit on
+    * the driver, as it must anyway: `TripleDict` holds every entity there.
     */
   def runFusedLinked(linked: Dataset[LinkedMention],
                      sameAsPairs: Seq[(String, String)]): Dataset[CanonMention] = {
@@ -249,46 +222,5 @@ object Canon {
           m.surface, m.entity_id, canon)
       }
     }
-  }
-
-  /** Resolve linked mentions to canonical ids. Vertices absent from the
-    * same-as graph canonicalize to themselves; NIL mentions stay null.
-    *
-    * The broadcast of the component map is gated on its MEASURED size
-    * (the CC loop has already materialized it, so the count is one cheap
-    * job over checkpointed data) — an unconditional `broadcast(comp)` is a
-    * driver-OOM scale-killer when the same-as vertex set is huge, while an
-    * unconditional non-hint makes Spark plan a sort-merge join whose
-    * shuffle WRITE of the 10^12-row mention side has already happened by
-    * the time AQE's runtime stats could demote it to broadcast (measured:
-    * −9% pipeline throughput at 8 cores).
-    *
-    * @param maxBroadcastEntities hint threshold; ~40–80 B/entry serialized,
-    *        so the 2M default stays well under typical driver budgets.
-    */
-  def run(linked: Dataset[LinkedMention], sameAs: DataFrame,
-          maxBroadcastEntities: Long = 2000000L): Dataset[CanonMention] = {
-    val spark = linked.sparkSession
-    import spark.implicits._
-    val (comp, _, _, knownSize) = componentsWithKnownSize(sameAs,
-      maxIter = 40, maxLocalEdges = DefaultMaxLocalEdges)
-    // the size gate costs NO job when the CC fast path ran (the driver
-    // union-find knows its exact vertex count — VERDICT r6 item 3); the
-    // limit+count probe remains only for the distributed path, where it is
-    // one cheap job over already-checkpointed data
-    val fits = knownSize match {
-      case Some(n) => n <= maxBroadcastEntities
-      case None =>
-        // clamp before the Int cast: a threshold near Long.MaxValue must mean
-        // "always broadcast", not overflow into a negative limit()
-        comp.limit(math.min(maxBroadcastEntities, Int.MaxValue.toLong - 1).toInt + 1)
-          .count() <= maxBroadcastEntities
-    }
-    val compSide = if (fits) broadcast(comp) else comp
-    linked.join(compSide, linked("entity_id") === compSide("id"), "left")
-      .select(linked("conv_id"), linked("turn_idx"), linked("start"),
-        linked("end"), linked("label"), linked("surface"), linked("entity_id"),
-        coalesce(col("canonical_id"), linked("entity_id")).as("canonical_id"))
-      .as[CanonMention]
   }
 }

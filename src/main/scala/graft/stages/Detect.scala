@@ -4,7 +4,6 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{StringType, TimestampType}
-import org.apache.spark.util.LongAccumulator
 import scala.collection.mutable.ListBuffer
 import graft.core._
 
@@ -503,13 +502,6 @@ private[stages] final class DetectScratch(cap0: Int, C: Int) {
   * by descending length before the tagger call (padding-waste trick of
   * birnncrf.py:20-28) — order is restored per row because mentions carry
   * their own (conv_id, turn_idx) keys; no global order is assumed.
-  *
-  * The optional accumulators (turns_in, mentions_out) are LIVE progress
-  * telemetry only: they are updated inside a TRANSFORMATION, so task
-  * retries and speculative execution can double-count them. Lineage of
-  * record comes from counts over committed snapshots — the manifest's
-  * `rows` field and Pipeline's turns_in (counted over the committed input
-  * snapshot) — which retries cannot skew.
   */
 object Detect {
   val BatchSize = 64
@@ -539,7 +531,12 @@ object Detect {
       private var i = 0
       private def fill(): Unit = {
         n = 0
-        while (n < BatchSize && it.hasNext) { buf(n) = it.next(); n += 1 }
+        while (n < BatchSize && it.hasNext) {
+          val t = it.next()
+          if (t.text == null) throw new IllegalArgumentException(
+            s"Detect: null text at conv_id=${t.conv_id} turn_idx=${t.turn_idx}")
+          buf(n) = t; n += 1
+        }
         if (n > 0) {
           java.util.Arrays.sort(buf, 0, n, lengthDesc) // length packing
           val texts = new Array[String](n)
@@ -557,21 +554,13 @@ object Detect {
       }
     }
 
-  def run(turns: Dataset[Turn], tagger: Broadcast[MentionTagger],
-          turnsIn: Option[LongAccumulator] = None,
-          mentionsOut: Option[LongAccumulator] = None): Dataset[Mention] = {
+  def run(turns: Dataset[Turn], tagger: Broadcast[MentionTagger]): Dataset[Mention] = {
     val spark = turns.sparkSession
     import spark.implicits._
     mapSpans(turns, tagger) { () =>
-      val tIn = turnsIn.orNull
-      val mOut = mentionsOut.orNull
-      (turn: Turn, spans: List[Span]) => {
-        if (tIn != null) tIn.add(1)
-        if (mOut != null) mOut.add(spans.size)
-        // iterator, not map: don't build a second List per turn just to flatten it
-        spans.iterator.map(sp =>
-          Mention(turn.conv_id, turn.turn_idx, sp.start, sp.end, sp.label, sp.surface))
-      }
+      // iterator, not map: don't build a second List per turn just to flatten it
+      (turn: Turn, spans: List[Span]) => spans.iterator.map(sp =>
+        Mention(turn.conv_id, turn.turn_idx, sp.start, sp.end, sp.label, sp.surface))
     }
   }
 

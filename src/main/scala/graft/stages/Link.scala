@@ -4,27 +4,32 @@ import org.apache.spark.ml.feature.{HashingTF, MinHashLSH}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import scala.jdk.CollectionConverters._
 import graft.core._
 
 /** Entity-linking stage: `Dataset[Mention] → Dataset[LinkedMention]`.
   *
-  * Candidate generation is a **broadcast hash join** against the alias
-  * dictionary on the normalized surface form — the distributed form of the
-  * reference's word→tag dictionary lookup (`CC/loaders/lex_loader.py:69-73`,
-  * `vocab_tag.py:24-37`). The dictionary is the small side (≤ a few hundred
-  * MB of aliases even at web scale) and is explicitly `broadcast()`-hinted so
-  * the 10^12-row mention side never shuffles here.
+  * Exact linking is one dictionary lookup per span — the reference's
+  * word→tag lookup (`CC/loaders/lex_loader.py:69-73`, `vocab_tag.py:24-37`):
+  * [[aliasLut]] elects min(entity_id) per (label, lower(surface)) once on
+  * the driver, and every entry point (`run`, `runFusedDetect`,
+  * `Triples.runFusedDetect`, streaming) probes that one table through a
+  * per-task [[Memo]]. The dictionary is the small side (≤ a few hundred MB
+  * of aliases even at web scale), so the mention side never shuffles here.
   *
-  * Mentions that miss exactly go through **MinHash-LSH blocking** on char
-  * 3-gram sets (`org.apache.spark.ml.feature.MinHashLSH`; stands in for the
-  * reference's SBert cosine candidate ranking, `label_counter.py:56-75`,
-  * whose quadratic pair space cannot materialize at scale): LSH buckets
-  * produce candidate pairs, exact Jaccard distance reranks, best candidate
-  * per mention wins (deterministic tie-break on distance then entity_id).
+  * `run` then sends its NIL (unlinked) mentions through **MinHash-LSH
+  * blocking** on char 3-gram sets (`org.apache.spark.ml.feature.MinHashLSH`;
+  * stands in for the reference's SBert cosine candidate ranking,
+  * `label_counter.py:56-75`, whose quadratic pair space cannot materialize
+  * at scale): LSH buckets produce candidate pairs, exact Jaccard distance
+  * reranks, best candidate per mention wins (deterministic tie-break on
+  * distance then entity_id).
   */
 object Link {
   private val NGram = 3
   private val LshSeed = 42L
+  /** Largest Jaccard distance a fuzzy candidate may have. */
+  private val FuzzyMaxJaccardDist = 0.5
 
   /** The engine's own `lower()`: UTF8String.toLowerCase, NOT
     * String.toLowerCase — the fused paths' LUT keys must match
@@ -83,10 +88,10 @@ object Link {
   }
   private object Memo { val Unlinked = new Object }
 
-  /** Driver-side mirror of `aliasNorm` (the exact-link election below):
-    * (label + NUL + lower(surface)) → min(entity_id) under Spark's binary
-    * string min (`TripleDict.utf8Order`). NUL-joined keys are unambiguous
-    * because labels cannot contain NUL. Shared by the fused detect→link
+  /** The exact-link election: (label + NUL + lower(surface)) →
+    * min(entity_id) under Spark's binary string min
+    * (`TripleDict.utf8Order`). NUL-joined keys are unambiguous because
+    * labels cannot contain NUL. Shared by `run`, the fused detect→link
     * emit and `Triples.runFusedDetect`'s rank LUT.
     */
   private[graft] def aliasLut(alias: Seq[AliasRow]): java.util.HashMap[String, String] = {
@@ -99,17 +104,12 @@ object Link {
     lut
   }
 
-  /** Fused detect→link (round 7): emits `LinkedMention` rows straight from
-    * the tagger's span loop via the driver-built `aliasLut` — no Mention
-    * Dataset between the stages and no broadcast-join machinery, while
-    * producing EXACTLY `Link.run(Detect.run(turns, tagger), alias,
-    * enableFuzzy = false)` (equivalence-tested in PipelineSpec): the same
-    * min-entity election on the same engine-collation lowered key, misses →
-    * NIL (entity_id null, method null), hits → method "exact". The premise
-    * (alias dictionary is broadcast-sized) is the same one `run`'s
-    * broadcast hint already relies on. The staged stages remain the API
-    * wherever the mention relation itself is consumed or fuzzy recovery is
-    * wanted.
+  /** Fused detect→link: emits `LinkedMention` rows straight from the
+    * tagger's span loop via the driver-built `aliasLut`, with no Mention
+    * Dataset between the stages — exactly the exact half of
+    * `run(Detect.run(turns, tagger), alias)`: misses → NIL (entity_id null,
+    * method null), hits → method "exact". No fuzzy recovery: the hot path
+    * stays one action; `run` is the entry point that recovers NILs.
     */
   def runFusedDetect(turns: Dataset[Turn],
       tagger: org.apache.spark.broadcast.Broadcast[MentionTagger],
@@ -148,128 +148,66 @@ object Link {
       .groupBy(col("word"))
       .agg(slice(sort_array(collect_set(col("label"))), 1, k).as("labels"))
 
-  /** BEHAVIOR CHANGE (round 2): `enableFuzzy` defaults to **false** — it
-    * defaulted to true in round 1. Callers relying on the old default must
-    * now opt in; mentions that miss the dictionary link to null (NIL) with
-    * no error under the new default. The default-off contract is pinned by
-    * PipelineSpec ("default Link.run is exact-only").
+  /** Exact linking through [[aliasLut]] (one typed map, the same per-span
+    * lookup as `runFusedDetect`), then MinHash-LSH fuzzy recovery of the
+    * NIL rows against the same table's entries. Mentions with no fuzzy
+    * candidate stay NIL (entity_id and method null).
     *
-    * @param enableFuzzy when false (the default), skip the LSH pass
-    *        entirely: mentions that miss the dictionary stay NIL. The
-    *        production flow at 10^12 turns runs exact-only in the main pass
-    *        and fuzzy-links the NIL partition as a separate job
-    *        (runWithSnapshots does exactly this shape) — keeping the hot
-    *        path a single action with no mid-plan probe and no cache
-    *        materialization. The fuzzy pass costs a checkpoint + several
-    *        LSH jobs, so it must be opted into. There is no driver-side
-    *        gate anywhere in it: an all-exact corpus is collapsed by AQE's
-    *        runtime empty-relation propagation instead — which means the
-    *        zero-miss fast path REQUIRES `spark.sql.adaptive.enabled=true`
-    *        (the Spark 3.2+ default). With AQE disabled the output is still
-    *        correct, but the MinHashLSH fit, the alias-side hashing and the
-    *        full approxSimilarityJoin/anti-join machinery execute against an
-    *        empty miss side on every run; a warning is logged below so an
-    *        operator tuning configs doesn't silently lose the collapse
-    *        (ADVICE r6).
+    * `mentions` is read three times (hits, misses, fuzzy candidates), so it
+    * should be a committed snapshot or otherwise cheap to recompute.
+    * The zero-miss case needs no driver gate: AQE's empty-relation
+    * propagation collapses the similarity join at runtime.
     */
-  def run(mentions: Dataset[Mention], alias: DataFrame,
-          fuzzyMaxJaccardDist: Double = 0.5, enableFuzzy: Boolean = false): Dataset[LinkedMention] = {
+  def run(mentions: Dataset[Mention], alias: Seq[AliasRow]): Dataset[LinkedMention] = {
     val spark = mentions.sparkSession
     import spark.implicits._
-
-    // Deterministic per-(surface,label) winner: if the dictionary carries
-    // two entity_ids for the same normalized alias, a plain join would emit
-    // one LinkedMention PER candidate — silently duplicating mentions into
-    // canon/triples/metrics. Elect min(entity_id) before the broadcast join
-    // (the fuzzy path has the same rule via its row_number rerank).
-    val aliasNorm = alias.select(
-        lower(col("surface")).as("alias_surface"),
-        col("entity_id"), col("label").as("alias_label"))
-      .groupBy(col("alias_surface"), col("alias_label"))
-      .agg(min(col("entity_id")).as("entity_id"))
-
-    // exact candidate generation: broadcast dictionary join
-    val exactJoined = mentions
-      .join(broadcast(aliasNorm),
-        lower(col("surface")) === col("alias_surface") &&
-          col("label") === col("alias_label"), "left")
-      .drop("alias_surface", "alias_label")
-      .withColumn("method", when(col("entity_id").isNotNull, lit("exact")))
-
-    if (!enableFuzzy) return exactJoined.as[LinkedMention]
-
-    // the zero-miss collapse relies on AQE's empty-relation propagation —
-    // surface the dependency instead of silently paying the full LSH plan
-    if (!spark.conf.get("spark.sql.adaptive.enabled", "true").toBoolean)
-      System.err.println("[link] WARNING: spark.sql.adaptive.enabled=false — " +
-        "the fuzzy pass's zero-miss fast path depends on AQE empty-relation " +
-        "propagation; with AQE off the LSH machinery runs even when no " +
-        "mention misses the dictionary (correct output, avoidable cost)")
-
-    // fuzzy pass: the exact result is evaluated by the miss probe below AND
-    // by the output union — eager localCheckpoint so the upstream detect
-    // runs exactly once AND the blocks are reclaimable (a persist here
-    // could never be unpersisted by the caller: the returned plan
-    // references it; checkpoint blocks free once the plan is GC'd)
-    val exact = exactJoined.localCheckpoint(true)
-
+    val lut = aliasLut(alias)
+    val bcLut = spark.sparkContext.broadcast(lut)
+    val exact = mentions.mapPartitions { it =>
+      val link = new Memo(bcLut.value)
+      it.map { m =>
+        val eid = link(m.label, m.surface)
+        LinkedMention(m.conv_id, m.turn_idx, m.start, m.end, m.label,
+          m.surface, eid, if (eid != null) "exact" else null)
+      }
+    }
     val hit = exact.filter(col("entity_id").isNotNull)
     val miss = exact.filter(col("entity_id").isNull).drop("entity_id", "method")
 
-    // No driver-side miss probe (VERDICT r5 item 6): the fuzzy plan is built
-    // unconditionally and the zero-miss case is handled by the ENGINE at
-    // runtime — AQE's empty-relation propagation collapses the similarity
-    // join and the anti-join when the miss side's shuffle stage turns out
-    // empty, so an all-exact corpus pays only the (alias-sized) LSH fit and
-    // a few empty-stage task launches, while no count() on a 10^12-row
-    // relation ever gates the plan shape on the driver.
-    val fuzzy: DataFrame = {
-      // Locale.ROOT: a default-locale lowercase varies per executor JVM
-      // locale (e.g. Turkish dotless-i) — nondeterministic buckets
-      val grams = udf((s: String) => charNGrams(s.toLowerCase(java.util.Locale.ROOT)))
-      val tf = new HashingTF().setInputCol("grams").setOutputCol("features")
-        .setNumFeatures(1 << 16).setBinary(true)
-      val lsh = new MinHashLSH().setInputCol("features").setOutputCol("hashes")
-        .setNumHashTables(4).setSeed(LshSeed)
+    // the candidate side is the election's own entries, so exact and fuzzy
+    // linking cannot disagree on which id an alias stands for
+    val aliasNorm = lut.entrySet.iterator.asScala.map { e =>
+      val k = e.getKey
+      val nul = k.indexOf('\u0000')
+      (k.substring(nul + 1), k.substring(0, nul), e.getValue)
+    }.toSeq.toDF("alias_surface", "alias_label", "entity_id")
 
-      val missFeat = tf.transform(
-        miss.withColumn("grams", grams(col("surface"))))
-      val aliasFeat = tf.transform(
-        aliasNorm.withColumn("grams", grams(col("alias_surface"))))
-      val model = lsh.fit(aliasFeat)
+    // Locale.ROOT: a default-locale lowercase varies per executor JVM
+    // locale (e.g. Turkish dotless-i) — nondeterministic buckets
+    val grams = udf((s: String) => charNGrams(s.toLowerCase(java.util.Locale.ROOT)))
+    val tf = new HashingTF().setInputCol("grams").setOutputCol("features")
+      .setNumFeatures(1 << 16).setBinary(true)
+    val lsh = new MinHashLSH().setInputCol("features").setOutputCol("hashes")
+      .setNumHashTables(4).setSeed(LshSeed)
+    val missFeat = tf.transform(miss.withColumn("grams", grams(col("surface"))))
+    val aliasFeat = tf.transform(
+      aliasNorm.withColumn("grams", grams(col("alias_surface"))))
+    // label IS part of the mention identity: two mentions sharing a span
+    // but differing in label (possible on replayed/unioned inputs) must
+    // each keep their own rerank winner
+    val keys = Seq("conv_id", "turn_idx", "start", "end", "label")
+    val best = lsh.fit(aliasFeat)
+      .approxSimilarityJoin(missFeat, aliasFeat, FuzzyMaxJaccardDist, "jaccard_dist")
+      .select(keys.map(k => col(s"datasetA.$k")) ++ Seq(col("datasetB.entity_id"),
+        col("datasetB.alias_label"), col("jaccard_dist")): _*)
+      .filter(col("label") === col("alias_label"))
+      .withColumn("rn", row_number().over(Window.partitionBy(keys.map(col): _*)
+        .orderBy(col("jaccard_dist").asc, col("entity_id").asc)))
+      .filter(col("rn") === 1)
+      .select((keys :+ "entity_id").map(col): _*)
 
-      val pairs = model.approxSimilarityJoin(
-          missFeat, aliasFeat, fuzzyMaxJaccardDist, "jaccard_dist")
-        .select(col("datasetA.conv_id"), col("datasetA.turn_idx"),
-          col("datasetA.start"), col("datasetA.end"),
-          col("datasetA.label"), col("datasetA.surface"),
-          col("datasetB.entity_id"), col("datasetB.alias_label"),
-          col("jaccard_dist"))
-        .filter(col("label") === col("alias_label"))
-      // label IS part of the mention identity: two mentions sharing a span
-      // but differing in label (possible on replayed/unioned inputs) must
-      // each keep their own rerank winner — a span-only window would
-      // collapse them to one row and the span-only anti-join below would
-      // then drop the loser entirely
-      val w = Window.partitionBy("conv_id", "turn_idx", "start", "end", "label")
-        .orderBy(col("jaccard_dist").asc, col("entity_id").asc)
-      pairs.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-        .select(col("conv_id"), col("turn_idx"), col("start"), col("end"),
-          col("label"), col("surface"), col("entity_id"),
-          lit("fuzzy").as("method"))
-    }
-
-    val stillMiss =
-      miss.join(fuzzy.select("conv_id", "turn_idx", "start", "end", "label"),
-          Seq("conv_id", "turn_idx", "start", "end", "label"), "left_anti")
-        .withColumn("entity_id", lit(null).cast("string"))
-        .withColumn("method", lit(null).cast("string"))
-
-    val cols = Seq("conv_id", "turn_idx", "start", "end", "label", "surface",
-      "entity_id", "method").map(col)
-    hit.select(cols: _*)
-      .unionByName(fuzzy.select(cols: _*))
-      .unionByName(stillMiss.select(cols: _*))
+    hit.toDF().unionByName(miss.join(best, keys, "left")
+        .withColumn("method", when(col("entity_id").isNotNull, lit("fuzzy"))))
       .as[LinkedMention]
   }
 }

@@ -49,7 +49,7 @@ object Pipeline {
     * Column encode is property-tested in PipelineSpec.
     */
   private[graft] val transcriptsConvEncodeJvm: String => Long = { s =>
-    val ok = s.length >= 13 && s.length <= 23 && s.startsWith("conv_") && {
+    val ok = s != null && s.length >= 13 && s.length <= 23 && s.startsWith("conv_") && {
       var allDigits = true
       var i = 5
       while (i < s.length) {
@@ -78,23 +78,19 @@ object Pipeline {
     private lazy val tagger =
       Detect.lexiconTagger(spark, Transcripts.aliasRows, Transcripts.tagSet)
     lazy val mentions: DataFrame = Detect.run(turns, tagger).toDF()
-    // exact-only linking in the hot path, FUSED since round 7: the linked
-    // and canon relations are emitted straight from the tagger + driver
-    // LUTs (no Mention Dataset, no broadcast joins, no CC jobs) — output
-    // identical to the staged Link.run/Canon.run chain (equivalence-tested
-    // in PipelineSpec; q22/q36/q48 oracles unchanged). Fuzzy NIL-recovery
-    // stays a separate staged pass (see runWithSnapshots / Link.run).
+    // exact-only linking in the hot path: the linked relation is emitted
+    // straight from the tagger through `Link.aliasLut`, canon through
+    // `Canon.localCanonicalMap` — the lookups `runWithSnapshots` uses too.
+    // Fuzzy NIL recovery runs only there, as its own committed stage.
     lazy val linked: DataFrame =
       Link.runFusedDetect(turns, tagger, Transcripts.aliasRows).toDF()
     lazy val canon: DataFrame =
       Canon.runFusedLinked(linked.as[LinkedMention], Transcripts.sameAs).toDF()
-    // fused detect→packed sorted exchange (round 7, VERDICT r6 item 1):
-    // the tagger emits Packed32 wire rows directly — no Mention string
-    // Dataset, no link/canon/rank broadcast joins in the hot chain.
-    // Output is bit-identical to the round-6 runEncodedSorted chain
-    // (equivalence-tested in PipelineSpec; q21–q24/q48 oracles unchanged).
-    // `mentions`/`linked`/`canon` above stay the mention-level API for the
-    // queries that consume those relations.
+    // fused detect→packed sorted exchange: the tagger emits Packed32 wire
+    // rows directly, with no Mention string Dataset in the hot chain.
+    // Output equals runEncodedSorted over `canon` (equivalence-tested in
+    // PipelineSpec). `mentions`/`linked`/`canon` above stay the
+    // mention-level API for the queries that consume those relations.
     lazy val triples: DataFrame = {
       val t = Triples.runFusedDetect(turns, tagger, Transcripts.aliasRows,
         Transcripts.sameAs, Pipeline.transcriptsDict,
@@ -213,8 +209,7 @@ object Pipeline {
     // retries / speculative execution can double-count accumulators, and a
     // manifest is lineage of record, not telemetry (VERDICT r4 item 7).
     // mentions_out needs no counter at all: it IS the manifest's exact
-    // `rows` field, counted from the stored output. Detect.run's optional
-    // accumulators remain available for LIVE progress telemetry.
+    // `rows` field, counted from the stored output.
     val mentions = SnapshotIO.resumeOrCompute(spark, workDir, "mentions", inputKey,
       counters = Map("turns_in" -> turnsDf.count()),
       protocol = protocol) {
@@ -224,15 +219,15 @@ object Pipeline {
 
     val linked = SnapshotIO.resumeOrCompute(spark, workDir, "linked", inputKey,
         protocol = protocol) {
-      // the snapshot flow is the place for fuzzy NIL-recovery: it runs as
-      // its own committed stage, so the LSH jobs + persist don't sit inside
-      // a hot single-action chain
-      Link.run(mentions.as[Mention], Transcripts.aliasRows.toDF(), enableFuzzy = true).toDF()
+      // the snapshot flow is the place for fuzzy NIL recovery: it runs as
+      // its own committed stage, over the committed mentions, so the LSH
+      // jobs don't sit inside a hot single-action chain
+      Link.run(mentions.as[Mention], Transcripts.aliasRows).toDF()
     }
 
     val canon = SnapshotIO.resumeOrCompute(spark, workDir, "canon", inputKey,
         protocol = protocol) {
-      Canon.run(linked.as[LinkedMention], Transcripts.sameAs.toDF("src", "dst")).toDF()
+      Canon.runFusedLinked(linked.as[LinkedMention], Transcripts.sameAs).toDF()
     }
 
     val triples = SnapshotIO.resumeOrCompute(spark, workDir, "triples", inputKey,

@@ -460,27 +460,28 @@ object Triples {
     * probes the lookup once per distinct (label, surface) (`Link.Memo`).
     *
     * Semantics are EXACTLY the canonical chain's (equivalence-tested in
-    * PipelineSpec against detect→link(exact)→canon→runEncodedSorted):
+    * PipelineSpec against `runEncodedSorted` over `Pipeline.Result.canon`):
     *   - link: min(entity_id) per (lower(surface), label), misses → NIL —
-    *     the LUT mirrors `Link.aliasNorm`'s groupBy-min under the same
+    *     the `Link.aliasLut` election every link entry point shares, under
     *     UTF-8 binary `min` and the engine's own `lower` (UTF8String);
-    *   - canon: canonical = component-map(entity) else entity, via the SAME
-    *     union-find election as `Canon.run` (`Canon.localCanonicalMap`);
+    *   - canon: canonical = component-map(entity) else entity, via the
+    *     union-find election `Canon.runFusedLinked` uses
+    *     (`Canon.localCanonicalMap`);
     *   - NIL mentions emit nothing (the `canonical_id IS NOT NULL` filter);
     *   - every loud guard of the encoded path is kept per emitted mention:
     *     convEncode failure, conv key outside [0, 2^32), negative turn, chunk+1
     *     overflow at the 15-bit boundary, start outside [0, 2^23).
     *
     * The fusion premise — alias dictionary and same-as component map are
-    * driver/broadcast-sized — is the SAME premise the canonical chain's
-    * broadcast joins already rely on (`Link` broadcasts the dictionary,
-    * `Canon.run` gates its broadcast at 2M entities); the `TripleDict`
-    * entity gate (`MaxEntities`) bounds the third structure. The generic
-    * `run` remains the fallback for corpora beyond any of those bounds.
+    * driver/broadcast-sized — is the premise of every link and canon entry
+    * point; the `TripleDict` entity gate (`MaxEntities`) bounds the third
+    * structure. The generic `run` remains the fallback for corpora beyond
+    * that bound.
     *
-    * The non-fused stages (`Detect.run`, `Link.run`, `Canon.run`) remain
-    * the API for consumers that need the mention-level relations — the
-    * snapshot flow and the q21/q22/q36 query surfaces use them unchanged.
+    * `Detect.run`, `Link.run` and `Canon.runFusedLinked` remain the API for
+    * consumers that need the mention-level relations: the snapshot flow
+    * commits each of them. Of the query surfaces, q21 runs `Detect.run`,
+    * while q22 and q36 read `Pipeline.Result`'s `linked` and `mentions`.
     */
   def runFusedDetect(turns: Dataset[Turn],
       tagger: org.apache.spark.broadcast.Broadcast[MentionTagger],

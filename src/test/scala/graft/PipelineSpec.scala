@@ -135,22 +135,31 @@ class PipelineSpec extends SparkSpecBase {
     assert(sorted(result.triples.as[Triple]) == viaChain)
   }
 
-  test("fused linked/canon relations ≡ staged Link.run/Canon.run (round-7 Result wiring)") {
+  test("snapshot linked/canon ≡ Pipeline.run linked/canon ≡ generator gold") {
     import spark.implicits._
-    val tagger = Detect.lexiconTagger(spark, Transcripts.aliasRows, Transcripts.tagSet)
-    val stagedLinked = Link.run(
-      Detect.run(result.turns, tagger), Transcripts.aliasRows.toDF(),
-      enableFuzzy = false)
-    def lk(d: org.apache.spark.sql.Dataset[LinkedMention]) =
-      d.collect().toSeq.sortBy(m => (m.conv_id, m.turn_idx, m.start, m.label))
-    val fusedLinked = Link.runFusedDetect(result.turns, tagger, Transcripts.aliasRows)
-    assert(lk(fusedLinked) == lk(stagedLinked))
-    assert(lk(result.linked.as[LinkedMention]) == lk(stagedLinked))
-    val stagedCanon = Canon.run(stagedLinked, Transcripts.sameAs.toDF("src", "dst"))
-    def ck(d: org.apache.spark.sql.Dataset[CanonMention]) =
-      d.collect().toSeq.sortBy(m => (m.conv_id, m.turn_idx, m.start, m.label))
-    assert(ck(Canon.runFusedLinked(stagedLinked, Transcripts.sameAs)) == ck(stagedCanon))
-    assert(ck(result.canon.as[CanonMention]) == ck(stagedCanon))
+    val dir = java.nio.file.Files.createTempDirectory("graft_lc").toString
+    try {
+      Pipeline.runWithSnapshots(spark, 30, dir)
+      def committed(stage: String) = spark.read.parquet(
+        graft.io.SnapshotIO.snapshotDir(dir, stage, "n30_s42").toString)
+      def lk(d: org.apache.spark.sql.DataFrame) = d.as[LinkedMention].collect().toSeq
+        .sortBy(m => (m.conv_id, m.turn_idx, m.start, m.label))
+      def ck(d: org.apache.spark.sql.DataFrame) = d.as[CanonMention].collect().toSeq
+        .sortBy(m => (m.conv_id, m.turn_idx, m.start, m.label))
+      val r = Pipeline.run(spark, 30)
+      val linked = lk(r.linked)
+      val canon = ck(r.canon)
+      assert(lk(committed("linked")) == linked)
+      assert(ck(committed("canon")) == canon)
+      // independent reference: the generator's own gold spans and entities
+      val gold = Transcripts.goldMentions(spark, 30).collect().toSeq
+        .sortBy(m => (m.conv_id, m.turn_idx, m.start, m.label))
+      assert(gold.nonEmpty)
+      assert(linked == gold.map(g => LinkedMention(g.conv_id, g.turn_idx, g.start,
+        g.end, g.label, g.surface, g.entity_id, "exact")))
+      assert(canon == gold.map(g => CanonMention(g.conv_id, g.turn_idx, g.start,
+        g.end, g.label, g.surface, g.entity_id, Transcripts.canonicalOf(g.entity_id))))
+    } finally graft.io.SnapshotIO.deleteRecursively(java.nio.file.Paths.get(dir))
     // NIL propagation: an unlinkable mention keeps null entity AND canonical
     val nil = Seq(LinkedMention("c", 0, 0, 3, "PER", "nope", null, null)).toDS()
     val c = Canon.runFusedLinked(nil, Transcripts.sameAs).collect()
@@ -203,6 +212,29 @@ class PipelineSpec extends SparkSpecBase {
     val nilOnly = Seq(Turn("not_numeric", 0, "user",
       "no entities here, just chatter", null, new java.sql.Timestamp(0L))).toDS()
     assert(fused(nilOnly).collect().isEmpty)
+  }
+
+  test("null text and null conv_id fail loudly through Detect.run and Triples.runFusedDetect") {
+    import spark.implicits._
+    val tagger = Detect.lexiconTagger(spark, Transcripts.aliasRows, Transcripts.tagSet)
+    def fused(turns: org.apache.spark.sql.Dataset[Turn]) =
+      Triples.runFusedDetect(turns, tagger, Transcripts.aliasRows,
+        Transcripts.sameAs, Pipeline.transcriptsDict,
+        Pipeline.transcriptsConvEncodeJvm, Pipeline.transcriptsConvCodec.decode)
+    val ts = new java.sql.Timestamp(0L)
+    val nullText = Seq(
+      Turn(f"conv_${3}%08d", 0, "user", "Alice Varga met Bob Castillo", null, ts),
+      Turn(f"conv_${3}%08d", 1, "user", null, null, ts)).toDS()
+    val textMsg = "Detect: null text at conv_id=conv_00000003 turn_idx=1"
+    for ((name, run) <- Seq[(String, () => Any)](
+        "Detect.run" -> (() => Detect.run(nullText, tagger).collect()),
+        "runFusedDetect" -> (() => fused(nullText).collect()))) {
+      val e = intercept[Exception] { run() }
+      assert(msgs(e).exists(_.contains(textMsg)), s"$name got: ${msgs(e)}")
+    }
+    val nullConv = Seq(Turn(null, 0, "user", "Alice Varga met Bob Castillo", null, ts)).toDS()
+    val e = intercept[Exception] { fused(nullConv).collect() }
+    assert(msgs(e).exists(_.contains("Triples: convCodec failed on: null")), s"got: ${msgs(e)}")
   }
 
   test("fusedLut is strict: an alias entry outside the TripleDict fails at construction, hit or not") {
@@ -850,22 +882,21 @@ class LinkSpec extends SparkSpecBase {
       Mention("c1", 1, 0, 10, "ORG", "Acme  Corp."),  // fuzzy: extra space + dot
       Mention("c1", 2, 0, 7, "ORG", "Zzzzzzz")        // NIL
     ).toDS()
-    val alias = Transcripts.aliasRows.toDF()
-    val linked = Link.run(mentions, alias, enableFuzzy = true).collect()
+    val linked = Link.run(mentions, Transcripts.aliasRows).collect()
     val byTurn = linked.map(l => l.turn_idx -> l).toMap
     assert(byTurn(0).method == "exact" && byTurn(0).entity_id == "ORG00a")
     assert(byTurn(1).method == "fuzzy" && byTurn(1).entity_id == "ORG00a")
-    assert(byTurn(2).entity_id == null)
+    assert(byTurn(2).entity_id == null && byTurn(2).method == null)
   }
 
   test("fuzzy pass preserves same-span mentions with different labels (mention identity incl. label)") {
     import spark.implicits._
     // identical span, two labels; ORG fuzzy-recovers, PER has no candidate —
-    // a span-only rerank/anti-join would silently drop one of them
+    // a span-only rerank or join-back would silently drop one of them
     val mentions = Seq(
       Mention("c1", 0, 0, 10, "ORG", "Acme  Corp."),
       Mention("c1", 0, 0, 10, "PER", "Acme  Corp.")).toDS()
-    val out = Link.run(mentions, Transcripts.aliasRows.toDF(), enableFuzzy = true).collect()
+    val out = Link.run(mentions, Transcripts.aliasRows).collect()
     assert(out.length == 2, s"mention lost: ${out.toSeq}")
     val byLabel = out.map(l => l.label -> l).toMap
     assert(byLabel("ORG").method == "fuzzy" && byLabel("ORG").entity_id == "ORG00a")
@@ -878,7 +909,7 @@ class LinkSpec extends SparkSpecBase {
     // two candidate ids for the same (surface, label) — the sibling-id shape
     val alias = Seq(
       AliasRow("Globex", "ORG01b", "ORG"),
-      AliasRow("Globex", "ORG01a", "ORG")).toDF()
+      AliasRow("Globex", "ORG01a", "ORG"))
     val linked = Link.run(mentions, alias).collect()
     assert(linked.length == 1, s"duplicated mention rows: ${linked.toSeq}")
     assert(linked.head.entity_id == "ORG01a" && linked.head.method == "exact")
@@ -895,13 +926,6 @@ class LinkSpec extends SparkSpecBase {
     assert(got("batch") == Seq())               // dictionary miss → empty array
   }
 
-  test("default Link.run is exact-only (no fuzzy jobs on the hot path)") {
-    import spark.implicits._
-    val mentions = Seq(Mention("c1", 0, 0, 7, "ORG", "Zzzzzzz")).toDS()
-    val linked = Link.run(mentions, Transcripts.aliasRows.toDF()).collect()
-    assert(linked.length == 1 && linked.head.entity_id == null && linked.head.method == null)
-  }
-
   test("fuzzy pass with ZERO misses: no driver gate, runtime-collapsed empty join") {
     import spark.implicits._
     // every mention links exactly — the miss side is empty at RUNTIME, which
@@ -910,7 +934,7 @@ class LinkSpec extends SparkSpecBase {
     val mentions = Seq(
       Mention("c1", 0, 0, 9, "ORG", "Acme Corp"),
       Mention("c2", 3, 5, 11, "LOC", "Berlin")).toDS()
-    val out = Link.run(mentions, Transcripts.aliasRows.toDF(), enableFuzzy = true).collect()
+    val out = Link.run(mentions, Transcripts.aliasRows).collect()
     assert(out.length == 2 && out.forall(_.method == "exact"))
     assert(out.map(_.entity_id).toSet == Set("ORG00a", "LOC00"))
   }

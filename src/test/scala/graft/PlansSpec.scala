@@ -32,14 +32,6 @@ class PlansSpec extends SparkSpecBase {
     assert(p.contains("BroadcastHashJoin"), s"expected broadcast joins in:\n$p")
   }
 
-  test("entity linking is a broadcast hash join on the alias dictionary") {
-    val mentions = Seq(Mention("c", 0, 0, 5, "ORG", "Acme Corp")).toDS()
-    val linked = Link.run(mentions, Transcripts.aliasRows.toDF(), enableFuzzy = false)
-    val p = plan(linked.toDF())
-    assert(p.contains("BroadcastHashJoin"), s"alias join must broadcast:\n$p")
-    assert(!p.contains("SortMergeJoin"))
-  }
-
   test("window triple assembly: no self-join, and ONE exchange serves agg + window") {
     val canon = Seq(CanonMention("c", 0, 0, 5, "PER", "x", "PER00", "PER00")).toDS()
     val p = plan(Triples.runWindow(canon).toDF())
@@ -167,19 +159,6 @@ class PlansSpec extends SparkSpecBase {
     // executedPlan.toString renders codegen spans as "*(n) Operator"
     assert(p.contains("*(") || p.contains("WholeStageCodegen"),
       s"scalar path must stay codegen'd:\n$p")
-  }
-
-  test("canon join broadcast is size-GATED: hinted for a small comp map, not for a huge one") {
-    val linked = Seq(LinkedMention("c", 0, 0, 5, "ORG", "Acme", "ORG00a", "exact")).toDS()
-    // small comp map (6 vertices) → broadcast hint present, mention side never shuffles
-    val small = Canon.run(linked, Transcripts.sameAs.toDF("src", "dst"))
-    assert(small.toDF().queryExecution.optimizedPlan.toString.contains("strategy=broadcast"),
-      "small comp map must be broadcast-hinted")
-    // force the gate shut (threshold 0) → no hint; AQE decides at runtime
-    val gated = Canon.run(linked, Transcripts.sameAs.toDF("src", "dst"),
-      maxBroadcastEntities = 0L)
-    assert(!gated.toDF().queryExecution.optimizedPlan.toString.contains("strategy=broadcast"),
-      "oversized comp map must NOT carry a forced broadcast hint")
   }
 
   test("Pipeline.run is lazy (zero jobs at construction) and memoized per (session, n, seed)") {
