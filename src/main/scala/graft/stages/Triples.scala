@@ -2,17 +2,16 @@ package graft.stages
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.core._
 
 /** Dictionary for the packed triple-assembly paths (`Triples.runEncodedSorted`,
   * `runEncodedSortedHashed`, `runFusedDetect`): label and entity-id
   * vocabularies sorted in unsigned UTF-8 byte order —
   * Spark's binary string collation — so the packed 64-bit mention sort
-  * (start, labelRank, entityRank) is EXACTLY the generic path's struct sort
-  * (start, label, canonical_id). Entity ranks therefore preserve the
-  * deterministic tie-break order everywhere it matters (within-turn mention
-  * ordering for `mentions_with` pairs).
+  * (start, labelRank, entityRank) is EXACTLY the (start, label,
+  * canonical_id) order under that collation. Entity ranks therefore
+  * preserve the deterministic tie-break order everywhere it matters
+  * (within-turn mention ordering for `mentions_with` pairs).
   *
   * Build via `TripleDict(labels, entities)`; the entity vocabulary must
   * cover every `canonical_id` the encoded path will see (the pipeline's is
@@ -61,9 +60,8 @@ object TripleDict {
     * per-executor broadcast — the practical ceiling for a healthy driver.
     * The gate bounds the sort and the broadcast, not the collect: the
     * caller hands `apply` an already-collected vocabulary, and `apply`
-    * checks its distinct size BEFORE the O(n log n) sort, failing loudly
-    * with `Triples.run` (the generic string path, which never collects the
-    * entity vocabulary) named as the fallback.
+    * checks its distinct size BEFORE the O(n log n) sort. Past the bound
+    * it aborts; no triple path runs without the dictionary.
     */
   val MaxEntities: Int = 50000000
 
@@ -80,9 +78,8 @@ object TripleDict {
     val distinctEs = entities.toArray.distinct
     require(distinctEs.length <= maxEntities,
       s"TripleDict entity vocabulary (${distinctEs.length}) exceeds MaxEntities " +
-        s"($maxEntities) — the rank dictionary would not fit a sane driver " +
-        "heap as a collected+broadcast Array[String]; use Triples.run (the " +
-        "generic string-keyed path) for corpora beyond this bound")
+        s"($maxEntities): the rank dictionary is collected and broadcast as an " +
+        "Array[String] and would not fit the driver heap")
     new TripleDict(ls, distinctEs.sorted(utf8Order))
   }
 }
@@ -94,117 +91,36 @@ object TripleDict {
   *   within one turn (mentions ordered by char offset):
   *     PER×ORG → affiliated_with, PER×PER (i<j, distinct ids) → mentions_with,
   *     ORG×LOC → located_in;
-  *   across adjacent turns of one conversation (turn-index window, k=1):
+  *   across adjacent turns of one conversation (turn-index distance k=1):
   *     PER(t)×PER(t−1), distinct ids → follows_up.
   *
-  * Physical shape, chosen for 10^12-turn scale:
-  *   - mentions are first aggregated to ONE row per (conv_id, turn_idx)
-  *     (`groupBy` on the composite key — per-turn lists are bounded by text
-  *     length, so no memory hazard);
-  *   - within-turn pairing is a per-row flatMap over those bounded lists —
-  *     no self-join of the 10^12-row mention table;
-  *   - the cross-turn rule attaches the previous turn via a CHUNKED window
-  *     (SURVEY §7.4: chunk size m ≫ rule depth k=1, overlap k): rows are
-  *     windowed per (conv_id, turn_idx div m), so the per-task buffer is
-  *     bounded by m aggregated turn rows regardless of conversation size —
-  *     a pathological million-turn conversation spreads over its chunks
-  *     instead of serializing one window task. Chunk boundaries are stitched
-  *     by duplicating ONLY the last turn of each chunk into the next chunk
-  *     as a context row (dropped after its `lag` value is consumed) — a
-  *     1/m duplication factor, and exactly zero for every conversation
-  *     shorter than m turns. The whole assembly keeps the ONE-exchange
-  *     property (plan-asserted in PlansSpec): hash(conv_id, chunk)
-  *     satisfies the (conv_id, chunk, turn_idx) aggregation, the chunk
-  *     window, and bounds skew — no routing joins, no second read of the
-  *     aggregated relation.
+  * Physical shape, chosen for 10^12-turn scale: every mention becomes a
+  * packed (position long, mention long) row, where the position packs
+  * (conversation key, chunk, turn-in-chunk). ONE hash exchange on
+  * (conversation key, chunk) and a partition-local sort deliver each
+  * chunk's turns in order to a streaming walker (`walk`), which applies
+  * the rules (`emitTurnRules`) with a depth-k ring of preceding turns.
+  * Conversations are cut into chunks of `chunkTurns` turns, so a
+  * pathological million-turn conversation spreads over many tasks; the
+  * last k turns of each chunk are copied into the next one as context
+  * rows, a 1/m duplication that is zero for conversations shorter than
+  * one chunk. Rows sharing `(conv_id, turn_idx)` sort together and are
+  * pooled into one turn. Three entry points feed the walker:
+  * `runFusedDetect` (the pipeline's path, straight from turns),
+  * `runEncodedSorted` (canon rows, codec-derivable conv ids) and
+  * `runEncodedSortedHashed` (canon rows, opaque conv ids).
   */
 object Triples {
 
-  /** Turns per window chunk. At the default, a window task buffers at most
-    * ~64k aggregated turn rows (a few MB), every real conversation fits one
-    * chunk (zero duplication, plan identical to an unchunked window), and a
-    * 10M-turn adversarial conversation spreads across ~160 tasks.
+  /** Turns per exchange chunk. At the default every real conversation fits
+    * one chunk (zero context duplication), and a 10M-turn adversarial
+    * conversation spreads across ~160 (key, chunk) groups.
     */
   val DefaultChunkTurns = 65536
 
-  /** Default path: chunked-window cross-turn attachment (see class doc).
-    * Exactly equivalent to `runWindow` and `runJoinBased` on any input
-    * (equivalence-tested, including chunk sizes down to 2).
-    */
-  def run(canon: Dataset[CanonMention],
-          chunkTurns: Int = DefaultChunkTurns): Dataset[Triple] = {
-    require(chunkTurns >= 2, s"chunkTurns must be ≥ 2, got $chunkTurns")
-    val packed = canon
-      .filter(col("canonical_id").isNotNull)
-      .select(col("conv_id").as("_cid"), col("turn_idx"),
-        struct(col("start"), col("label"), col("canonical_id")).as("_m"))
-    emit(chunkedWithContext(packed, chunkTurns, 1,
-      sort_array(collect_list(col("_m")))))(canon.sparkSession)
-  }
-
-  /** The chunked-window turn-context attachment (class-doc shape) behind
-    * `run`, generalized to rule depth `k` (SURVEY §7.4 contract: chunk
-    * size m ≫ overlap k; the k=2 boundary stitching is tested in
-    * PipelineSpec). Input columns: `_cid` (conversation id), `turn_idx`,
-    * `_m` (per-mention payload, aggregated by `msAgg`). Output:
-    * (_cid, turn_idx, ms, prev_idx_1, prev_ms_1, …, prev_idx_k, prev_ms_k)
-    * with context rows consumed. For k = 1 the trailing pair is aliased
-    * (prev_idx, prev_ms) — the shape `emit` reads.
-    *
-    * One pass over the mention table: every row keeps its own chunk; the
-    * last k turns of a chunk are ALSO emitted into the next chunk as
-    * context rows (explode of a 1- or 2-element array — stays in
-    * whole-stage codegen). ONE exchange serves both downstream operators:
-    * hash(_cid, _chunk) satisfies the aggregation's ClusteredDistribution
-    * on (_cid, _chunk, turn_idx) AND the chunk window's. Context rows form
-    * their own (_cid, chunk+1, turn_idx) groups, so _ctx is constant per
-    * group and max() just carries it through; a context row's own triples
-    * are emitted by its real copy in the previous chunk — it exists only
-    * to feed the lags.
-    *
-    * Depth contract (why lags 1..k suffice): a real row for turn t in chunk
-    * c has every EXISTING turn in [t−k, t) present in its window partition —
-    * turns ≥ c·m as real rows, turns in [c·m−k, c·m) as context copies (the
-    * overlap predicate below duplicates exactly those) — and at most k−1
-    * turns lie strictly between t−d and t for d ≤ k, so turn t−d (when it
-    * exists) sits at SOME lag position ≤ k. Sparse turn indices mean lag
-    * position ≠ turn distance: a depth-d rule must check
-    * `prev_idx_i == turn_idx − d`, exactly like the k=1 consumers do
-    * (equivalence vs the unchunked window is tested for k=2 in
-    * PipelineSpec).
-    */
-  private[graft] def chunkedWithContext(packed: DataFrame, chunkTurns: Int,
-                                        k: Int, msAgg: Column): DataFrame = {
-    require(k >= 1 && chunkTurns > k,
-      s"chunk size must exceed overlap depth: chunkTurns=$chunkTurns k=$k")
-    val chunk = floor(col("turn_idx") / chunkTurns).cast("int")
-    val inOverlap = pmod(col("turn_idx"), lit(chunkTurns)) >= chunkTurns - k
-    val dup = packed
-      .withColumn("_d", explode(when(inOverlap,
-          array(struct(chunk.as("c"), lit(false).as("ctx")),
-                struct((chunk + 1).as("c"), lit(true).as("ctx"))))
-        .otherwise(array(struct(chunk.as("c"), lit(false).as("ctx"))))))
-      .select(col("_cid"), col("turn_idx"), col("_m"),
-        col("_d.c").as("_chunk"), col("_d.ctx").as("_ctx"))
-    val perTurn = dup
-      .repartition(col("_cid"), col("_chunk"))
-      .groupBy(col("_cid"), col("_chunk"), col("turn_idx"))
-      .agg(msAgg.as("ms"), max(col("_ctx")).as("_ctx"))
-    val w = Window.partitionBy(col("_cid"), col("_chunk")).orderBy(col("turn_idx"))
-    def lagName(p: String, i: Int) = if (k == 1) p else s"${p}_$i"
-    val withLags = (1 to k).foldLeft(perTurn) { (df, i) =>
-      df.withColumn(lagName("prev_idx", i), lag(col("turn_idx"), i).over(w))
-        .withColumn(lagName("prev_ms", i), lag(col("ms"), i).over(w))
-    }
-    withLags
-      .filter(!col("_ctx"))
-      .select(col("_cid") +: col("turn_idx") +: col("ms") +:
-        (1 to k).flatMap(i =>
-          Seq(col(lagName("prev_idx", i)), col(lagName("prev_ms", i)))): _*)
-  }
-
-  /** Mention-offset ceiling of the packed encoding: 23 bits. A single turn
-    * longer than ~8.4M chars cannot pack (fails loudly; use `run`).
+  /** Mention-offset ceiling of the packed encoding: 23 bits. A mention
+    * starting at or past ~8.4M chars in its turn cannot pack, and every
+    * triple path aborts on it.
     */
   val MaxPackedStart: Int = 1 << 23
 
@@ -301,10 +217,11 @@ object Triples {
     * `Arrays.sort` (the partition sort already delivers mentions in packed
     * order; bit 63 is always 0, so the signed long sort is the unsigned /
     * UTF-8-rank one). Context-ness is DERIVED in the walker instead of
-    * shipped. Output is identical to `run` (equivalence-tested in
-    * PipelineSpec); per-task memory is O(one turn) plus a depth-k lag ring,
-    * and the post-shuffle sort is Spark's spill-safe external sorter —
-    * arbitrarily large (key, chunk) groups degrade to disk, never OOM.
+    * shipped. Output equals the reference model's (`TripleModel` in the
+    * tests, property-tested in PipelineSpec); per-task memory is O(one
+    * turn) plus a depth-k lag ring, and the post-shuffle sort is Spark's
+    * spill-safe external sorter — arbitrarily large (key, chunk) groups
+    * degrade to disk, never OOM.
     *
     * Wire layout (Packed32): (convKey32|chunk|tic packed long, mention
     * long) — 2 columns, 16 B of UnsafeRow fixed bytes per mention row
@@ -322,7 +239,7 @@ object Triples {
                        chunkTurns: Int = DefaultChunkTurns): Dataset[Triple] =
     runEncodedSortedRules(canon, dict, chunkTurns, convCodec, defaultRules(dict))
 
-  /** Dictionary-free sorted exchange for corpora whose conv ids are NOT
+  /** Codec-free sorted exchange for corpora whose conv ids are NOT
     * numeric-derivable (UUIDs, opaque strings): instead of shipping the id
     * string on every mention row, the exchange carries a 96-bit hash of it
     * — xxhash64 plus the high 32 bits of an independently-seeded second
@@ -339,10 +256,9 @@ object Triples {
     * wrong-group merge require a (k1, k2hi, chunk) collision between two
     * conversations (expected ≈ 6e-6 such pairs at 10^12 conversations), and
     * even that case is caught LOUDLY — every carrier is validated against
-    * the group's id and a mismatch aborts the job with a clear message
-    * (rerun with `run`, the exact string path). Equivalence to `run` on UUID
-    * corpora, including a pre-shuffled adversarial layout, is tested in
-    * PipelineSpec.
+    * the group's id and a mismatch aborts the job. Equivalence to the
+    * reference model on UUID corpora, including a pre-shuffled adversarial
+    * layout, is tested in PipelineSpec.
     */
   def runEncodedSortedHashed(canon: Dataset[CanonMention], dict: TripleDict,
                              chunkTurns: Int = DefaultChunkTurns): Dataset[Triple] =
@@ -472,11 +388,16 @@ object Triples {
     *     convEncode failure, conv key outside [0, 2^32), negative turn, chunk+1
     *     overflow at the 15-bit boundary, start outside [0, 2^23).
     *
+    * Duplicate keys: two `Turn` rows sharing `(conv_id, turn_idx)` are
+    * pooled into ONE turn — their mentions sort into one group, the rules
+    * pair them with each other, and both rows link to the same neighbours.
+    * That is the current batch contract of every packed path (tested in
+    * PipelineSpec); failing loudly or quarantining instead is still open.
+    *
     * The fusion premise — alias dictionary and same-as component map are
     * driver/broadcast-sized — is the premise of every link and canon entry
     * point; the `TripleDict` entity gate (`MaxEntities`) bounds the third
-    * structure. The generic `run` remains the fallback for corpora beyond
-    * that bound.
+    * structure, and a corpus past it aborts.
     *
     * `Detect.run`, `Link.run` and `Canon.runFusedLinked` remain the API for
     * consumers that need the mention-level relations: the snapshot flow
@@ -736,7 +657,8 @@ object Triples {
           val s = ly.convId(r)
           if (s != null && s != convId) throw new IllegalStateException(
             s"Triples.runEncodedSortedHashed: conv-id hash collision in one exchange " +
-              s"group ('$convId' vs '$s') — rerun with Triples.run, the exact string path")
+              s"group ('$convId' vs '$s') — the 96-bit group key must be unique per " +
+              "conversation; aborting")
         }
       }
       private def flushTurn(): Unit = {
@@ -798,9 +720,9 @@ object Triples {
 
   /** Depth-k ring of (turnIdx, sorted packed mentions) lag slots for the
     * sorted walker — the k-generalized form of round 5's single lag slot.
-    * Lookup is by ABSOLUTE turn index (`msAt(turnIdx - d)`), so sparse turn
-    * indices behave exactly like the window path's `prev_idx == turn_idx−d`
-    * checks; a missing turn yields (EmptyLongs, 0).
+    * Lookup is by ABSOLUTE turn index (`msAt(turnIdx - d)`), so on sparse
+    * turn indices a depth-d rule sees turn t−d only when it exists; a
+    * missing turn yields (EmptyLongs, 0).
     */
   private[graft] final class LagRing(val depth: Int) {
     private val turns = Array.fill(depth)(Int.MinValue)
@@ -881,8 +803,8 @@ object Triples {
     * implementation behind the sorted-exchange walker and the streaming
     * packed path (`StreamingTriples`); the walker's growable scratch arrays
     * are why lengths are explicit. Appends to `out`; per-turn dedup via
-    * `dedup` (cleared here).
-    * Rule order mirrors withinTurnTriples ++ followUps exactly.
+    * `dedup` (cleared here). The string reference model the tests check
+    * it against is `TripleModel`.
     */
   private[graft] def emitTurnRules(ms: Array[Long], msLen: Int,
                             prev: Array[Long], prevLen: Int,
@@ -945,115 +867,6 @@ object Triples {
       i += 1
     }
   }
-
-  /** Unchunked window variant: requires every conversation to fit one
-    * window task (zero joins, zero duplication, single exchange). Kept as
-    * the equivalence-test witness for the stable-turn-ordering contract.
-    */
-  def runWindow(canon: Dataset[CanonMention]): Dataset[Triple] =
-    emit(attachPrevWindow(aggregatePerTurn(canon)))(canon.sparkSession)
-
-  /** Join-based variant: the cross-turn context comes from an equi-join on
-    * (conv_id, turn_idx−1) instead of any window. Exactly equivalent for
-    * the k=1 rule (asserted in tests); shuffles the aggregated relation
-    * twice (both join inputs), so the chunked window is preferred — kept as
-    * the second independent witness.
-    */
-  def runJoinBased(canon: Dataset[CanonMention]): Dataset[Triple] = {
-    val perTurn = aggregatePerTurn(canon)
-    val prev = perTurn.select(col("conv_id"),
-      (col("turn_idx") + 1).as("turn_idx"),
-      col("turn_idx").as("prev_idx"), col("ms").as("prev_ms"))
-    val withPrev = perTurn.join(prev, Seq("conv_id", "turn_idx"), "left")
-      .select(prevCols: _*)
-    emit(withPrev)(canon.sparkSession)
-  }
-
-  private def aggregatePerTurn(canon: Dataset[CanonMention]): DataFrame =
-    canon
-      .filter(col("canonical_id").isNotNull)
-      .repartition(col("conv_id"))
-      .groupBy(col("conv_id"), col("turn_idx"))
-      .agg(sort_array(collect_list(struct(col("start"), col("label"),
-        col("canonical_id")))).as("ms"))
-
-  private val prevCols: Seq[Column] = Seq(col("conv_id"), col("turn_idx"),
-    col("ms"), col("prev_idx"), col("prev_ms"))
-
-  private def attachPrevWindow(perTurn: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("conv_id")).orderBy(col("turn_idx"))
-    perTurn
-      .withColumn("prev_idx", lag(col("turn_idx"), 1).over(w))
-      .withColumn("prev_ms", lag(col("ms"), 1).over(w))
-      .select(prevCols: _*)
-  }
-
-  private def emit(withPrev: DataFrame)(spark: org.apache.spark.sql.SparkSession): Dataset[Triple] = {
-    import spark.implicits._
-    withPrev.flatMap { row =>
-      val convId = row.getString(0)
-      val turnIdx = row.getInt(1)
-      val ms = row.getSeq[org.apache.spark.sql.Row](2)
-        .map(r => (r.getInt(0), r.getString(1), r.getString(2)))
-      // dense turn indices are a generator invariant, but guard anyway:
-      // the window only yields a valid "previous turn" when it is adjacent.
-      val prevAdjacent = !row.isNullAt(3) && row.getInt(3) == turnIdx - 1
-      val prev = if (prevAdjacent && !row.isNullAt(4))
-        row.getSeq[org.apache.spark.sql.Row](4)
-          .map(r => (r.getInt(0), r.getString(1), r.getString(2)))
-      else Seq.empty
-
-      val within = withinTurnTriples(convId, turnIdx, ms)
-      val cross = followUps(convId, turnIdx,
-        ms.filter(_._2 == "PER").map(_._3), prev.filter(_._2 == "PER").map(_._3))
-      // duplicates can only arise within this one turn's output (the triple
-      // key embeds conv_id+turn_idx), so a local per-row dedup is exactly
-      // equivalent to a global distinct() — and saves a full shuffle of the
-      // entire triple table
-      (within ++ cross).distinct.iterator
-    }
-  }
-
-  /** Within-turn rule body — the ONE source of truth shared by the batch
-    * emit above and both streaming paths (`StreamingTriples`). `ms` is the
-    * turn's (start, label, canonical_id) list sorted by start.
-    */
-  private[graft] def withinTurnTriples(convId: String, turnIdx: Int,
-      ms: Seq[(Int, String, String)]): Seq[Triple] = {
-    val pers = ms.filter(_._2 == "PER")
-    val orgs = ms.filter(_._2 == "ORG")
-    val locs = ms.filter(_._2 == "LOC")
-    (for (p <- pers; o <- orgs) yield Triple(p._3, "affiliated_with", o._3, convId, turnIdx)) ++
-    (for (i <- ms.indices; j <- ms.indices; if i < j;
-          if ms(i)._2 == "PER" && ms(j)._2 == "PER" && ms(i)._3 != ms(j)._3)
-      yield Triple(ms(i)._3, "mentions_with", ms(j)._3, convId, turnIdx)) ++
-    (for (o <- orgs; l <- locs) yield Triple(o._3, "located_in", l._3, convId, turnIdx))
-  }
-
-  /** Cross-turn (k=1) rule body, shared like `withinTurnTriples`. */
-  private[graft] def followUps(convId: String, turnIdx: Int,
-      pers: Seq[String], prevPers: Seq[String]): Seq[Triple] =
-    for (p <- pers; q <- prevPers; if p != q)
-      yield Triple(p, "follows_up", q, convId, turnIdx)
-
-  /** Within-turn mention ordering for streaming consumers — EXACTLY the
-    * batch path's `sort_array` over struct(start, label, canonical_id):
-    * Int ascending, then UTF-8 binary collation on the strings (a plain
-    * Java-String sort would diverge on supplementary-plane ids, the same
-    * hazard `TripleDict.utf8Order` exists for). A start-only sort would
-    * leave start-ties in groupBy arrival order — nondeterministic across
-    * replays, breaking streaming≡batch.
-    */
-  private[graft] val mentionKeyOrder: Ordering[(Int, String, String)] =
-    new Ordering[(Int, String, String)] {
-      def compare(a: (Int, String, String), b: (Int, String, String)): Int = {
-        val c0 = java.lang.Integer.compare(a._1, b._1)
-        if (c0 != 0) return c0
-        val c1 = TripleDict.utf8Order.compare(a._2, b._2)
-        if (c1 != 0) return c1
-        TripleDict.utf8Order.compare(a._3, b._3)
-      }
-    }
 
   /** Per-conversation triple counts with **two-phase salted aggregation**:
     * partial count on (conv_id, salt) spreads a hot conversation over S

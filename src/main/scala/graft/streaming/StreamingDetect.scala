@@ -12,16 +12,13 @@ import graft.stages.{Detect, MentionTagger}
   * resume mechanism).
   *
   * The detect stage is reused verbatim: `Detect.run` is a typed
-  * `mapPartitions`, legal in streaming plans. Aggregations use event-time
+  * `mapPartitions`, legal in streaming plans, so a streaming
+  * `Dataset[Turn]` goes through it directly. Aggregations use event-time
   * windows on `ts` with a watermark so state is bounded: late turns beyond
   * the watermark are dropped, everything else lands exactly once per
   * (window, label) in append mode.
   */
 object StreamingDetect {
-
-  /** streaming Dataset[Turn] → streaming Dataset[Mention]. */
-  def mentions(turns: Dataset[Turn], tagger: Broadcast[MentionTagger]): Dataset[Mention] =
-    Detect.run(turns, tagger)
 
   /** Windowed mention counts per label: 5-minute tumbling event-time
     * windows, 1-hour watermark (north-star shape: `withWatermark` +

@@ -1,27 +1,25 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.core._
 import graft.stages.{TripleDict, Triples}
 
 /** Incremental triple assembly over a mention stream with
   * `flatMapGroupsWithState` — per-conversation custom state (the
-  * `KeyValueGroupedDataset` stateful path of the north star).
+  * `KeyValueGroupedDataset` stateful path of the north star). The one
+  * operator is [[StreamingTriples.assembleWithEvictionEncoded]].
   *
-  * State per conv_id: the last seen turn index and that turn's PER
-  * canonical ids, so the cross-turn `follows_up` rule (k=1) emits as soon
-  * as the next turn's mentions arrive — no window buffering of whole
-  * conversations. Within-turn rules are stateless and emitted in the same
-  * pass.
+  * State per conv_id: the link frontier, i.e. the turns whose `follows_up`
+  * partner has not arrived yet, with their PER canonical ids as dictionary
+  * ranks. The cross-turn rule (k=1) emits as soon as the second side of an
+  * adjacent-turn pair arrives; within-turn rules are stateless and emitted
+  * in the same pass.
   *
-  * State eviction: `assemble` uses `NoTimeout` (bounded demos; a
-  * processing-time timeout makes the micro-batch engine schedule empty
-  * batches just to evaluate timers). The production paths at 10^12 turns
-  * are `assembleWithEviction` and `assembleWithEvictionEncoded`: event-time
-  * timeout keyed to the transcript watermark — a conversation idle past the
-  * watermark has its per-conv state dropped, so state is bounded by the
-  * number of LIVE conversations, not all conversations ever seen.
+  * State eviction: event-time timeout keyed to the transcript watermark —
+  * a conversation idle past the watermark has its per-conv state dropped,
+  * so state is bounded by the number of LIVE conversations, not all
+  * conversations ever seen.
   *
   * Late turns: Spark filters rows behind the PREVIOUS micro-batch's
   * watermark before the handler runs, so rows between that and the current
@@ -30,62 +28,24 @@ import graft.stages.{TripleDict, Triples}
   * so a late turn emits nothing (within-turn triples included) and no
   * timer is ever armed below the watermark.
   *
-  * Ordering contract: `assemble` (the in-order demo path) requires turns of
-  * one conversation to arrive in turn order across micro-batches. The
-  * eviction paths do NOT: a turn arriving in any order within the
-  * watermark window still links — a `follows_up` pair emits exactly once,
-  * when the later-ARRIVING side of the adjacent-turn pair lands. The only
-  * per-turn atomicity assumption kept is that one turn's mentions share a
-  * micro-batch (true for the upstream detect stage, which emits whole
-  * turns). A turn stays linkable while `ts + idleGap` is above the
-  * watermark — the same horizon as conversation-idleness eviction, now per
-  * turn. `assembleWithEviction` buffers every turn inside that horizon;
-  * `assembleWithEvictionEncoded` keeps only the link frontier (the turns
-  * with a neighbour still to come, see [[StreamingTriples.LinkFrontier]]),
-  * so an in-order conversation holds one buffered turn.
+  * Ordering contract: turns need not arrive in order — a turn arriving in
+  * any order within the watermark window still links, and a `follows_up`
+  * pair emits exactly once, when the later-ARRIVING side of the
+  * adjacent-turn pair lands. The only per-turn atomicity assumption is that
+  * one turn's mentions share a micro-batch (true for the upstream detect
+  * stage, which emits whole turns). A turn stays linkable while
+  * `ts + idleGap` is above the watermark — the same horizon as
+  * conversation-idleness eviction, now per turn. Only the link frontier is
+  * kept (see [[StreamingTriples.LinkFrontier]]), so an in-order
+  * conversation holds one buffered turn.
   */
 object StreamingTriples {
-
-  final case class ConvState(lastTurnIdx: Int, lastPers: Seq[String])
 
   /** CanonMention + the turn's event time (the watermark column). */
   final case class TimedCanonMention(
       conv_id: String, turn_idx: Int, start: Int, end: Int, label: String,
       surface: String, entity_id: String, canonical_id: String,
       ts: java.sql.Timestamp)
-
-  /** Shared per-group rule body (delegates to the batch stage's single
-    * source of truth, `Triples.withinTurnTriples`/`followUps`).
-    */
-  private def emitGroup(convId: String, rows: Seq[CanonMention],
-                        st0: ConvState): (ConvState, Vector[Triple]) = {
-    val byTurn = rows.groupBy(_.turn_idx).toSeq.sortBy(_._1)
-    var st = st0
-    val out = byTurn.iterator.flatMap { case (turnIdx, ms0) =>
-      // full (start, label, canonical_id) key, NOT start alone: start-ties
-      // would otherwise keep groupBy arrival order — nondeterministic across
-      // replays and divergent from the batch sort_array
-      val ms = ms0.map(m => (m.start, m.label, m.canonical_id))
-        .sorted(Triples.mentionKeyOrder)
-      val pers = ms.filter(_._2 == "PER").map(_._3)
-      val within = Triples.withinTurnTriples(convId, turnIdx, ms)
-      val cross =
-        if (st.lastTurnIdx == turnIdx - 1)
-          Triples.followUps(convId, turnIdx, pers, st.lastPers)
-        else Nil
-      st = ConvState(turnIdx, pers)
-      (within ++ cross).distinct.iterator
-    }.toVector
-    (st, out)
-  }
-
-  /** A buffered turn: event time + the turn's PER canonical ids. */
-  final case class TurnPers(ts: Long, pers: Seq[String])
-
-  /** Per-conversation state for the eviction path: turn_idx → TurnPers for
-    * every turn still inside the linkability horizon.
-    */
-  final case class BufState(turns: Map[Int, TurnPers])
 
   /** Delay string → milliseconds via Spark's OWN interval parser, so every
     * form `withWatermark`/`setTimeoutTimestamp` accept ("90 seconds",
@@ -97,81 +57,6 @@ object StreamingTriples {
       org.apache.spark.unsafe.types.UTF8String.fromString(s))
     require(iv.months == 0, s"month-based delay '$s' has no fixed ms length")
     iv.days * 86400000L + iv.microseconds / 1000L
-  }
-
-  /** Production variant: event-time state eviction + out-of-order turn
-    * arrival (see class doc). Rows at or behind the current watermark are
-    * dropped in the handler before they emit or are buffered; turns above
-    * it may arrive in ANY order — within-turn triples emit on arrival, and
-    * each adjacent-turn `follows_up` pair emits when its later-arriving
-    * side lands. Buffered turns are pruned (inline and by the timeout
-    * callback) once the watermark passes `ts + idleGap`; a cross-turn link
-    * whose earlier side idled past that horizon is dropped, exactly like
-    * the conversation-idle eviction it generalizes.
-    *
-    * This string-state path buffers every turn inside the horizon; it is
-    * the reference the packed frontier of [[assembleWithEvictionEncoded]]
-    * is tested against, and the path for corpora without a TripleDict.
-    *
-    * @param idleGap how long past its event time a turn stays linkable /
-    *        a conversation may stay silent before its state is evicted.
-    */
-  def assembleWithEviction(mentions: Dataset[TimedCanonMention],
-                           watermark: String = "1 hour",
-                           idleGap: String = "30 minutes"): Dataset[Triple] = {
-    val spark = mentions.sparkSession
-    import spark.implicits._
-    val idleGapMs = parseDelayMs(idleGap)
-
-    mentions.withWatermark("ts", watermark)
-      .groupByKey(_.conv_id)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout()) {
-        (convId: String, rows: Iterator[TimedCanonMention], state: GroupState[BufState]) =>
-          def prune(turns: Map[Int, TurnPers], wm: Long): Map[Int, TurnPers] =
-            if (wm <= 0) turns else turns.filter(_._2.ts + idleGapMs > wm)
-          def rearm(turns: Map[Int, TurnPers]): Unit =
-            if (turns.nonEmpty)
-              state.setTimeoutTimestamp(turns.valuesIterator.map(_.ts).max, idleGap)
-          if (state.hasTimedOut) {
-            // the timer is always armed at max(buffered ts) + idleGap, so
-            // when it fires EVERY buffered turn is past its linkability
-            // horizon (ts + idleGap ≤ maxTs + idleGap < wm) — drop it all
-            state.remove()
-            Iterator.empty
-          } else {
-            val wm = state.getCurrentWatermarkMs()
-            var buf = prune(state.getOption.map(_.turns).getOrElse(Map.empty), wm)
-            val out = Vector.newBuilder[Triple]
-            // ascending turn order within the batch: an in-batch adjacent
-            // pair links via the prev lookup of its later turn
-            val byTurn = rows.filter(_.ts.getTime > wm).toSeq
-              .groupBy(_.turn_idx).toSeq.sortBy(_._1)
-            byTurn.foreach { case (turnIdx, ms0) =>
-              val ts = ms0.iterator.map(_.ts.getTime).max
-              val ms = ms0.map(m => (m.start, m.label, m.canonical_id))
-                .sorted(Triples.mentionKeyOrder) // batch sort_array order
-
-              val pers = ms.filter(_._2 == "PER").map(_._3)
-              out ++= Triples.withinTurnTriples(convId, turnIdx, ms).distinct
-              // link to the previous turn if it has already arrived …
-              buf.get(turnIdx - 1).foreach { prev =>
-                out ++= Triples.followUps(convId, turnIdx, pers, prev.pers).distinct
-              }
-              // … and to an out-of-order next turn that arrived earlier
-              buf.get(turnIdx + 1).foreach { nxt =>
-                out ++= Triples.followUps(convId, turnIdx + 1, nxt.pers, pers).distinct
-              }
-              buf += turnIdx -> TurnPers(ts, pers)
-            }
-            if (buf.isEmpty) state.remove() // every row was late
-            else {
-              state.update(BufState(buf))
-              rearm(buf)
-            }
-            out.result().iterator
-          }
-      }
   }
 
   /** Per-conversation state of [[assembleWithEvictionEncoded]]: the link
@@ -219,7 +104,9 @@ object StreamingTriples {
       * arrived. Returns the new frontier and the triples.
       *
       * On any input without a repeated turn, the triples are exactly those
-      * of the full buffer of [[assembleWithEviction]]. A turn delivered
+      * of a full buffer that keeps every turn inside the horizon and applies
+      * the reference model's string rule bodies (`TripleModel` in the tests;
+      * property-tested in LinkFrontierSpec). A turn delivered
       * again in a later call re-emits its within-turn triples, replaces its
       * buffered PER set and links only to neighbours still waiting for it,
       * so redelivering one turn never repeats a `follows_up`.
@@ -245,7 +132,7 @@ object StreamingTriples {
       }
       val out = new scala.collection.mutable.ArrayBuffer[Triple]()
       val dedup = new Triples.PairDedup
-      // `Triples.followUps(...).distinct` on ranks: p outer / q inner in
+      // `TripleModel.followUps(...).distinct` on ranks: p outer / q inner in
       // mention order, deduped on the batch walker's (predId=3, subj, obj) key
       def link(turnIdx: Int, cur: Array[Int], prev: Array[Int]): Unit = {
         dedup.clear()
@@ -306,27 +193,36 @@ object StreamingTriples {
     }
   }
 
-  /** Dictionary-encoded variant of [[assembleWithEviction]]: same output,
-    * late-row drop, out-of-order semantics and horizon, but the
-    * per-conversation state is the packed [[LinkFrontier]] — two primitive
-    * arrays holding only the turns that can still link, with PER canonical
-    * ids as TripleDict entity ranks — and the per-turn rules run on the
-    * batch path's packed mention longs (`Triples.emitTurnRules`), so subj /
-    * obj strings are shared references into the dictionary's entity array.
-    * The frontier's timer is armed at max(kept ts) + idleGap, and the state
-    * row is removed as soon as the frontier is empty. The per-conversation
-    * step is the pure [[LinkFrontier.step]].
+  /** Event-time state eviction + out-of-order turn arrival (see object
+    * doc). Rows at or behind the current watermark are dropped in the
+    * handler before they emit or are buffered; turns above it may arrive in
+    * ANY order — within-turn triples emit on arrival, and each adjacent-turn
+    * `follows_up` pair emits when its later-arriving side lands. Buffered
+    * turns are pruned once the watermark passes `ts + idleGap`; a cross-turn
+    * link whose earlier side idled past that horizon is dropped, exactly
+    * like the conversation-idle eviction it generalizes.
     *
-    * Output is identical to [[assembleWithEviction]] on any input without
-    * a repeated `(conv_id, turn_idx)` across micro-batches
-    * (equivalence-tested in StreamingTriplesSpec; the redelivery contract
-    * is on `LinkFrontier.step`). Requires the same dictionary premise as
-    * the batch encoded paths: every label and canonical id packable via
-    * `dict`, mention starts inside the packed layout's 23-bit bound and
-    * non-negative turn indices — each violation fails the query loudly,
-    * never a silent drop. Only `dict` is broadcast; its rank lookups are
-    * built once per executor. Use [[assembleWithEviction]] for corpora
-    * without a TripleDict.
+    * The per-conversation state is the packed [[LinkFrontier]] — two
+    * primitive arrays holding only the turns that can still link, with PER
+    * canonical ids as TripleDict entity ranks — and the per-turn rules run
+    * on the batch path's packed mention longs (`Triples.emitTurnRules`), so
+    * subj / obj strings are shared references into the dictionary's entity
+    * array. The frontier's timer is armed at max(kept ts) + idleGap, and the
+    * state row is removed as soon as the frontier is empty. The
+    * per-conversation step is the pure [[LinkFrontier.step]].
+    *
+    * When nothing is evicted and no `(conv_id, turn_idx)` repeats across
+    * micro-batches, the output equals the reference model's (`TripleModel`
+    * in the tests) over the rows that are not late (StreamingTriplesSpec;
+    * the redelivery contract is on `LinkFrontier.step`). Requires the same
+    * dictionary premise as the batch encoded paths: every label and
+    * canonical id packable via `dict`, mention starts inside the packed
+    * layout's 23-bit bound and non-negative turn indices — each violation
+    * fails the query loudly, never a silent drop. Only `dict` is broadcast;
+    * its rank lookups are built once per executor.
+    *
+    * @param idleGap how long past its event time a turn stays linkable /
+    *        a conversation may stay silent before its state is evicted.
     */
   def assembleWithEvictionEncoded(mentions: Dataset[TimedCanonMention],
                                   dict: TripleDict,
@@ -380,21 +276,6 @@ object StreamingTriples {
             }
             out.iterator
           }
-      }
-  }
-
-  def assemble(mentions: Dataset[CanonMention]): Dataset[Triple] = {
-    val spark = mentions.sparkSession
-    import spark.implicits._
-
-    mentions.groupByKey(_.conv_id)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.NoTimeout()) {
-        (convId: String, rows: Iterator[CanonMention], state: GroupState[ConvState]) =>
-          val (st, out) = emitGroup(convId, rows.toSeq,
-            state.getOption.getOrElse(ConvState(-1, Nil)))
-          state.update(st)
-          out.iterator
       }
   }
 }

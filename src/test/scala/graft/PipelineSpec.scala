@@ -28,6 +28,14 @@ class PipelineSpec extends SparkSpecBase {
     super.afterAll()
   }
 
+  /** A triple Dataset collected in `TripleModel.sorted` order. */
+  private def sorted(t: org.apache.spark.sql.Dataset[Triple]): Seq[Triple] =
+    TripleModel.sorted(t.collect())
+
+  /** The reference model's triples over a canon Dataset. */
+  private def modelOf(canon: org.apache.spark.sql.Dataset[CanonMention]): Seq[Triple] =
+    TripleModel.triples(canon.collect().toSeq)
+
   test("mention P/R vs gold ≥ 0.95 (target: = 1.0)") {
     val gold = Transcripts.goldMentions(spark, N).toDF()
     val prf = Eval.prf(result.mentions, gold, Eval.spanKeys)
@@ -57,36 +65,28 @@ class PipelineSpec extends SparkSpecBase {
     assert(prf.recall == 1.0, s"recall ${prf.recall} (${prf.nMatch} matched of ${prf.nGold})")
   }
 
-  test("window / join-based / auto-routed triple assembly are exactly equivalent") {
+  test("model ≡ Transcripts.goldTriples on the N=120 corpus") {
     import spark.implicits._
-    val canon = result.canon.as[graft.core.CanonMention]
-    def sorted(t: org.apache.spark.sql.Dataset[Triple]) =
-      t.orderBy("conv_id", "turn_idx", "subj", "pred", "obj").collect().toSeq
-    val viaWindow = sorted(Triples.runWindow(canon))
-    assert(sorted(Triples.runJoinBased(canon)) == viaWindow)
-    // default chunked path (every conversation fits one chunk)
-    assert(sorted(Triples.run(canon)) == viaWindow)
-    // chunk size small enough that every conversation spans many chunks —
-    // boundary context stitching must reproduce every cross-turn triple
-    assert(sorted(Triples.run(canon, chunkTurns = 3)) == viaWindow)
-    assert(sorted(Triples.run(canon, chunkTurns = 2)) == viaWindow)
+    // the reference every assembler is checked against, pinned to the
+    // generator's independent gold
+    val model = modelOf(result.canon.as[CanonMention])
+    assert(model.exists(_.pred == "follows_up") && model.exists(_.pred == "mentions_with"))
+    assert(model == sorted(Transcripts.goldTriples(spark, N)))
   }
 
   test("sorted exchange: 32-bit packed and hashed-key layouts are equivalent") {
     import spark.implicits._
     val canon = result.canon.as[graft.core.CanonMention]
-    def sorted(t: org.apache.spark.sql.Dataset[Triple]) =
-      t.orderBy("conv_id", "turn_idx", "subj", "pred", "obj").collect().toSeq
-    val viaWindow = sorted(Triples.runWindow(canon))
+    val model = modelOf(canon)
     // small chunks force cross-chunk context through the walker's
     // derived-ctx path
     for (chunk <- Seq(Triples.DefaultChunkTurns, 3, 2)) {
       assert(sorted(Triples.runEncodedSorted(canon, Pipeline.transcriptsDict,
-        Pipeline.transcriptsConvCodec, chunkTurns = chunk)) == viaWindow,
+        Pipeline.transcriptsConvCodec, chunkTurns = chunk)) == model,
         s"packed32 chunkTurns=$chunk diverged")
       // the hashed path treats ANY string id as opaque — numeric ones too
       assert(sorted(Triples.runEncodedSortedHashed(canon, Pipeline.transcriptsDict,
-        chunkTurns = chunk)) == viaWindow, s"hashed chunkTurns=$chunk diverged")
+        chunkTurns = chunk)) == model, s"hashed chunkTurns=$chunk diverged")
     }
   }
 
@@ -99,30 +99,26 @@ class PipelineSpec extends SparkSpecBase {
       "'-',substr(md5(conv_id),13,4),'-',substr(md5(conv_id),17,4),'-'," +
       "substr(md5(conv_id),21,12))")
     val canon = result.canon.withColumn("conv_id", uuid).as[graft.core.CanonMention]
-    def sorted(t: org.apache.spark.sql.Dataset[Triple]) =
-      t.orderBy("conv_id", "turn_idx", "subj", "pred", "obj").collect().toSeq
-    val viaWindow = sorted(Triples.runWindow(canon))
-    assert(viaWindow.nonEmpty)
+    val model = modelOf(canon)
+    assert(model.nonEmpty)
     for (chunk <- Seq(Triples.DefaultChunkTurns, 3, 2))
       assert(sorted(Triples.runEncodedSortedHashed(canon, Pipeline.transcriptsDict,
-        chunkTurns = chunk)) == viaWindow, s"uuid hashed chunkTurns=$chunk diverged")
+        chunkTurns = chunk)) == model, s"uuid hashed chunkTurns=$chunk diverged")
     // adversarial map-side layout: round-robin repartition destroys the
     // turn-contiguous run structure markCarriers amortizes on — carriers
     // multiply and turns can sort before their group's first carrier,
     // exercising the walker's pending-turn buffering; output must not move
     val shuffled = canon.repartition(7).as[graft.core.CanonMention]
     assert(sorted(Triples.runEncodedSortedHashed(shuffled, Pipeline.transcriptsDict,
-      chunkTurns = 3)) == viaWindow, "adversarial layout diverged")
+      chunkTurns = 3)) == model, "adversarial layout diverged")
   }
 
   test("fused detect→packed path ≡ detect→link→canon→sorted chain (round-7 hot path)") {
     import spark.implicits._
-    def sorted(t: org.apache.spark.sql.Dataset[Triple]) =
-      t.orderBy("conv_id", "turn_idx", "subj", "pred", "obj").collect().toSeq
     val canon = result.canon.as[graft.core.CanonMention]
     val viaChain = sorted(Triples.runEncodedSorted(canon, Pipeline.transcriptsDict,
       Pipeline.transcriptsConvCodec))
-    assert(viaChain.nonEmpty)
+    assert(viaChain.nonEmpty && viaChain == modelOf(canon))
     val tagger = Detect.lexiconTagger(spark, Transcripts.aliasRows, Transcripts.tagSet)
     // small chunk sizes force cross-chunk context through the fused path's
     // own overlap duplication (computed in the JVM, not in Catalyst)
@@ -133,6 +129,38 @@ class PipelineSpec extends SparkSpecBase {
         chunkTurns = chunk)) == viaChain, s"fused chunkTurns=$chunk diverged")
     // Result.triples IS the fused path since round 7 — pin the wiring too
     assert(sorted(result.triples.as[Triple]) == viaChain)
+  }
+
+  test("duplicate (conv_id, turn_idx) rows are pooled into one turn on every batch path") {
+    import spark.implicits._
+    val ts = new java.sql.Timestamp(0L)
+    val c = f"conv_${9}%08d"
+    // turn 1 arrives as two rows; turns 0 and 2 are its neighbours
+    val turns = Seq(
+      Turn(c, 0, "user", "Carol Danvers opened a new office in Osaka", null, ts),
+      Turn(c, 1, "user", "Alice Varga just joined Acme Corp", null, ts),
+      Turn(c, 1, "assistant", "Bob Castillo flew to Berlin", null, ts),
+      Turn(c, 2, "user", "reminder: Deepak Rao presents the roadmap tomorrow", null, ts)).toDS()
+    val tagger = Detect.lexiconTagger(spark, Transcripts.aliasRows, Transcripts.tagSet)
+    val canon = Canon.runFusedLinked(
+      Link.run(Detect.run(turns, tagger), Transcripts.aliasRows), Transcripts.sameAs)
+    val model = modelOf(canon)
+    // pooled: the two rows' mentions pair with each other, and both rows
+    // link to each neighbour
+    for (t <- Seq(Triple("PER00", "mentions_with", "PER01", c, 1),
+        Triple("PER01", "affiliated_with", "ORG00a", c, 1),
+        Triple("ORG00a", "located_in", "LOC00", c, 1),
+        Triple("PER01", "follows_up", "PER02", c, 1),
+        Triple("PER03", "follows_up", "PER00", c, 2),
+        Triple("PER03", "follows_up", "PER01", c, 2)))
+      assert(model.contains(t), s"model lacks $t: $model")
+    assert(sorted(Triples.runFusedDetect(turns, tagger, Transcripts.aliasRows,
+      Transcripts.sameAs, Pipeline.transcriptsDict, Pipeline.transcriptsConvEncodeJvm,
+      Pipeline.transcriptsConvCodec.decode)) == model, "runFusedDetect")
+    assert(sorted(Triples.runEncodedSorted(canon, Pipeline.transcriptsDict,
+      Pipeline.transcriptsConvCodec)) == model, "runEncodedSorted")
+    assert(sorted(Triples.runEncodedSortedHashed(canon, Pipeline.transcriptsDict)) == model,
+      "runEncodedSortedHashed")
   }
 
   test("snapshot linked/canon ≡ Pipeline.run linked/canon ≡ generator gold") {
@@ -264,7 +292,7 @@ class PipelineSpec extends SparkSpecBase {
     val e = intercept[IllegalArgumentException] {
       TripleDict(Seq("PER"), (0 until 10).map(i => s"E$i"), maxEntities = 4)
     }
-    assert(e.getMessage.contains("use Triples.run"), e.getMessage)
+    assert(e.getMessage.contains("exceeds MaxEntities (4)"), e.getMessage)
     // at the bound: fine
     assert(TripleDict(Seq("PER"), (0 until 4).map(i => s"E$i"), maxEntities = 4)
       .entities.length == 4)
@@ -319,8 +347,8 @@ class PipelineSpec extends SparkSpecBase {
         }
       }
     }
-    // local reference: base k=1 triples from the trusted window witness,
-    // plus follows_up2 computed directly from the fixture rows
+    // local reference: base k=1 triples from the reference model, plus
+    // follows_up2 computed directly from the fixture rows
     val byTurn = rows.groupBy(r => (r.conv_id, r.turn_idx))
     val fu2 = byTurn.keys.toSeq.flatMap { case (cid, t) =>
       val cur = byTurn((cid, t)).filter(_.label == "PER").map(_.canonical_id)
@@ -330,14 +358,11 @@ class PipelineSpec extends SparkSpecBase {
         .distinct
     }
     assert(fu2.nonEmpty, "fixture must exercise depth-2 context")
-    val expect = (Triples.runWindow(canon).collect().toSeq ++ fu2)
-      .sortBy(t => (t.conv_id, t.turn_idx, t.subj, t.pred, t.obj))
-    def got(t: org.apache.spark.sql.Dataset[Triple]) =
-      t.collect().toSeq.sortBy(t => (t.conv_id, t.turn_idx, t.subj, t.pred, t.obj))
+    val expect = TripleModel.sorted(TripleModel.triples(rows) ++ fu2)
     for (chunk <- Seq(Triples.DefaultChunkTurns, 7, 4, 3)) {
-      assert(got(Triples.runEncodedSortedRules(canon, dict, chunk,
+      assert(sorted(Triples.runEncodedSortedRules(canon, dict, chunk,
         Pipeline.transcriptsConvCodec, rules2)) == expect, s"packed32 k=2 chunkTurns=$chunk")
-      assert(got(Triples.runEncodedSortedHashedRules(canon, dict, chunk,
+      assert(sorted(Triples.runEncodedSortedHashedRules(canon, dict, chunk,
         rules2)) == expect, s"hashed k=2 chunkTurns=$chunk")
     }
   }
@@ -442,7 +467,7 @@ class PipelineSpec extends SparkSpecBase {
     val labels = Array("PER", "ORG", "LOC")
     for (trial <- 1 to 4) {
       val nConvs = 1 + rnd.nextInt(6)
-      val canon = (0 until nConvs).flatMap { c =>
+      val rows = (0 until nConvs).flatMap { c =>
         val nTurns = 1 + rnd.nextInt(40)
         (0 until nTurns).flatMap { t =>
           // ~1/3 of turns empty → exercises non-adjacent prev filtering
@@ -453,98 +478,52 @@ class PipelineSpec extends SparkSpecBase {
               s"$lbl${rnd.nextInt(5)}", s"$lbl${rnd.nextInt(5)}")
           }
         }
-      }.toDS()
-      def sorted(t: org.apache.spark.sql.Dataset[Triple]) =
-        t.orderBy("conv_id", "turn_idx", "subj", "pred", "obj").collect().toSeq
-      val viaWindow = sorted(Triples.runWindow(canon))
+      }
+      val canon = rows.toDS()
+      val model = TripleModel.triples(rows)
       val chunk = Seq(2, 3, 5, 17)(rnd.nextInt(4))
-      assert(sorted(Triples.run(canon, chunkTurns = chunk)) == viaWindow,
-        s"trial $trial chunkTurns=$chunk diverged")
-      assert(sorted(Triples.runJoinBased(canon)) == viaWindow, s"trial $trial join diverged")
       // sorted walker: both wire layouts (packed32, hashed) see every random
       // corpus; the dict covers every id the random generator can emit
       val dict = TripleDict(labels.toSeq,
         for (l <- labels.toSeq; i <- 0 until 5) yield s"$l$i")
       for ((name, path) <- packedPaths(dict, chunk))
-        assert(sorted(path(canon)) == viaWindow,
+        assert(sorted(path(canon)) == model,
           s"trial $trial $name chunkTurns=$chunk diverged")
     }
   }
 
-  test("generalized chunk overlap k=2: boundary context ≡ unchunked window for depth-2 rules") {
+  test("sorted walker: no lag context leaks between conversations sharing a partition") {
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.{DataFrame, Row}
-    val rnd = new scala.util.Random(77)
-    val labels = Array("PER", "ORG", "LOC")
-    val canon = (0 until 4).flatMap { c =>
-      (0 until 30).flatMap { t =>
-        if (rnd.nextInt(3) == 0) Nil // sparse: gaps exercise idx-vs-lag checks
-        else (0 until 1 + rnd.nextInt(2)).map { m =>
-          val lbl = labels(rnd.nextInt(3))
-          CanonMention(s"conv$c", t, m * 10, m * 10 + 3, lbl, "x", s"$lbl$m", s"$lbl$m")
-        }
-      }
-    }.toDS()
-    val packed = canon.toDF()
-      .select(col("conv_id").as("_cid"), col("turn_idx"),
-        struct(col("start"), col("label"), col("canonical_id")).as("_m"))
-    val agg = sort_array(collect_list(col("_m")))
-
-    def msOf(r: Row, i: Int): Seq[(Int, String, String)] =
-      r.getSeq[Row](i).map(x => (x.getInt(0), x.getString(1), x.getString(2)))
-    // depth-d context (d ∈ 1..2): the (d, prev-turn ms) pairs whose lag's
-    // ACTUAL turn distance is d — the idx check every depth-d rule makes
-    // (lag position ≠ turn distance on sparse turn indices)
-    def ctx(df: DataFrame): Map[(String, Int), Set[(Int, Seq[(Int, String, String)])]] =
-      df.collect().map { r =>
-        val t = r.getInt(1)
-        val pairs = Seq(3, 5).flatMap { c =>
-          if (r.isNullAt(c)) Nil
-          else {
-            val d = t - r.getInt(c)
-            if (d <= 2) Seq((d, msOf(r, c + 1))) else Nil
-          }
-        }.toSet
-        (r.getString(0), t) -> pairs
-      }.toMap
-
-    val perTurn = packed.groupBy(col("_cid"), col("turn_idx")).agg(agg.as("ms"))
-    val w = Window.partitionBy(col("_cid")).orderBy(col("turn_idx"))
-    val unchunked = perTurn
-      .withColumn("i1", lag(col("turn_idx"), 1).over(w))
-      .withColumn("m1", lag(col("ms"), 1).over(w))
-      .withColumn("i2", lag(col("turn_idx"), 2).over(w))
-      .withColumn("m2", lag(col("ms"), 2).over(w))
-      .select(col("_cid"), col("turn_idx"), col("ms"),
-        col("i1"), col("m1"), col("i2"), col("m2"))
-    val expect = ctx(unchunked)
-    assert(expect.exists(_._2.exists(_._1 == 2)), "fixture must exercise depth-2 context")
-    for (chunk <- Seq(3, 4, 7)) {
-      val got = ctx(Triples.chunkedWithContext(packed, chunk, 2, agg))
-      assert(got == expect, s"chunkTurns=$chunk depth-2 context diverged")
+    // one turn per conversation, at index c % 2: wherever an odd
+    // conversation's group follows an even one's in a partition, a lag ring
+    // carried over the group edge would pair it with its neighbour's turn
+    val rows = (0 until 40).flatMap { c =>
+      Seq(CanonMention(f"conv_$c%08d", c % 2, 0, 3, "PER", "x", s"P$c", s"P$c"),
+        CanonMention(f"conv_$c%08d", c % 2, 5, 8, "ORG", "x", "O", "O"))
     }
+    val model = TripleModel.triples(rows)
+    assert(model.size == 40 && model.forall(_.pred == "affiliated_with"))
+    val dict = TripleDict(Seq("PER", "ORG"), rows.map(_.canonical_id))
+    for (chunk <- Seq(Triples.DefaultChunkTurns, 2); (name, path) <- packedPaths(dict, chunk))
+      assert(sorted(path(rows.toDS())) == model, s"$name chunkTurns=$chunk")
   }
 
   test("a pathological oversized conversation spreads across chunks and matches the window") {
     import spark.implicits._
     // one conversation 100× over the chunk size, mixed with normal ones —
-    // the shape that serializes a single window task at web scale; sparse
-    // turns (every 3rd empty) exercise the non-adjacent-prev filtering at
-    // chunk boundaries too
+    // the shape that would serialize one task at web scale without
+    // chunking; sparse turns (every 3rd empty) exercise the non-adjacent-prev
+    // filtering at chunk boundaries too
     val huge = (0 until 5000).filter(_ % 3 != 2).map(i =>
       CanonMention("huge", i, 0, 5, "PER", "x", s"P${i % 7}", s"P${i % 7}"))
     val normal = (0 until 60).map(i =>
       CanonMention(s"c${i / 3}", i % 3, 0, 5, "PER", "x", s"Q$i", s"Q$i"))
-    val canon = (huge ++ normal).toDS()
-    def sorted(t: org.apache.spark.sql.Dataset[Triple]) =
-      t.orderBy("conv_id", "turn_idx", "subj", "pred", "obj").collect().toSeq
-    val chunked = sorted(Triples.run(canon, chunkTurns = 50))
-    assert(chunked == sorted(Triples.runWindow(canon)))
-    assert(chunked.exists(_.conv_id == "huge") && chunked.exists(_.conv_id == "c0"))
+    val model = TripleModel.triples(huge ++ normal)
+    assert(model.exists(_.conv_id == "huge") && model.exists(_.conv_id == "c0"))
     val dict = TripleDict(Seq("PER"),
       (0 until 7).map(i => s"P$i") ++ (0 until 60).map(i => s"Q$i"))
-    assert(sorted(Triples.runEncodedSortedHashed(canon, dict, chunkTurns = 50)) == chunked)
+    assert(sorted(Triples.runEncodedSortedHashed((huge ++ normal).toDS(), dict,
+      chunkTurns = 50)) == model)
   }
 
   test("canonicalization resolves sibling org ids to component min") {

@@ -32,32 +32,6 @@ class PlansSpec extends SparkSpecBase {
     assert(p.contains("BroadcastHashJoin"), s"expected broadcast joins in:\n$p")
   }
 
-  test("window triple assembly: no self-join, and ONE exchange serves agg + window") {
-    val canon = Seq(CanonMention("c", 0, 0, 5, "PER", "x", "PER00", "PER00")).toDS()
-    val p = plan(Triples.runWindow(canon).toDF())
-    // one aggregate + one window over the aggregated relation; no join at all
-    assert(!p.contains("Join"), s"triples must not join:\n$p")
-    assert(p.contains("Window"))
-    // the conv_id repartition satisfies both the (conv,turn) aggregation
-    // and the conv window — a second exchange would re-ship the full
-    // struct volume (collect_list partials don't compress)
-    val nEx = "Exchange".r.findAllIn(p).length
-    assert(nEx == 1, s"expected exactly 1 exchange, got $nEx:\n$p")
-  }
-
-  test("chunked (default) triple assembly: no join, ONE exchange serves agg + chunk window") {
-    val canon = (0 until 40).map(i =>
-      CanonMention(s"c${i % 4}", i / 4, 0, 5, "PER", "x", s"PER$i", s"PER$i")).toDS()
-    // the skew-proof default keeps the single-exchange property: one
-    // hash(conv_id, chunk) shuffle feeds both the per-turn aggregation and
-    // the chunk window; boundary stitching is an explode, not a join
-    val p = plan(Triples.run(canon, chunkTurns = 2).toDF())
-    assert(!p.contains("Join"), s"chunked assembly must not join:\n$p")
-    assert(p.contains("Window") && p.contains("Generate"), s"window + explode expected:\n$p")
-    val nEx = "Exchange".r.findAllIn(p).length
-    assert(nEx == 1, s"expected exactly 1 exchange, got $nEx:\n$p")
-  }
-
   /** Plans of the two layouts that encode canon rows: Packed32 (with the
     * transcripts conv codec) and hashed conv keys. */
   private def encodedPlans(): Seq[(String, String)] = {

@@ -3,8 +3,10 @@ package graft
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.core._
-import graft.stages.Detect
+import graft.stages.{Detect, Pipeline, TripleDict}
 import graft.streaming.StreamingDetect
+import graft.streaming.StreamingTriples
+import graft.streaming.StreamingTriples.TimedCanonMention
 import graft.synth.Transcripts
 
 /** Structured Streaming path: detect over a streaming source, watermarked
@@ -24,7 +26,8 @@ class StreamingSpec extends SparkSpecBase {
     src.addData(
       mkTurn("c1", 0, "Alice Varga joined Acme Corp last week", 0),
       mkTurn("c1", 1, "no entities here", 1))
-    val q = StreamingDetect.mentions(src.toDS(), tagger)
+    // Detect.run is a typed mapPartitions, so it runs on the stream as is
+    val q = Detect.run(src.toDS(), tagger)
       .writeStream.format("memory").queryName("m_out")
       .outputMode("append").start()
     try {
@@ -72,123 +75,110 @@ class StreamingSpec extends SparkSpecBase {
   }
 }
 
+/** The streaming operator `StreamingTriples.assembleWithEvictionEncoded`
+  * against the reference model (`TripleModel`) over the rows that are not
+  * late. Where a scenario evicts state on purpose, the links it loses are
+  * listed by hand.
+  */
 class StreamingTriplesSpec extends SparkSpecBase {
   import spark.implicits._
-  import graft.streaming.StreamingTriples
 
-  private def cm(conv: String, turn: Int, start: Int, label: String,
-                 canon: String): CanonMention =
-    CanonMention(conv, turn, start, start + 3, label, "xxx", canon, canon)
+  private def at(minute: Int): Timestamp =
+    Timestamp.valueOf(f"2024-01-01 ${10 + minute / 60}%02d:${minute % 60}%02d:00")
+
+  private def tcm(conv: String, turn: Int, start: Int, label: String, canon: String,
+                  minute: Int): TimedCanonMention =
+    TimedCanonMention(conv, turn, start, start + 3, label, "xxx", canon, canon, at(minute))
+
+  private def model(rows: Seq[TimedCanonMention]): Seq[Triple] =
+    TripleModel.triples(rows.map(t => CanonMention(t.conv_id, t.turn_idx, t.start,
+      t.end, t.label, t.surface, t.entity_id, t.canonical_id)))
+
+  /** A dictionary over the rows' own ids, for fixtures whose ids the
+    * transcripts dictionary does not hold.
+    */
+  private def dictOf(rows: Seq[TimedCanonMention]): TripleDict =
+    TripleDict(Seq("PER", "ORG", "LOC"), rows.map(_.canonical_id))
+
+  /** Feeds `batches` one micro-batch each through the operator into a
+    * memory sink and returns what it emitted. With `noDataBatches` off, no
+    * watermark-only micro-batch runs between the data batches, as in a file
+    * replay where every next batch has data.
+    */
+  private def stream(name: String, batches: Seq[Seq[TimedCanonMention]], dict: TripleDict,
+                  watermark: String = "1 hour", idleGap: String = "30 minutes",
+                  noDataBatches: Boolean = true): Seq[Triple] = {
+    implicit val sqlCtx = spark.sqlContext
+    val src = MemoryStream[TimedCanonMention]
+    val ds = StreamingTriples.assembleWithEvictionEncoded(src.toDS(), dict,
+      watermark = watermark, idleGap = idleGap)
+    if (!noDataBatches) spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    val q = try ds.writeStream.format("memory").queryName(name).outputMode("append").start()
+      finally spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
+    try batches.foreach { b => src.addData(b); q.processAllAvailable() }
+    finally q.stop() // a leaked query would poison later suites' job counts
+    TripleModel.sorted(
+      spark.sql(s"SELECT subj, pred, obj, conv_id, turn_idx FROM $name").as[Triple].collect())
+  }
 
   test("stateful incremental triples match the batch rules across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val src = MemoryStream[CanonMention]
     // batch 1: turn 0 with PER+ORG, turn 1 with PER
-    src.addData(
-      cm("c1", 0, 0, "PER", "PER00"), cm("c1", 0, 10, "ORG", "ORG00a"),
-      cm("c1", 1, 0, "PER", "PER01"))
-    val q = StreamingTriples.assemble(src.toDS())
-      .writeStream.format("memory").queryName("t_out").outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      // batch 2: turn 2 with PER — cross-turn vs turn 1's PER, carried in state
-      src.addData(cm("c1", 2, 0, "PER", "PER02"))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.sql("SELECT subj, pred, obj, turn_idx FROM t_out")
-      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2), r.getInt(3))).toSet
-    assert(got == Set(
+    val b1 = Seq(tcm("c1", 0, 0, "PER", "PER00", 0), tcm("c1", 0, 10, "ORG", "ORG00a", 0),
+      tcm("c1", 1, 0, "PER", "PER01", 1))
+    // batch 2: turn 2 with PER — cross-turn vs turn 1's PER, carried in state
+    val b2 = Seq(tcm("c1", 2, 0, "PER", "PER02", 2))
+    val got = stream("t_out", Seq(b1, b2), Pipeline.transcriptsDict)
+    assert(got == model(b1 ++ b2))
+    assert(got.map(t => (t.subj, t.pred, t.obj, t.turn_idx)).toSet == Set(
       ("PER00", "affiliated_with", "ORG00a", 0),
       ("PER01", "follows_up", "PER00", 1),   // state from batch-1 turn 0
       ("PER02", "follows_up", "PER01", 2)))  // state carried ACROSS batches
   }
 
   test("event-time eviction: idle conversations lose state; late turns are dropped") {
-    import java.sql.Timestamp
-    import graft.streaming.StreamingTriples.TimedCanonMention
-    implicit val sqlCtx = spark.sqlContext
-    def tcm(conv: String, turn: Int, start: Int, canon: String, minute: Int) =
-      TimedCanonMention(conv, turn, start, start + 3, "PER", "xxx", canon, canon,
-        Timestamp.valueOf(f"2024-01-01 ${10 + minute / 60}%02d:${minute % 60}%02d:00"))
-    val src = MemoryStream[TimedCanonMention]
-    val q = StreamingTriples.assembleWithEviction(src.toDS(),
-        watermark = "10 minutes", idleGap = "5 minutes")
-      .writeStream.format("memory").queryName("ev_out").outputMode("append").start()
-    try {
-      // batch 1: conv A turn 0 (PER00) at 10:00
-      src.addData(tcm("A", 0, 0, "PER00", 0))
-      q.processAllAvailable()
-      // batch 2: unrelated conv B far ahead (minute 120) — advances the
-      // watermark to ~11:50, far past A's 10:00 + 5min idle gap
-      src.addData(tcm("B", 0, 0, "PER90", 120))
-      q.processAllAvailable()
-      // batch 3: another B event so the timer actually fires in a batch whose
+    val late = tcm("A", 1, 0, "PER", "PER01", 1)
+    val batches = Seq(
+      Seq(tcm("A", 0, 0, "PER", "PER00", 0)),    // conv A turn 0 at 10:00
+      // unrelated conv B far ahead (minute 120) — advances the watermark to
+      // ~11:50, far past A's 10:00 + 5min idle gap
+      Seq(tcm("B", 0, 0, "PER", "PER90", 120)),
+      // another B event so the timer actually fires in a batch whose
       // watermark already covers A's timeout
-      src.addData(tcm("B", 1, 0, "PER91", 121))
-      q.processAllAvailable()
-      // batch 4a: LATE turn for A (10:01, below watermark) → dropped entirely
-      src.addData(tcm("A", 1, 0, "PER01", 1))
-      q.processAllAvailable()
-      // batch 4b: fresh A turn ABOVE the watermark: state was evicted, so no
+      Seq(tcm("B", 1, 0, "PER", "PER91", 121)),
+      Seq(late),                                 // LATE (10:01) → dropped
+      // fresh A turn ABOVE the watermark: state was evicted, so no
       // follows_up against PER00 even though turn_idx is adjacent
-      src.addData(tcm("A", 1, 0, "PER01", 125))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.sql("SELECT subj, pred, obj, conv_id FROM ev_out")
-      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3))).toSet
-    // B's own follows_up proves the handler still works; A must have NONE
-    assert(got.contains(("PER91", "follows_up", "PER90", "B")))
-    assert(!got.exists(t => t._4 == "A" && t._2 == "follows_up"),
-      s"evicted conversation A still emitted follows_up: $got")
+      Seq(tcm("A", 1, 0, "PER", "PER01", 125)))
+    val got = stream("ev_out", batches, dictOf(batches.flatten),
+      watermark = "10 minutes", idleGap = "5 minutes")
+    val evicted = Seq(Triple("PER01", "follows_up", "PER00", "A", 1))
+    val onTime = batches.flatten.filterNot(_ == late)
+    assert(evicted.forall(model(onTime).contains))
+    assert(got == model(onTime).diff(evicted), s"got: $got")
+    // B's own follows_up proves the handler still works
+    assert(got.contains(Triple("PER91", "follows_up", "PER90", "B", 1)))
   }
 
   test("out-of-order turns within the watermark still assemble (matches batch)") {
-    import java.sql.Timestamp
-    import graft.streaming.StreamingTriples.TimedCanonMention
-    implicit val sqlCtx = spark.sqlContext
-    def tcm(turn: Int, start: Int, label: String, canon: String) =
-      TimedCanonMention("A", turn, start, start + 3, label, "xxx", canon, canon,
-        Timestamp.valueOf(f"2024-01-01 10:$turn%02d:00"))
     val turns = Map(
-      0 -> Seq(tcm(0, 0, "PER", "PER00"), tcm(0, 10, "ORG", "ORG00a")),
-      1 -> Seq(tcm(1, 0, "PER", "PER01")),
-      2 -> Seq(tcm(2, 0, "PER", "PER02"), tcm(2, 10, "PER", "PER02b")),
-      3 -> Seq(tcm(3, 0, "PER", "PER03")))
-    val src = MemoryStream[TimedCanonMention]
-    // compound interval: idleGap must accept every form Spark's own
-    // watermark parser does (pins the delay-parsing contract)
-    val q = graft.streaming.StreamingTriples.assembleWithEviction(src.toDS(),
-        watermark = "30 minutes", idleGap = "1 hour 30 minutes")
-      .writeStream.format("memory").queryName("ooo_out").outputMode("append").start()
+      0 -> Seq(tcm("A", 0, 0, "PER", "PER00", 0), tcm("A", 0, 10, "ORG", "ORG00a", 0)),
+      1 -> Seq(tcm("A", 1, 0, "PER", "PER01", 1)),
+      2 -> Seq(tcm("A", 2, 0, "PER", "PER02", 2), tcm("A", 2, 10, "PER", "PER02b", 2)),
+      3 -> Seq(tcm("A", 3, 0, "PER", "PER03", 3)))
     // whole turns arrive SHUFFLED across micro-batches: 2, 0, 3, 1 — every
-    // arrival stays within the watermark window
-    try Seq(2, 0, 3, 1).foreach { t => src.addData(turns(t)); q.processAllAvailable() }
-    finally q.stop()
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getString(0), r.getString(1), r.getString(2), r.getInt(3))
-    val streamed = spark.sql("SELECT subj, pred, obj, turn_idx FROM ooo_out")
-      .collect().map(key).sorted.toSeq
-    val batchInput = turns.values.flatten.toSeq
-      .map(t => CanonMention(t.conv_id, t.turn_idx, t.start, t.end, t.label,
-        t.surface, t.entity_id, t.canonical_id)).toDS()
-    val batch = graft.stages.Triples.run(batchInput).toDF()
-      .select("subj", "pred", "obj", "turn_idx").collect().map(key).sorted.toSeq
-    assert(streamed.nonEmpty && streamed == batch,
-      s"out-of-order stream diverged from batch:\n  stream=$streamed\n  batch=$batch")
+    // arrival stays within the watermark window. Compound interval: idleGap
+    // must accept every form Spark's own watermark parser does (pins the
+    // delay-parsing contract)
+    val got = stream("ooo_out", Seq(2, 0, 3, 1).map(turns), dictOf(turns.values.flatten.toSeq),
+      watermark = "30 minutes", idleGap = "1 hour 30 minutes")
+    val expect = model(turns.values.flatten.toSeq)
+    assert(expect.exists(_.pred == "follows_up") && got == expect,
+      s"out-of-order stream diverged from the model:\n  stream=$got\n  model=$expect")
   }
 
   test("packed-state eviction path ≡ string-state path (out-of-order + eviction scenarios)") {
-    import java.sql.Timestamp
-    import graft.streaming.StreamingTriples.TimedCanonMention
-    implicit val sqlCtx = spark.sqlContext
-    val dict = graft.stages.Pipeline.transcriptsDict
-    def tcm(conv: String, turn: Int, start: Int, label: String, canon: String,
-            minute: Int) =
-      TimedCanonMention(conv, turn, start, start + 3, label, "xxx", canon, canon,
-        Timestamp.valueOf(f"2024-01-01 ${10 + minute / 60}%02d:${minute % 60}%02d:00"))
     // out-of-order turns, an idle conversation that gets evicted, and a late
-    // drop — the scenarios the two state layouts must agree on. Canonical
-    // ids come from the transcripts dict so the packed path can rank them.
+    // drop. Canonical ids come from the transcripts dict.
     val batches = Seq(
       Seq(tcm("A", 2, 0, "PER", "PER02", 2), tcm("A", 2, 10, "PER", "PER03", 2)),
       Seq(tcm("A", 0, 0, "PER", "PER00", 0), tcm("A", 0, 10, "ORG", "ORG00a", 0),
@@ -198,36 +188,21 @@ class StreamingTriplesSpec extends SparkSpecBase {
       Seq(tcm("B", 0, 0, "PER", "PER05", 120)), // advances watermark far past A
       Seq(tcm("B", 1, 0, "PER", "PER06", 121)), // fires A's eviction timer
       Seq(tcm("A", 4, 0, "PER", "PER07", 125))) // A evicted: no follows_up to 3
-    def run(encoded: Boolean, name: String): Seq[(String, String, String, String, Int)] = {
-      val src = MemoryStream[TimedCanonMention]
-      val ds =
-        if (encoded) graft.streaming.StreamingTriples.assembleWithEvictionEncoded(
-          src.toDS(), dict, watermark = "10 minutes", idleGap = "5 minutes")
-        else graft.streaming.StreamingTriples.assembleWithEviction(
-          src.toDS(), watermark = "10 minutes", idleGap = "5 minutes")
-      val q = ds.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try batches.foreach { b => src.addData(b); q.processAllAvailable() }
-      finally q.stop()
-      spark.sql(s"SELECT subj, pred, obj, conv_id, turn_idx FROM $name")
-        .collect().map(r => (r.getString(0), r.getString(1), r.getString(2),
-          r.getString(3), r.getInt(4))).sorted.toSeq
-    }
-    val plain = run(encoded = false, "pk_plain")
-    val packed = run(encoded = true, "pk_packed")
-    assert(plain.nonEmpty && plain.exists(_._2 == "follows_up"))
-    assert(packed == plain, s"packed state diverged:\n  packed=$packed\n  plain=$plain")
+    val got = stream("pk_packed", batches, Pipeline.transcriptsDict,
+      watermark = "10 minutes", idleGap = "5 minutes")
+    val evicted = Seq(Triple("PER07", "follows_up", "PER04", "A", 4))
+    val all = model(batches.flatten)
+    assert(evicted.forall(all.contains))
+    assert(got.exists(_.pred == "follows_up"))
+    assert(got == all.diff(evicted), s"packed state diverged from the model:\n  got=$got")
   }
 
   test("packed-state path fails LOUDLY on a canonical id outside the dict") {
-    import java.sql.Timestamp
-    import graft.streaming.StreamingTriples.TimedCanonMention
     implicit val sqlCtx = spark.sqlContext
     val src = MemoryStream[TimedCanonMention]
     src.addData(TimedCanonMention("A", 0, 0, 3, "PER", "xxx", "ZZZ99", "ZZZ99",
       Timestamp.valueOf("2024-01-01 10:00:00")))
-    val q = graft.streaming.StreamingTriples.assembleWithEvictionEncoded(
-        src.toDS(), graft.stages.Pipeline.transcriptsDict)
+    val q = StreamingTriples.assembleWithEvictionEncoded(src.toDS(), Pipeline.transcriptsDict)
       .writeStream.format("memory").queryName("pk_loud").outputMode("append").start()
     val e = intercept[Exception] { try q.processAllAvailable() finally q.stop() }
     def msgs(t: Throwable): Seq[String] =
@@ -238,94 +213,75 @@ class StreamingTriplesSpec extends SparkSpecBase {
   }
 
   test("streaming triples equal batch triples on a full replayed corpus") {
-    implicit val sqlCtx = spark.sqlContext
-    val r = graft.stages.Pipeline.run(spark, 25)
+    val r = Pipeline.run(spark, 25)
     val canon = r.canon.as[CanonMention].collect().toSeq
-    val src = MemoryStream[CanonMention]
-    val q = StreamingTriples.assemble(src.toDS())
-      .writeStream.format("memory").queryName("t_out2").outputMode("append").start()
+    // one event time for every row: nothing is ever late or evicted
+    val ordered = canon.sortBy(m => (m.conv_id, m.turn_idx, m.start))
+      .map(m => TimedCanonMention(m.conv_id, m.turn_idx, m.start, m.end, m.label,
+        m.surface, m.entity_id, m.canonical_id, at(0)))
     // feed in two turn-ordered chunks, split at a TURN boundary (a turn's
     // mentions must land in one micro-batch — the handler treats each
     // invocation's rows per turn as complete)
-    val ordered = canon.sortBy(m => (m.conv_id, m.turn_idx, m.start))
     var cut = ordered.size / 2
     while (cut < ordered.size && ordered(cut - 1).conv_id == ordered(cut).conv_id &&
            ordered(cut - 1).turn_idx == ordered(cut).turn_idx) cut += 1
     val (first, second) = ordered.splitAt(cut)
-    try {
-      src.addData(first); q.processAllAvailable()
-      src.addData(second); q.processAllAvailable()
-    } finally q.stop()
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getString(0), r.getString(1), r.getString(2), r.getString(3), r.getInt(4))
-    val streamed = spark.sql("SELECT subj, pred, obj, conv_id, turn_idx FROM t_out2")
-      .collect().map(key).sorted.toSeq
-    val batch = graft.stages.Triples.run(r.canon.as[CanonMention]).toDF()
-      .select("subj", "pred", "obj", "conv_id", "turn_idx")
-      .collect().map(key).sorted.toSeq
-    assert(streamed == batch)
+    val got = stream("t_out2", Seq(first, second), Pipeline.transcriptsDict)
+    assert(got.nonEmpty && got == TripleModel.triples(canon))
   }
 
   test("exactly-once across a query RESTART: checkpointed state resumes, no dupes, no losses") {
     import java.nio.file.Files
     // the streaming analogue of ResumeSpec: stop the query mid-corpus,
     // restart from the checkpoint, and require the total emitted triple
-    // multiset to equal batch — which proves BOTH that the per-conversation
-    // state (last turn's PERs) was restored across the restart (the
+    // multiset to equal the model — which proves BOTH that the
+    // per-conversation link frontier was restored across the restart (the
     // follows_up pairs spanning the cut exist) and that no triple was
     // re-emitted (the checkpoint + file-sink commit log give exactly-once)
     val base = Files.createTempDirectory("graft_restart")
     val srcDir = base.resolve("src"); Files.createDirectories(srcDir)
     val chk = base.resolve("chk"); val outDir = base.resolve("out")
+    // event time = turn minute: far inside the watermark and the idle gap,
+    // so nothing is late or evicted
     val all = for {
       c <- Seq("A", "B"); t <- 0 until 4
-      m <- cm(s"c$c", t, 0, "PER", s"PER_${c}$t") ::
-           (if (t % 2 == 0) List(cm(s"c$c", t, 10, "ORG", s"ORG_${c}$t")) else Nil)
+      m <- tcm(s"c$c", t, 0, "PER", s"PER_${c}$t", t) ::
+           (if (t % 2 == 0) List(tcm(s"c$c", t, 10, "ORG", s"ORG_${c}$t", t)) else Nil)
     } yield m
+    val dict = dictOf(all)
     // cut at a turn boundary: turns 0-1 before the restart, 2-3 after, so
     // every conversation has a follows_up pair CROSSING the restart
     val (first, second) = all.partition(_.turn_idx < 2)
-    def writeBatch(rows: Seq[CanonMention]): Unit =
+    def writeBatch(rows: Seq[TimedCanonMention]): Unit =
       spark.createDataset(rows).repartition(1)
         .write.mode("append").json(srcDir.toString)
     def runOnce(): Unit = {
       val src = spark.readStream
-        .schema(implicitly[org.apache.spark.sql.Encoder[CanonMention]].schema)
-        .json(srcDir.toString).as[CanonMention]
-      val q = StreamingTriples.assemble(src)
+        .schema(implicitly[org.apache.spark.sql.Encoder[TimedCanonMention]].schema)
+        .json(srcDir.toString).as[TimedCanonMention]
+      val q = StreamingTriples.assembleWithEvictionEncoded(src, dict)
         .writeStream.format("parquet").option("path", outDir.toString)
         .option("checkpointLocation", chk.toString)
         .outputMode("append").start()
       try q.processAllAvailable() finally q.stop()
     }
-    writeBatch(first); runOnce()  // run 1: first half, then STOP
-    writeBatch(second); runOnce() // run 2: restart — state from checkpoint
-    runOnce()                     // run 3: restart with NO new data
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getString(0), r.getString(1), r.getString(2), r.getString(3), r.getInt(4))
-    // reading via the sink's _spark_metadata commit log: only files whose
-    // batch COMMITTED count — the exactly-once read surface
-    val streamed = spark.read.parquet(outDir.toString)
-      .select("subj", "pred", "obj", "conv_id", "turn_idx")
-      .collect().map(key).sorted.toSeq
-    val batch = graft.stages.Triples.run(spark.createDataset(all)).toDF()
-      .select("subj", "pred", "obj", "conv_id", "turn_idx")
-      .collect().map(key).sorted.toSeq
-    assert(batch.exists(t => t._2 == "follows_up" && t._5 == 2),
-      "fixture must have follows_up pairs crossing the restart cut")
-    assert(streamed == batch,
-      s"restarted stream diverged from batch:\n  stream=$streamed\n  batch=$batch")
-    graft.io.SnapshotIO.deleteRecursively(base)
+    try {
+      writeBatch(first); runOnce()  // run 1: first half, then STOP
+      writeBatch(second); runOnce() // run 2: restart — state from checkpoint
+      runOnce()                     // run 3: restart with NO new data
+      // reading via the sink's _spark_metadata commit log: only files whose
+      // batch COMMITTED count — the exactly-once read surface
+      val streamed = TripleModel.sorted(spark.read.parquet(outDir.toString)
+        .select("subj", "pred", "obj", "conv_id", "turn_idx").as[Triple].collect())
+      val expect = model(all)
+      assert(expect.exists(t => t.pred == "follows_up" && t.turn_idx == 2),
+        "fixture must have follows_up pairs crossing the restart cut")
+      assert(streamed == expect,
+        s"restarted stream diverged from the model:\n  stream=$streamed\n  model=$expect")
+    } finally graft.io.SnapshotIO.deleteRecursively(base)
   }
 
   test("turns behind the advanced watermark are dropped in the handler; the query finishes") {
-    import java.sql.Timestamp
-    import graft.streaming.StreamingTriples.TimedCanonMention
-    implicit val sqlCtx = spark.sqlContext
-    def tcm(conv: String, turn: Int, start: Int, label: String, canon: String,
-            minute: Int) =
-      TimedCanonMention(conv, turn, start, start + 3, label, "xxx", canon, canon,
-        Timestamp.valueOf(f"2024-01-01 ${10 + minute / 60}%02d:${minute % 60}%02d:00"))
     // on time at 12:00; the watermark then advances to 11:50, but Spark
     // filters the next micro-batch against the PREVIOUS watermark, so the
     // 10:0x turns of C reach the handler — they must emit nothing and arm
@@ -335,45 +291,21 @@ class StreamingTriplesSpec extends SparkSpecBase {
     val late = Seq(tcm("C", 0, 0, "PER", "PER02", 0), tcm("C", 0, 10, "ORG", "ORG00a", 0),
       tcm("C", 1, 0, "PER", "PER03", 1), tcm("A", 2, 0, "PER", "PER04", 2))
     val onTime2 = Seq(tcm("A", 2, 0, "PER", "PER05", 122), tcm("A", 2, 10, "LOC", "LOC01", 122))
-    def run(encoded: Boolean, name: String) = {
-      val src = MemoryStream[TimedCanonMention]
-      val ds =
-        if (encoded) StreamingTriples.assembleWithEvictionEncoded(src.toDS(),
-          graft.stages.Pipeline.transcriptsDict, watermark = "10 minutes", idleGap = "5 minutes")
-        else StreamingTriples.assembleWithEviction(src.toDS(),
-          watermark = "10 minutes", idleGap = "5 minutes")
-      // no no-data micro-batches, as when every next batch has data (a file
-      // replay): one between the data batches would run the late-row filter
-      // at the advanced watermark and hide the late turns from the handler
-      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      val q = try ds.writeStream.format("memory").queryName(name).outputMode("append").start()
-        finally spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
-      try Seq(onTime1, late, onTime2).foreach { b => src.addData(b); q.processAllAvailable() }
-      finally q.stop()
-      spark.sql(s"SELECT subj, pred, obj, conv_id, turn_idx FROM $name")
-        .collect().map(r => (r.getString(0), r.getString(1), r.getString(2),
-          r.getString(3), r.getInt(4))).sorted.toSeq
-    }
-    val batch = graft.stages.Triples.run((onTime1 ++ onTime2).map(t => CanonMention(
-        t.conv_id, t.turn_idx, t.start, t.end, t.label, t.surface, t.entity_id,
-        t.canonical_id)).toDS()).toDF()
-      .select("subj", "pred", "obj", "conv_id", "turn_idx").collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3), r.getInt(4)))
-      .sorted.toSeq
-    assert(batch.exists(_._2 == "follows_up") && batch.exists(_._2 == "affiliated_with"))
-    assert(run(encoded = false, "late_plain") == batch)
-    assert(run(encoded = true, "late_packed") == batch)
+    val expect = model(onTime1 ++ onTime2)
+    assert(expect.exists(_.pred == "follows_up") && expect.exists(_.pred == "affiliated_with"))
+    // no no-data micro-batches: one between the data batches would run the
+    // late-row filter at the advanced watermark and hide the late turns
+    // from the handler
+    assert(stream("late_packed", Seq(onTime1, late, onTime2), Pipeline.transcriptsDict,
+      watermark = "10 minutes", idleGap = "5 minutes", noDataBatches = false) == expect)
   }
 
   test("packed-state path fails LOUDLY on a negative turn_idx") {
-    import java.sql.Timestamp
-    import graft.streaming.StreamingTriples.TimedCanonMention
     implicit val sqlCtx = spark.sqlContext
     val src = MemoryStream[TimedCanonMention]
     src.addData(TimedCanonMention("A", -1, 0, 3, "PER", "xxx", "PER00", "PER00",
       Timestamp.valueOf("2024-01-01 10:00:00")))
-    val q = StreamingTriples.assembleWithEvictionEncoded(
-        src.toDS(), graft.stages.Pipeline.transcriptsDict)
+    val q = StreamingTriples.assembleWithEvictionEncoded(src.toDS(), Pipeline.transcriptsDict)
       .writeStream.format("memory").queryName("pk_neg").outputMode("append").start()
     val e = intercept[Exception] { try q.processAllAvailable() finally q.stop() }
     def msgs(t: Throwable): Seq[String] =
@@ -385,11 +317,11 @@ class StreamingTriplesSpec extends SparkSpecBase {
 }
 
 /** The packed link frontier's per-conversation step, checked without Spark
-  * against a full-buffer model of `StreamingTriples.assembleWithEviction`.
+  * against a full buffer that keeps every turn inside the horizon and
+  * applies the reference model's rule bodies (`TripleModel`).
   */
 class LinkFrontierSpec extends org.scalatest.funsuite.AnyFunSuite {
   import org.scalacheck.{Gen, Prop, Test}
-  import graft.stages.{TripleDict, Triples}
   import graft.streaming.StreamingTriples.LinkFrontier
   import graft.streaming.StreamingTriples.LinkFrontier.Arrival
 
@@ -405,23 +337,54 @@ class LinkFrontierSpec extends org.scalatest.funsuite.AnyFunSuite {
   private def sorted(ts: Iterable[Triple]) =
     ts.toSeq.sortBy(t => (t.turn_idx, t.pred, t.subj, t.obj))
 
-  /** The full buffer of `assembleWithEviction` on the string rule bodies:
-    * every turn inside the horizon stays, keyed by turn index.
+  /** Full-buffer reference state: every turn inside the horizon, keyed by
+    * turn index, as (event time, PER ids); and the turns t whose pair
+    * (t−1, t) has been joined, i.e. whose later-arriving side found the
+    * other one buffered.
     */
-  private def referenceStep(buf0: Map[Int, (Long, Seq[String])], arrivals: Seq[Arrival],
-                            wm: Long): (Map[Int, (Long, Seq[String])], Seq[Triple]) = {
-    var buf = if (wm <= 0) buf0 else buf0.filter(_._2._1 + IdleGapMs > wm)
+  private final case class RefState(buf: Map[Int, (Long, Seq[String])], joined: Set[Int]) {
+    /** The turns the link frontier must hold: inside the horizon and with
+      * a neighbour pair still unjoined.
+      */
+    def frontier(wm: Long): Map[Int, (Long, Seq[String])] = buf.filter { case (t, (ts, _)) =>
+      ts + IdleGapMs > wm && !((t == 0 || joined(t)) && joined(t + 1))
+    }
+  }
+
+  /** The full buffer on the model's string rule bodies. */
+  private def referenceStep(st: RefState, arrivals: Seq[Arrival],
+                            wm: Long): (RefState, Seq[Triple]) = {
+    var buf = if (wm <= 0) st.buf else st.buf.filter(_._2._1 + IdleGapMs > wm)
+    var joined = st.joined
     val out = Seq.newBuilder[Triple]
     arrivals.foreach { a =>
       val ms = a.ms.toSeq.map(v => ((v >>> 40).toInt,
         dict.labels(((v >>> 32) & 0xff).toInt), dict.entities((v & 0xffffffffL).toInt)))
       val pers = ms.filter(_._2 == "PER").map(_._3)
-      out ++= Triples.withinTurnTriples("c", a.turn, ms).distinct
-      buf.get(a.turn - 1).foreach(p => out ++= Triples.followUps("c", a.turn, pers, p._2).distinct)
-      buf.get(a.turn + 1).foreach(n => out ++= Triples.followUps("c", a.turn + 1, n._2, pers).distinct)
+      out ++= TripleModel.withinTurnTriples("c", a.turn, ms).distinct
+      buf.get(a.turn - 1).foreach { p =>
+        out ++= TripleModel.followUps("c", a.turn, pers, p._2).distinct
+        joined += a.turn
+      }
+      buf.get(a.turn + 1).foreach { n =>
+        out ++= TripleModel.followUps("c", a.turn + 1, n._2, pers).distinct
+        joined += a.turn + 1
+      }
       buf += a.turn -> ((a.ts, pers))
     }
-    (buf, out.result())
+    (RefState(buf, joined), out.result())
+  }
+
+  /** The frontier's turns as (event time, PER ids) inside the horizon. */
+  private def held(fr: LinkFrontier, wm: Long): Map[Int, (Long, Seq[String])] = {
+    var off = 0
+    (0 until fr.turns).map { i =>
+      val h = fr.meta(2 * i)
+      val n = (h & 0x3fffffffL).toInt
+      val pers = fr.pers.slice(off, off + n).toSeq.map(dict.entities(_))
+      off += n
+      (h >>> 32).toInt -> ((fr.meta(2 * i + 1), pers))
+    }.toMap.filter(_._2._1 + IdleGapMs > wm)
   }
 
   /** One micro-batch for this conversation: the turns it delivers (possibly
@@ -466,15 +429,19 @@ class LinkFrontierSpec extends org.scalatest.funsuite.AnyFunSuite {
   /** Runs both models over the batches the way Spark drives a key: late
     * turns are dropped first, a watermark-only batch fires the timer once
     * the watermark has passed it, and a batch with data calls the step.
+    * Returns both outputs and whether, after every batch, the frontier held
+    * exactly the reference's unjoined turns.
     */
-  private def replay(batches: Seq[Batch]): (Seq[Triple], Seq[Triple]) = {
-    var ref = Map.empty[Int, (Long, Seq[String])]
+  private def replay(batches: Seq[Batch]): (Seq[Triple], Seq[Triple], Boolean) = {
+    var ref = RefState(Map.empty, Set.empty)
     var fr = LinkFrontier.Empty
+    var frontierOk = true
     val refOut, frOut = Seq.newBuilder[Triple]
     batches.foreach { b =>
       val live = b.turns.filter(_.ts > b.wm)
       if (live.isEmpty) {
-        if (ref.nonEmpty && b.wm > ref.valuesIterator.map(_._1).max + IdleGapMs) ref = Map.empty
+        if (ref.buf.nonEmpty && b.wm > ref.buf.valuesIterator.map(_._1).max + IdleGapMs)
+          ref = ref.copy(buf = Map.empty)
         if (fr.turns > 0 && b.wm > fr.maxTs + IdleGapMs) fr = LinkFrontier.Empty
       } else {
         val (r, ro) = referenceStep(ref, live, b.wm)
@@ -482,16 +449,17 @@ class LinkFrontierSpec extends org.scalatest.funsuite.AnyFunSuite {
         val (f, fo) = LinkFrontier.step(dict, IdleGapMs, "c", fr, live, b.wm)
         fr = f; frOut ++= fo
       }
+      frontierOk &&= held(fr, b.wm) == ref.frontier(b.wm)
     }
-    (sorted(refOut.result()), sorted(frOut.result()))
+    (sorted(refOut.result()), sorted(frOut.result()), frontierOk)
   }
 
   test("property: frontier step ≡ full-buffer reference over arrival orders, gaps and eviction") {
     var linked = 0
     val prop = Prop.forAll(scenario) { batches =>
-      val (ref, fr) = replay(batches)
+      val (ref, fr, frontierOk) = replay(batches)
       if (ref.exists(_.pred == "follows_up")) linked += 1
-      ref == fr
+      ref == fr && frontierOk
     }
     val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(2000)
       .withInitialSeed(org.scalacheck.rng.Seed(20241019L)), prop)
